@@ -1,7 +1,8 @@
 package graft
 
 /** Local-filesystem helpers shared by the state/stage committers
-  * (IngestDeduper segments, Dag stage tables). One definition: deletion
+  * (IngestDeduper segments, Dag stage tables) and the footer row count
+  * (Dag stage reports, q83's tile count). One definition: deletion
   * ORDER is load-bearing (see [[uncommitThenDelete]]) and must not fork
   * across call sites.
   */
@@ -11,29 +12,28 @@ private[graft] object Fs {
     val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree); f.delete(): Unit
   }
 
-  /** Total row count of a local parquet table dir read from the file
-    * FOOTERS on the driver — no Spark job, no task scheduling (r20,
-    * guide §1.2: q83's adaptive tile count needs only the feature row
-    * count, and the count() job was one of ~6 sequential scheduler
-    * round trips in a latency-bound query). None on any failure so the
-    * caller can fall back to the counting job; a wrong-but-successful
-    * read is not a risk (footer record counts are the same numbers a
-    * parquet count() aggregates).
+  /** Exact row count of a local parquet table dir from the file FOOTERS
+    * on the driver — metadata only, no Spark job. Recursive: hive-
+    * partitioned layouts nest `col=value/` dirs, and a flat-only walk
+    * would silently undercount them. `conf` is the caller's (the
+    * session's Hadoop conf): a fresh `Configuration` per call re-parses
+    * the default XML resources. Throws on an unreadable footer; callers
+    * that can fall back to a counting job catch it.
     */
-  def parquetRowCount(path: String): Option[Long] =
-    try {
-      val parts = Option(new java.io.File(path).listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (parts.isEmpty) None
-      else Some(parts.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum)
-    } catch { case scala.util.control.NonFatal(_) => None }
+  def parquetRowCount(dir: java.io.File, conf: org.apache.hadoop.conf.Configuration): Long = {
+    def walk(d: java.io.File): Long =
+      Option(d.listFiles()).getOrElse(Array.empty).iterator.map { f =>
+        if (f.isDirectory) walk(f)
+        else if (f.getName.endsWith(".parquet") && !f.getName.startsWith("_")
+            && !f.getName.startsWith(".")) {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+          try r.getRecordCount finally r.close()
+        } else 0L
+      }.sum
+    walk(dir)
+  }
 
   /** Delete a COMMITTED table dir safely: drop its commit markers FIRST,
     * then the data. `rmTree` alone deletes children in arbitrary

@@ -11,7 +11,8 @@ package graft
   * surface scans — the upstream job Bench/Verify otherwise run inline
   * as setup (workDir is ignored: input tables live under their own
   * fingerprinted roots). `--no-refresh` is the incremental tick: only
-  * missing stage tables are rebuilt.
+  * missing stage tables are rebuilt. A DAG run ends with a `total` line:
+  * the materialization's wall time and the Spark jobs it launched.
   */
 object RunDag {
   def main(args: Array[String]): Unit = {
@@ -52,18 +53,30 @@ object RunDag {
         val p = t.ensure(spark, sfDir)
         println(f"${t.tableName}%-16s ${(System.nanoTime() - t0) / 1000000}%6d ms  $p")
       }
+      spark.stop()
     } else {
       val stages = dagName match {
         case "curation" => graft.queries.CurationDag.stages(sfDir)
         case _ => graft.pipeline.Dag.streetLevelDag(sfDir)
       }
+      // Jobs the materialization launches. Listener events arrive
+      // asynchronously; spark.stop() delivers every queued one, so the
+      // count is read after it.
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      })
+      val t0 = System.nanoTime()
       val runs = graft.pipeline.Dag.materialize(spark, stages, workDir, refresh)
+      val totalMs = (System.nanoTime() - t0) / 1000000
       if (dagName == "curation")
         graft.queries.CurationDag.sharedCacheKeys
           .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
       runs.foreach(r => println(
         f"${r.name}%-16s rows=${r.rows}%8d  ${r.millis}%6d ms${if (r.skipped) "  (reused)" else ""}"))
+      spark.stop()
+      println(f"${"total"}%-16s jobs=${jobs.get}%8d  $totalMs%6d ms")
     }
-    spark.stop()
   }
 }

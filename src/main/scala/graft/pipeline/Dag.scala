@@ -91,6 +91,14 @@ object Dag {
 
   final case class StageRun(name: String, rows: Long, millis: Long, skipped: Boolean)
 
+  /** A settled stage as its dependents see it: the run report, the
+    * committed dir's stamp (for their chain checks), and the schema this
+    * call built it with — `None` when the table was reused, raced in by
+    * a sibling, partitioned or incremental, so dependents infer it.
+    */
+  private final case class Settled(
+      run: StageRun, stamp: String, builtSchema: Option[org.apache.spark.sql.types.StructType])
+
   /** Topological order with deterministic tie-breaking (declaration
     * order); throws on cycles and unknown deps.
     */
@@ -196,29 +204,6 @@ object Dag {
     }
   }
 
-  /** Exact row count from parquet file footers — metadata only, NO Spark
-    * job. `materialize` reports every stage's rows through this, so a
-    * `refresh = false` tick over reused stages runs zero jobs: at 100 TB
-    * a daily tick must not pay a full scan of every table just to report
-    * row counts (parquet footers already carry them exactly). Recursive:
-    * hive-partitioned layouts nest `col=value/` dirs.
-    */
-  private[pipeline] def footerRowCount(dir: java.io.File): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    def walk(d: java.io.File): Long =
-      Option(d.listFiles()).getOrElse(Array.empty).iterator.map { f =>
-        if (f.isDirectory) walk(f)
-        else if (f.getName.endsWith(".parquet") && !f.getName.startsWith("_")
-            && !f.getName.startsWith(".")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
-          try r.getRecordCount finally r.close()
-        } else 0L
-      }.sum
-    walk(dir)
-  }
-
   /** Materialize the DAG; returns per-stage run reports in topological
     * order.
     *
@@ -247,6 +232,15 @@ object Dag {
     * mid-delete also reads as uncommitted. Two processes racing the
     * same stage resolve before/at the atomic rename: the loser detects
     * a committed winner and reuses it.
+    *
+    * Schema hand-off: a dependent reads an upstream that THIS call built
+    * and committed whole with the schema the build produced
+    * (`spark.read.schema(built).parquet`, as the quality gates read the
+    * candidate) — equal to what inference would return, without the
+    * schema-merge Spark job inference runs per read. Reused, raced-in,
+    * partitioned and incremental upstreams are read with inference.
+    * Every stage's row count comes from its parquet footers, read with
+    * the session's Hadoop conf.
     */
   def materialize(
       spark: SparkSession,
@@ -262,15 +256,14 @@ object Dag {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     try {
       val done = scala.collection.mutable.Map
-        .empty[String, scala.concurrent.Future[(StageRun, String)]]
+        .empty[String, scala.concurrent.Future[Settled]]
       // Registration in topo order: deps are always registered first,
       // and root stages enqueue in declaration order (deterministic
       // startup under a small pool).
       ordered.foreach { s =>
         val deps = s.deps.map(done)
         done(s.name) = scala.concurrent.Future.sequence(deps).map { ups =>
-          runStage(spark, s, workDir, refresh,
-            s.deps.zip(ups.map(_._2)).toMap)
+          runStage(spark, s, workDir, refresh, s.deps.zip(ups).toMap)
         }
       }
       val settled = ordered.map(s => scala.concurrent.Await
@@ -291,7 +284,7 @@ object Dag {
           })
         case _ => ()
       }
-      settled.map(_.get._1)
+      settled.map(_.get.run)
     } finally pool.shutdown()
   }
 
@@ -467,7 +460,7 @@ object Dag {
       s: Stage,
       workDir: String,
       refresh: Boolean,
-      upstreamNow: Map[String, String]): (StageRun, String) = {
+      upstreamNow: Map[String, String]): Settled = {
     import org.apache.spark.sql.functions.{col => sqlCol}
     val c = s.incrementalOn.get
     val fs = new java.io.File(workDir)
@@ -636,22 +629,24 @@ object Dag {
     if (!skipped) buildAndCommit(fullBuild)
     pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
       val ownStamp = readStamp(target).map(_._1).getOrElse("legacy")
-      val rows = footerRowCount(target)
-      (StageRun(s.name, rows, (System.nanoTime() - t0) / 1000000, skipped), ownStamp)
+      val rows = graft.Fs.parquetRowCount(target, spark.sparkContext.hadoopConfiguration)
+      Settled(StageRun(s.name, rows, (System.nanoTime() - t0) / 1000000, skipped), ownStamp, None)
     }
   }
 
   /** One stage's materialize-or-reuse (thread-confined: all cross-stage
-    * coordination flows through the upstream stamp map the scheduler
-    * passes in). Returns the run report plus this stage's CURRENT commit
-    * stamp for downstream chain checks.
+    * coordination flows through the settled upstreams the scheduler
+    * passes in). Returns the run report, this stage's CURRENT commit
+    * stamp for downstream chain checks, and the schema it was built with
+    * when this call committed it whole.
     */
   private def runStage(
       spark: SparkSession,
       s: Stage,
       workDir: String,
       refresh: Boolean,
-      upstreamNow: Map[String, String]): (StageRun, String) = {
+      ups: Map[String, Settled]): Settled = {
+    val upstreamNow = ups.map { case (d, u) => d -> u.stamp }
     if (s.incrementalOn.isDefined)
       return runIncremental(spark, s, workDir, refresh, upstreamNow)
     val fs = new java.io.File(workDir)
@@ -689,15 +684,23 @@ object Dag {
     // Bounded pid digits: an unparseable name is left alone rather
     // than crashing the tick on Long overflow.
     sweepStaleTmps(fs, s.name)
+    var committedSchema = Option.empty[org.apache.spark.sql.types.StructType]
     if (!skipped) {
       val tmp = s"$workDir/${s.name}.parquet.tmp-${ProcessHandle.current.pid}-${System.nanoTime()}"
       val tmpAbs = new java.io.File(tmp).getAbsolutePath
       liveTmps.add(tmpAbs)
       try {
-      val upstream = s.deps.map(d =>
-        d -> spark.read.parquet(s"$workDir/$d.parquet")).toMap ++
+      // An upstream this call built reads with its built schema (what
+      // inference would return: parquet writes every column nullable,
+      // and so does a user-schema read): inference costs a schema-merge
+      // Spark job per read on the critical path.
+      val upstream = s.deps.map { d =>
+        val p = s"$workDir/$d.parquet"
+        d -> ups(d).builtSchema.fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+      }.toMap ++
         s.externalInputs.map { case (n, p) => n -> spark.read.parquet(p) }
       val built = s.build(spark, upstream)
+      val schema = built.schema
       built.write.mode("overwrite")
         .partitionBy(s.partitionBy: _*).parquet(tmp)
       // A zero-partition result writes NO part files (just _SUCCESS);
@@ -715,7 +718,7 @@ object Dag {
       }
       if (!hasPart)
         spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], built.schema)
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
           .repartition(1).write.mode("append").parquet(tmp)
       // Quality gate, BEFORE the stamp and commit marker exist: a
       // failing candidate is deleted and the stage throws — the target
@@ -724,7 +727,7 @@ object Dag {
       // reads the tmp parquet back (not the live plan) so it judges
       // the exact bytes that would commit. collect() is driver-tiny:
       // one report row per declared check.
-      applyGates(spark, s, workDir, tmp, built.schema)
+      applyGates(spark, s, workDir, tmp, schema)
       val own = s"${ProcessHandle.current.pid}-${System.nanoTime()}"
       java.nio.file.Files.write(java.nio.file.Paths.get(tmp, StampFile),
         (own +: expectedChain.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" })
@@ -752,10 +755,14 @@ object Dag {
         if (racedWinner) graft.Fs.rmTree(new java.io.File(tmp))
         else {
           graft.Fs.uncommitThenDelete(new java.io.File(path), Seq(CommitMarker, "_SUCCESS"))
-          try java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(path),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case e: java.nio.file.FileSystemException =>
+          try {
+            java.nio.file.Files.move(
+              java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(path),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            // A partitioned table reads back with its partition columns
+            // moved last and typed by inference: dependents infer it.
+            if (s.partitionBy.isEmpty) committedSchema = Some(schema)
+          } catch { case e: java.nio.file.FileSystemException =>
             // Target reappeared inside the unavoidable delete→rename
             // window (a sibling PROCESS — same-JVM racers hold the
             // lock). If the winner's table is committed, reuse it and
@@ -771,13 +778,15 @@ object Dag {
     // committed dir records (ours after a rebuild, the winner's after
     // a lost race, the legacy-root sentinel otherwise). Under the path
     // lock: a same-JVM racer between its delete and rename must not be
-    // mid-swap during this read — footerRowCount over a half-deleted
+    // mid-swap during this read — a footer count over a half-deleted
     // dir would throw or report 0, and a torn stamp would poison the
     // downstream chain.
     pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
       val ownStamp = readStamp(new java.io.File(path)).map(_._1).getOrElse("legacy")
-      val rows = footerRowCount(new java.io.File(path))
-      (StageRun(s.name, rows, (System.nanoTime() - t0) / 1000000, skipped), ownStamp)
+      val rows = graft.Fs.parquetRowCount(new java.io.File(path),
+        spark.sparkContext.hadoopConfiguration)
+      Settled(StageRun(s.name, rows, (System.nanoTime() - t0) / 1000000, skipped),
+        ownStamp, committedSchema)
     }
   }
 

@@ -31,7 +31,7 @@ object Synthetic {
     */
   def detections(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
-    val fileId = floor(col("l_orderkey") / 38).cast("long")
+    val fileId = col("pano")
     val giant = col("l_quantity") > 45 // ~10% of rows: >95%-span boxes
     // Lineitems of one order are jittered copies of an order-keyed base
     // box, so each order forms a near-duplicate cluster (1-7 boxes) —
@@ -44,11 +44,6 @@ object Synthetic {
     val x2 = when(giant, x1 + 7700.0).otherwise(pmod(x2n, lit(W)))
     val y1 = pmod(col("l_orderkey") * 17.0, lit(3400.0)) + jy
     val y2 = y1 + 120.0 + pmod(col("l_orderkey") * 37.0, lit(250.0))
-    // No explicit repartition here: det_idx's window shuffles by
-    // panorama immediately, so the derivation's CPU work (and everything
-    // downstream) already runs at the window's parallelism — a round-
-    // robin exchange ahead of it would be a wasted full shuffle of
-    // lineitem (and at production scale would SHRINK a many-split scan).
     // det_idx: row_number over a TOTAL order within the panorama. The
     // testdata has duplicate (l_orderkey, l_linenumber) pairs, so a
     // key-arithmetic id would collide — and with duplicate ids the
@@ -56,25 +51,36 @@ object Synthetic {
     // ties after this order are fully-identical rows (identical derived
     // boxes), which are interchangeable. The window partitions by
     // panorama, so the sort is parallel, never global.
+    val keys = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
+      "l_extendedprice", "l_quantity", "l_discount").map(col)
     val detIdx = row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy(fileId)
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"), col("l_extendedprice"), col("l_quantity"),
-          col("l_discount")))
-    li.select(
-      // format_string, NOT lpad: both Spark's and DuckDB's lpad TRUNCATE
-      // a string longer than the pad width, so beyond 999,999 panoramas
-      // ten fileIds collapse into one file_name — the r11 sf10 rehearsal
-      // caught this as 1789-box "panoramas" (10 merged) feeding the
-      // per-panorama kernels 20× the pair work and wrong groups. %06d
-      // pads but never truncates; names are identical below 10⁶.
-      format_string("pano_%06d.jpg", fileId).as("file_name"),
-      detIdx.cast("long").as("det_idx"),
-      x1.as("x1"), y1.as("y1"), x2.as("x2"), y2.as("y2"),
-      round(pmod(col("l_extendedprice"), lit(997.0)) / 997.0, 6).as("score"),
-      element_at(
-        array(lit(1), lit(2), lit(3), lit(4), lit(7), lit(8), lit(9), lit(10)),
-        (pmod(col("l_partkey"), lit(8)) + 1).cast("int")).as("class"))
+      org.apache.spark.sql.expressions.Window.partitionBy(fileId).orderBy(keys: _*))
+    // Rank first, derive above the window. The analyzer evaluates every
+    // non-window expression of a window's select list BELOW its exchange,
+    // and the scan under it is one task per input split (one, for a
+    // single-row-group file) — so the derivation ran single-threaded and
+    // its 8 derived columns (file-name strings included) rode the shuffle
+    // beside the 7 keys. Selected above the window, it runs at the
+    // window's post-shuffle parallelism and only the panorama id and the
+    // keys are shuffled. No round-robin exchange ahead of the window:
+    // that is a second full shuffle of lineitem (and at production scale
+    // would SHRINK a many-split scan).
+    li.select(floor(col("l_orderkey") / 38).cast("long").as("pano") +: keys: _*)
+      .select(col("*"), detIdx.as("det_idx"))
+      .select(
+        // format_string, NOT lpad: both Spark's and DuckDB's lpad TRUNCATE
+        // a string longer than the pad width, so beyond 999,999 panoramas
+        // ten fileIds collapse into one file_name — the r11 sf10 rehearsal
+        // caught this as 1789-box "panoramas" (10 merged) feeding the
+        // per-panorama kernels 20× the pair work and wrong groups. %06d
+        // pads but never truncates; names are identical below 10⁶.
+        format_string("pano_%06d.jpg", fileId).as("file_name"),
+        col("det_idx").cast("long").as("det_idx"),
+        x1.as("x1"), y1.as("y1"), x2.as("x2"), y2.as("y2"),
+        round(pmod(col("l_extendedprice"), lit(997.0)) / 997.0, 6).as("score"),
+        element_at(
+          array(lit(1), lit(2), lit(3), lit(4), lit(7), lit(8), lit(9), lit(10)),
+          (pmod(col("l_partkey"), lit(8)) + 1).cast("int")).as("class"))
   }
 
   /** [[detections]] persisted once per (session, sfDir) — the derivation

@@ -542,7 +542,8 @@ object Domain {
       val (features, nRows) =
         graft.pipeline.WallFeaturesTable.materializedPath(dir) match {
           case Some(p) =>
-            (Synthetic.wallFeatures(spark, dir), graft.Fs.parquetRowCount(p))
+            (Synthetic.wallFeatures(spark, dir), scala.util.Try(graft.Fs.parquetRowCount(
+              new java.io.File(p), spark.sparkContext.hadoopConfiguration)).toOption)
           case None => (graft.pipeline.SessionCache.getOrPersist(
             spark, s"wallFeatLive:$dir")(Synthetic.wallFeatures(spark, dir)), None)
         }

@@ -161,6 +161,76 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.Fs.rmTree(new java.io.File(dir))
   }
 
+  test("a same-call upstream reads with its built schema: one job fewer per read, inferred schema") {
+    import org.apache.spark.sql.types.StructType
+    import scala.jdk.CollectionConverters._
+    // Schema each build sees of each upstream, keyed "stage<-dep".
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    def saw(stage: String, up: Map[String, org.apache.spark.sql.DataFrame]): Unit =
+      up.foreach { case (d, df) => seen.put(s"$stage<-$d", df.schema) }
+    val stages = Seq(
+      // Non-nullable, nested, decimal and map columns: the types and the
+      // nullability parquet inference could disagree on.
+      Dag.Stage("a", Nil, (sp, _) => sp.range(6).selectExpr(
+        "id", "CAST(id AS INT) AS i", "concat('s', id) AS s", "array(id, id + 1) AS arr",
+        "named_struct('k', id, 'v', CAST(id AS DOUBLE)) AS st", "map(id, 's') AS m",
+        "CAST(id AS DECIMAL(12, 3)) AS dec", "id % 2 = 0 AS even")),
+      Dag.Stage("b", Seq("a"), (_, up) => { saw("b", up); up("a").selectExpr("*", "id * 2 AS twice") }),
+      // The CurationDag `split` shape: hive-partitioned by a leading
+      // column, which reads back last and keeps inference.
+      Dag.Stage("split", Seq("b"), (_, up) => {
+        saw("split", up)
+        up("b").selectExpr("CASE WHEN id < 4 THEN 'train' ELSE 'eval' END AS split", "id", "s")
+      }, partitionBy = Seq("split")),
+      Dag.Stage("c", Seq("b", "split"), (_, up) => {
+        saw("c", up)
+        up("b").join(up("split").select("id", "split"), "id")
+      }))
+    def jobsOf(body: => Unit): Int = {
+      val started = new java.util.concurrent.atomic.AtomicInteger(0)
+      val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.incrementAndGet(): Unit
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          ended.incrementAndGet(): Unit
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        // Every job's end event is posted before its action returns;
+        // settle until the asynchronous bus has delivered them all.
+        var last = -1
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while ((started.get != ended.get || started.get != last) && System.nanoTime() < deadline) {
+          last = started.get; Thread.sleep(500)
+        }
+        started.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // Hand-off: every stage built in one call.
+    val handOff = java.nio.file.Files.createTempDirectory("dag-handoff").toString
+    val handOffJobs = jobsOf(Dag.materialize(spark, stages, handOff))
+    val handOffSeen = seen.asScala.toMap
+    seen.clear()
+    // Inference: the same builds, each upstream reused from an earlier call.
+    val inferred = java.nio.file.Files.createTempDirectory("dag-infer").toString
+    val inferJobs = jobsOf((1 to stages.size).foreach(n =>
+      Dag.materialize(spark, stages.take(n), inferred, refresh = false)))
+    val inferSeen = seen.asScala.toMap
+    // b<-a, split<-b, c<-b; c<-split is partitioned and infers in both.
+    assert(inferJobs - handOffJobs == 3, s"hand-off $handOffJobs jobs, inference $inferJobs")
+    assert(handOffSeen.keySet == Set("b<-a", "split<-b", "c<-b", "c<-split"))
+    assert(handOffSeen == inferSeen)
+    handOffSeen.foreach { case (k, schema) =>
+      val dep = k.split("<-")(1)
+      assert(schema == spark.read.parquet(s"$handOff/$dep.parquet").schema, k)
+    }
+    assert(handOffSeen("b<-a").forall(_.nullable))
+    assert(handOffSeen("c<-split").fieldNames.toSeq == Seq("id", "s", "split"))
+    Seq(handOff, inferred).foreach(d => graft.Fs.rmTree(new java.io.File(d)))
+  }
+
   test("a failing stage fails the run; its dependents never build") {
     val dir = java.nio.file.Files.createTempDirectory("dag-fail").toString
     val downstreamRan = new java.util.concurrent.atomic.AtomicBoolean(false)

@@ -13,6 +13,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
+  // Synthetic.detections at sf0.001: row count and the sum of per-row
+  // xxhash64 over all 8 columns, recorded before the rank-first rewrite.
+  private val DetectionsRows = 6000L
+  private val DetectionsChecksum = "53628690062156843281"
 
   override def beforeAll(): Unit = {
     spark = graft.Sessions.builder("2").getOrCreate()
@@ -340,6 +344,44 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .join(org.apache.spark.sql.functions.broadcast(spark.range(10).toDF("id")), "id")
     assert(forcedBroadcastEquiJoins(control).nonEmpty,
       "traversal failed to flag a known broadcast hint — guard is vacuous")
+  }
+
+  test("detections: the det_idx exchange carries the panorama id and keys, no derived column") {
+    // The scan under the window is one task per input split; every
+    // column computed below the exchange is computed by that task and
+    // shuffled. Only the 8 numeric ranking inputs may cross it. Small
+    // splits make the sf0.001 scan multi-partition, as the sf0.1 one is
+    // (a one-partition scan already satisfies the window's distribution
+    // and plans no exchange to inspect).
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    // AQE's initial plan (EnsureRequirements applied, nothing run yet).
+    val plan = try graft.pipeline.Synthetic.detections(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.size == 1, s"one det_idx window expected:\n$plan")
+    val exchanges = windows.head.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"one exchange under the window expected:\n$plan")
+    val shuffled = exchanges.head.child.output
+    assert(shuffled.size <= 8 &&
+      !shuffled.exists(_.dataType == org.apache.spark.sql.types.StringType),
+      s"window exchange carries ${shuffled.map(a => s"${a.name}:${a.dataType.simpleString}").mkString(", ")}")
+  }
+
+  test("detections: values pinned by an order-independent checksum of all 8 columns") {
+    import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+    val d = graft.pipeline.Synthetic.detections(spark, dir)
+    assert(d.columns.toSeq ==
+      Seq("file_name", "det_idx", "x1", "y1", "x2", "y2", "score", "class"))
+    val r = d.agg(count(lit(1)),
+      sum(xxhash64(d.columns.toSeq.map(col): _*).cast("decimal(38,0)"))).head()
+    assert((r.getLong(0), r.getDecimal(1).toString) == ((DetectionsRows, DetectionsChecksum)))
   }
 
   test("binaryFile projection without content prunes the bytes") {

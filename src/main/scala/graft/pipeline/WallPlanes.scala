@@ -174,15 +174,19 @@ object WallPlanes {
         System.err.println(s"[wall_clusters] $n features > $maxGlobalRows: " +
           "global DBSCAN kernel would be O(n²) in one task — labeling via the " +
           "tiled kernel (WallPlanesTilingSpec-proven label-identical)")
-        val clusters = tiledClusters(
+        val (clusters, finish) = tiledClusters(
           featC.select(col("cell_id"), col("f0"), col("f1"), col("f2")),
           eps, minSamples, tiles = autoTilesFor(n))
+        // The eager checkpoint is the labels' one materializing action.
         try {
           featC.select(col("cell_id"), col("nx"), col("ny"), col("nz"),
               col("cx"), col("cy"), col("cz"))
             .join(clusters, "cell_id")
             .localCheckpoint(true)
-        } finally clusters.unpersist(blocking = false)
+        } finally {
+          finish()
+          clusters.unpersist(blocking = false)
+        }
       }
     } finally featC.unpersist(blocking = false)
   }
@@ -224,15 +228,13 @@ object WallPlanes {
       // try/finally: a failed action (executor loss, kernel OOM) must
       // not leave this branch's caches persisted for the session life —
       // the no-storage-outlives-the-call contract covers failure too
-      // (tiledClustersLazy's own catch releases its intermediate on a
-      // throw inside it; `finish` covers the paths after it returns).
+      // (tiledClusters' own catch releases its intermediate on a throw
+      // inside it; `finish` covers the paths after it returns).
       try {
-        // r20 (guide §2.6 — the chain is scheduler round trips): the
-        // lazy variant skips the kernel's dedicated label-materializing
-        // count() job; the collect below is the action that fills the
-        // label cache, and `finish` releases the kernel intermediate
-        // only after it (unpersist-first would recompute — q55 lesson).
-        val cf = tiledClustersLazy(
+        // The collect below is the action that fills the label cache —
+        // no dedicated label-count job — and `finish` releases the
+        // kernel intermediate only after it.
+        val cf = tiledClusters(
           scaledDf.select(col("cell_id"), col("f0"), col("f1"), col("f2")),
           eps, minSamples, tiles)
         clusters = cf._1; finish = cf._2
@@ -312,32 +314,15 @@ object WallPlanes {
   }
 
   /** @param points (cell_id, f0, f1, f2)
-    * @return (cell_id, cluster) with cluster = -1 for noise. The returned
-    *         relation is PERSISTED and MATERIALIZED (every intermediate
-    *         cache this call created has already been released); the
-    *         caller owns the final `unpersist()`.
+    * @return (labels, finish). `labels` is (cell_id, cluster), cluster =
+    *         -1 for noise, PERSISTED but not yet materialized; `finish`
+    *         releases the kernel's intermediate cache. The caller runs
+    *         one full action over the labels, then calls `finish()` —
+    *         releasing the intermediate first would make the next action
+    *         recompute the whole two-phase kernel chain — and owns the
+    *         labels' final `unpersist()`.
     */
-  def tiledClusters(points: DataFrame, eps: Double, minSamples: Int, tiles: Int): DataFrame = {
-    // Public contract (the spec surface): labels come back materialized
-    // with every intermediate cache already released. The split below
-    // (r20, guide §2.6 — the chain is scheduler round trips, not
-    // compute) lets wallPlanesScaled ride ITS aggregate action as the
-    // materializing action instead of paying a dedicated count() job.
-    val (out, finish) = tiledClustersLazy(points, eps, minSamples, tiles)
-    try { out.count() }
-    catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-    finally finish()
-    out
-  }
-
-  /** [[tiledClusters]] minus the materializing action: returns the
-    * PERSISTED label relation plus a `finish` that releases the kernel's
-    * intermediate cache. The caller MUST run one full action over the
-    * labels and then call `finish()` — unpersisting the intermediate
-    * first would force the whole two-phase kernel chain to recompute on
-    * the next action (the q55 lesson).
-    */
-  private[pipeline] def tiledClustersLazy(
+  def tiledClusters(
       points: DataFrame, eps: Double, minSamples: Int,
       tiles: Int): (DataFrame, () => Unit) = {
     val spark = points.sparkSession

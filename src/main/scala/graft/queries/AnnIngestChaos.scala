@@ -79,9 +79,9 @@ object AnnIngestChaos {
 
     val appended = store.appendedCount()
     val expected = nBatches * batchSize
-    // Brute-force top-5 over base ∪ segments, same column names, types,
-    // fold, rounding, and tie-breaks as AnnIngestStore.topK — so a
-    // full-probe serve must be row-identical.
+    // Brute-force top-5 over base ∪ segments, same cosine fold and the
+    // same top-k tail as AnnIngestStore.topK — so a full-probe serve
+    // must be row-identical.
     val qIds = Seq(3L, 9L, 21L)
     val base = graft.sources.Tables.embeddings(spark, corpusDir)
       .select(col("vec_id"), col("embedding"),
@@ -95,12 +95,7 @@ object AnnIngestChaos {
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         (graft.functions.VectorFunctions.dot(col("qv"), col("embedding"))
           / (col("qn") * col("nrm"))).as("c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-    val brute = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"),
-        round(col("c"), 6).as("cos"))
+    val brute = Similarity.topKByCos(scored, 5)
     val servedDf = store.topK(queries, 5, Some(Int.MaxValue))
     val diff = servedDf.except(brute).count() + brute.except(servedDf).count()
 

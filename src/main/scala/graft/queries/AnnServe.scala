@@ -297,13 +297,7 @@ final class AnnIngestStore(
       // no-op (the near-dup reader's "duplicates are harmless" rule,
       // realized here at the scoring relation).
       .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"),
-        round(col("c"), 6).as("cos"))
-      .orderBy(col("q_id"), col("rnk"))
+    Similarity.topKByCos(scored, k)
   }
 
   def segmentCount: Int = synchronized(store.segmentCount)

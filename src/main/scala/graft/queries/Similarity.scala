@@ -25,6 +25,21 @@ object Similarity {
   private def cosNN(a: String, b: String) =
     s"(${VS.dotExpr(a + ".v", b + ".v")} / ($a.nrm * $b.nrm))"
 
+  /** The KNN top-k tail every cosine search shares: scored
+    * (q_id, neighbor_id, c) → the k best neighbors per query as
+    * (q_id, neighbor_id, rnk, cos), ranked (c DESC, neighbor_id) —
+    * the oracles' row_number spelling — with cos rounded to 6 places
+    * and rows ordered by (q_id, rnk).
+    */
+  private[queries] def topKByCos(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"),
+        round(col("c"), 6).as("cos"))
+      .orderBy(col("q_id"), col("rnk"))
+  }
+
   /** CORPUS-SCALED IVF anchor set (VERDICT r15 #2, superseding r10 #1's
     * fixed 64): the K corpus vectors with the smallest deterministic
     * hash of vec_id — a min-K hash sample, the poor-man's
@@ -833,11 +848,7 @@ object Similarity {
       val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           (VF.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("c"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 10)
-        .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"), round(col("c"), 6).as("cos"))
-        .orderBy(col("q_id"), col("rnk"))
+      topKByCos(scored, 10)
     }),
 
     // ── IVF-style pruned KNN: K = clamp(64, 65536, 4√n) min-hash-
@@ -887,11 +898,7 @@ object Similarity {
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           (VF.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("c"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"), round(col("c"), 6).as("cos"))
-        .orderBy(col("q_id"), col("rnk"))
+      topKByCos(scored, 5)
     }),
 
     // ── IVF at the scaled operating point, nprobe = ⌈K/64⌉: the
@@ -945,12 +952,7 @@ object Similarity {
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           (VF.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("c"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"),
-          round(col("c"), 6).as("cos"))
-        .orderBy(col("q_id"), col("rnk"))
+      topKByCos(scored, 5)
     }),
 
     // ── TWO-LEVEL IVF: the beyond-the-cap scale path anchorKFor's cap
@@ -975,11 +977,12 @@ object Similarity {
     // O((Kc + ac·K/Kc)·dim).
     // The oracle mirrors all four ranking levels as windows (fine→
     // coarse routing, corpus lvl1/lvl2, query crnk ≤ wc, frnk ≤ p),
-    // so the routing tree AND the probe set are verified, and the two
-    // native kernels keep embeddings out of every exchange exactly
-    // like flat NearestCells. Recall at equal scan budget vs the flat
-    // scaled path is measured at sf1/sf10 by tools/ivf_scale_probe.py
-    // two_level (IVF_TWOLEVEL_r17.json).
+    // so the routing tree AND the probe set are verified. One native
+    // kernel, NearestCellsTwoLevel, serves both sides (assignment:
+    // ac = 6, nf = 1; probe: ac = wc, nf = p) and keeps embeddings out
+    // of every exchange exactly like flat NearestCells. Recall at equal
+    // scan budget vs the flat scaled path is measured at sf1/sf10 by
+    // tools/ivf_scale_probe.py two_level (IVF_TWOLEVEL_r17.json).
     QueryDef(
       "q109_ivf_twolevel",
       Some(s"""
@@ -1055,24 +1058,19 @@ object Similarity {
       val kc = math.min(kcRaw, anchors.size.toLong).toInt
       val p = nprobeFor(kk)
       val wc = ((2L * kcRaw + 4L) / 5L).toInt
-      val cells = e.withColumn("cell",
+      val cells = e.withColumn("cell", element_at(
         org.apache.spark.sql.graft.NearestCellsTwoLevel.column(
-          col("embedding"), col("nrm"), anchors, kc, ac = 6, route = Some(idx.route)))
+          col("embedding"), col("nrm"), anchors, kc, ac = 6, route = Some(idx.route)), 1))
       val qc = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"),
-          explode(org.apache.spark.sql.graft.NearestCellsTwoLevel.probeColumn(
-            col("embedding"), col("nrm"), anchors, kc, wc, p,
-            route = Some(idx.route))).as("qcell"))
+          explode(org.apache.spark.sql.graft.NearestCellsTwoLevel.column(
+            col("embedding"), col("nrm"), anchors, kc, ac = wc, route = Some(idx.route),
+            nf = p)).as("qcell"))
       val scored = cells.join(broadcast(qc),
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           (VF.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("c"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"),
-          round(col("c"), 6).as("cos"))
-        .orderBy(col("q_id"), col("rnk"))
+      topKByCos(scored, 5)
     }),
 
     // ── BEYOND-CAP operating mode (VERDICT r17 #2 / r18 #3,
@@ -1169,12 +1167,7 @@ object Similarity {
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           (VF.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("c"))
         .dropDuplicates(Seq("q_id", "neighbor_id"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("neighbor_id"), col("rnk").cast("long").as("rnk"),
-          round(col("c"), 6).as("cos"))
-        .orderBy(col("q_id"), col("rnk"))
+      topKByCos(scored, 5)
     }),
 
     // ── ANN recall measurement: recall@5 of the IVF SCALED OPERATING
@@ -1228,10 +1221,8 @@ object Similarity {
       val idx = annIndex(spark, dir)
       val kk = idx.k
       val anchors = idx.anchors
-      val w = Window.partitionBy(col("q_id")).orderBy(col("c").desc, col("neighbor_id"))
-      def top5(scored: DataFrame): DataFrame = scored
-        .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
-        .select(col("q_id"), col("neighbor_id"))
+      def top5(scored: DataFrame): DataFrame =
+        topKByCos(scored, 5).select(col("q_id"), col("neighbor_id"))
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
       val truth = top5(e.join(broadcast(q), col("vec_id") =!= col("q_id"))

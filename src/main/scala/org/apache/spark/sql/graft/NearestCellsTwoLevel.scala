@@ -5,36 +5,44 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
-/** TWO-LEVEL IVF cell assignment (the "beyond the flat-K cap" path named
-  * at [[graft.queries.Similarity]]'s anchorKFor): route each corpus
-  * vector through a coarse quantizer first — nearest of the Kc coarse
-  * anchors — then to its nearest FINE anchor among only that coarse
-  * cell's fine anchors. Per-row cost drops from O(K·dim) flat to
-  * O((Kc + K/Kc)·dim) ≈ O(2√K·dim): at the 65536-anchor cap that is
-  * 512 anchor dots instead of 65536 per row, which is what keeps
-  * assignment a cheap map-side projection when K itself has to grow
-  * past what a flat scan affords. This is the classical IVF coarse/fine
-  * decomposition (an IMT/IVFADC-style routing tree of depth 2).
+/** TWO-LEVEL IVF cell routing (the "beyond the flat-K cap" path named at
+  * [[graft.queries.Similarity]]'s anchorKFor): score a vector against
+  * the Kc coarse anchors, keep its `ac` nearest coarse cells, then rank
+  * the union of those cells' FINE anchors and return the best `nf` fine
+  * cell ids in rank order (shorter when the union holds fewer). Per-row
+  * cost is O((Kc + ac·K/Kc)·dim) instead of a flat O(K·dim) scan: at the
+  * 65536-anchor cap with ac = 1 that is 512 anchor dots per row instead
+  * of 65536. This is the classical IVF coarse/fine decomposition (an
+  * IMI/IVFADC-style routing tree of depth 2).
   *
-  * Determinism & oracle mirroring: the coarse set is the first Kc fine
-  * anchors by the SAME min-hash selection rank (a nested subset — no
-  * second anchor family to mirror), the fine→coarse routing table is
-  * computed ONCE on the driver with the exact scoring fold the kernel
-  * and the SQL both use (double accumulation in array order, score =
-  * dot/(nrm·anrm), ties to the lower anchor id), and both levels use
-  * row_number tie-break semantics — so the declarative two-window
-  * oracle computes bit-identical assignments. Like [[NearestCells]],
-  * the anchor matrices ride in the expression (driver-held) and the
-  * embedding column never enters an exchange.
+  * One kernel serves every two-level caller: corpus assignment (nf = 1,
+  * read with `element_at(…, 1)`), multi-assignment (nf > 1: a row that
+  * narrowly misassigns is still findable through its runner-up cell),
+  * and the query-side probe (ac = the probed coarse width, nf = the
+  * probed fine cells). Widening ac trades assignment cost for fewer
+  * hierarchical misassignments, which dominate the two-level recall
+  * loss (IVF_TWOLEVEL_r17.json).
   *
-  * Note the routing is HIERARCHICAL, not flat-best: a vector's nearest
-  * fine anchor overall may live under a different coarse cell — the
-  * standard two-level recall trade, measured against the flat path by
-  * q109 vs q51's shared oracle machinery.
+  * Selection rule, both levels: score DESC, ties to the lower anchor id,
+  * a NaN score (zero-norm row: 0/0) ranks lowest and NaN ties also go to
+  * the lower id. That is the declarative `row_number() OVER (ORDER BY
+  * score DESC, id)` ranking whenever the scores are finite or all tie,
+  * so the two-window oracle computes bit-identical cells. Scores use the
+  * oracle's fold (double accumulation in array order, score =
+  * dot/(nrm·anrm)). The coarse set is the first Kc fine anchors by the
+  * same min-hash rank (a nested subset — no second anchor family to
+  * mirror), the fine→coarse routing table is computed once on the
+  * driver, and like [[NearestCells]] the anchor matrices ride in the
+  * expression, so the embedding column never enters an exchange.
+  *
+  * The routing is HIERARCHICAL, not flat-best: a vector's nearest fine
+  * anchor overall may live under a different coarse cell — the standard
+  * two-level recall trade, measured against the flat path by q109 vs
+  * q51's shared oracle machinery.
   */
 case class NearestCellsTwoLevel(
     vec: Expression,
@@ -52,231 +60,11 @@ case class NearestCellsTwoLevel(
   require(coarseIds.nonEmpty, "NearestCellsTwoLevel: empty coarse set")
   require(coarseIds.length == coarseVecs.length && coarseIds.length == coarseNrms.length)
   require(fineIdsByCoarse.length == coarseIds.length)
-  require(ac >= 1, s"assignment coarse width ac=$ac must be >= 1")
-  require(nf >= 1, s"fine multi-assignment width nf=$nf must be >= 1")
+  require(ac >= 1, s"coarse width ac=$ac must be >= 1")
+  require(nf >= 1, s"fine width nf=$nf must be >= 1")
   require(fineIdsByCoarse.forall(_.nonEmpty),
     "level-1 routing must only see coarse cells owning >=1 fine anchor " +
       "(the column() constructor drops empty cells)")
-
-  override def left: Expression = vec
-  override def right: Expression = nrm
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(
-    TypeCollection(ArrayType(FloatType), ArrayType(DoubleType)), DoubleType)
-
-  /** nf = 1 keeps the scalar single-cell contract (q109's hot path —
-    * no per-row array allocation); nf > 1 is MULTI-ASSIGNMENT (dial (a)
-    * of the beyond-cap study, promoted into q111 in r19): the top-nf
-    * fine cells across the ac-coarse union, rank-ordered.
-    */
-  override def dataType: DataType =
-    if (nf == 1) LongType else ArrayType(LongType, containsNull = false)
-
-  private def elemIsFloat: Boolean =
-    vec.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val cIds: Array[Long] = coarseIds.toArray
-  @transient private lazy val cMats: Array[Array[Float]] = coarseVecs.map(_.toArray).toArray
-  @transient private lazy val cNrms: Array[Double] = coarseNrms.toArray
-  @transient private lazy val fIds: Array[Array[Long]] = fineIdsByCoarse.map(_.toArray).toArray
-  @transient private lazy val fMats: Array[Array[Array[Float]]] =
-    fineVecsByCoarse.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val fNrms: Array[Array[Double]] =
-    fineNrmsByCoarse.map(_.toArray).toArray
-
-  private def dot(v: ArrayData, fl: Boolean, av: Array[Float]): Double = {
-    val n = math.min(v.numElements(), av.length)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = if (fl) v.getFloat(i).toDouble else v.getDouble(i)
-      acc += xi * av(i).toDouble
-      i += 1
-    }
-    acc
-  }
-
-  /** Public so generated code can call it through the reference object.
-    *
-    * ac = 1 is the r16 deepest-routing form (nearest coarse, then
-    * nearest fine within it). ac > 1 widens LEVEL-1 ASSIGNMENT to the
-    * top-ac coarse cells and picks the best fine anchor in their union
-    * — the measured fix for the hierarchical misassignment that
-    * dominated the two-level recall loss (sf10 grid in q109's
-    * scaladoc): per-row cost grows from (Kc + K/Kc) to
-    * (Kc + ac·K/Kc) dots, still ~50× under flat at the 65536 cap.
-    */
-  def kernel(v: ArrayData, vNrm: Double): Long = {
-    val fl = elemIsFloat
-    val nC = cIds.length
-    // Level 1: top-ac coarse anchors (score DESC, id ASC — arrays are
-    // id-sorted, strict > keeps the earlier id on ties) via repeated
-    // strict-max passes (ac is small).
-    val acEff = math.min(ac, nC)
-    val cScores = new Array[Double](nC)
-    var a = 0
-    while (a < nC) { cScores(a) = dot(v, fl, cMats(a)) / (vNrm * cNrms(a)); a += 1 }
-    val used = new Array[Boolean](nC)
-    var bestF = 0L
-    var bestScore = Double.NegativeInfinity
-    // Lowest fine id scanned — the deterministic assignment when every
-    // fine score is NaN (zero-norm row) and no comparison ever fires.
-    var fallbackF = Long.MaxValue
-    var r = 0
-    while (r < acEff) {
-      var bestC = -1
-      var bestCs = Double.NegativeInfinity
-      var i = 0
-      while (i < nC) {
-        if (!used(i) && cScores(i) > bestCs) { bestCs = cScores(i); bestC = i }
-        i += 1
-      }
-      // All-NaN scores (zero-norm vector ⇒ 0/0) satisfy no strict-max
-      // comparison; fall back to the first unused (= lowest-id) cell so
-      // degenerate rows route deterministically instead of crashing
-      // (ADVICE r17: used(-1) threw ArrayIndexOutOfBoundsException).
-      if (bestC < 0) { bestC = 0; while (used(bestC)) bestC += 1 }
-      used(bestC) = true
-      // Level 2: best fine anchor across the union of the picked cells
-      // — union ids are not globally sorted, so ties compare ids.
-      val ids = fIds(bestC); val mats = fMats(bestC); val nrms = fNrms(bestC)
-      var f = 0
-      while (f < ids.length) {
-        val s = dot(v, fl, mats(f)) / (vNrm * nrms(f))
-        if (s > bestScore || (s == bestScore && ids(f) < bestF)) {
-          bestScore = s; bestF = ids(f)
-        }
-        if (ids(f) < fallbackF) fallbackF = ids(f)
-        f += 1
-      }
-      r += 1
-    }
-    if (bestScore == Double.NegativeInfinity && fallbackF != Long.MaxValue) fallbackF
-    else bestF
-  }
-
-  /** nf > 1 form: the top-nf fine cells across the ac-coarse union,
-    * (score DESC, id ASC), rank-ordered — exactly the probe kernel's
-    * union ranking applied to ASSIGNMENT (dial (a): a row whose
-    * two-level route narrowly misassigns it is still findable through
-    * its runner-up cell). Shorter than nf when the union holds fewer
-    * fine anchors. NaN scores (zero-norm rows) satisfy no strict-max
-    * comparison → first-unused fallback, same rule as [[kernel]] and
-    * the probe.
-    */
-  def kernelMulti(v: ArrayData, vNrm: Double): ArrayData = {
-    val fl = elemIsFloat
-    val nC = cIds.length
-    val acEff = math.min(ac, nC)
-    val cScores = new Array[Double](nC)
-    var a = 0
-    while (a < nC) { cScores(a) = dot(v, fl, cMats(a)) / (vNrm * cNrms(a)); a += 1 }
-    val usedC = new Array[Boolean](nC)
-    val pickedC = new Array[Int](acEff)
-    var r = 0
-    while (r < acEff) {
-      var bestC = -1
-      var bestCs = Double.NegativeInfinity
-      var i = 0
-      while (i < nC) {
-        if (!usedC(i) && cScores(i) > bestCs) { bestCs = cScores(i); bestC = i }
-        i += 1
-      }
-      if (bestC < 0) { bestC = 0; while (usedC(bestC)) bestC += 1 }
-      usedC(bestC) = true; pickedC(r) = bestC; r += 1
-    }
-    // Level 2: rank the union of the picked cells' fine anchors — the
-    // union is not id-sorted across cells, so ties compare ids.
-    var nCand = 0
-    r = 0
-    while (r < acEff) { nCand += fIds(pickedC(r)).length; r += 1 }
-    val candIds = new Array[Long](nCand)
-    val candScores = new Array[Double](nCand)
-    var o = 0
-    r = 0
-    while (r < acEff) {
-      val c = pickedC(r)
-      val ids = fIds(c); val mats = fMats(c); val nrms = fNrms(c)
-      var f = 0
-      while (f < ids.length) {
-        candIds(o) = ids(f)
-        candScores(o) = dot(v, fl, mats(f)) / (vNrm * nrms(f))
-        o += 1; f += 1
-      }
-      r += 1
-    }
-    val nfEff = math.min(nf, nCand)
-    val out = new Array[Long](nfEff)
-    val usedF = new Array[Boolean](nCand)
-    r = 0
-    while (r < nfEff) {
-      var best = -1
-      var bestS = Double.NegativeInfinity
-      var bestId = Long.MaxValue
-      var i = 0
-      while (i < nCand) {
-        if (!usedF(i) && (candScores(i) > bestS ||
-            (candScores(i) == bestS && candIds(i) < bestId))) {
-          bestS = candScores(i); bestId = candIds(i); best = i
-        }
-        i += 1
-      }
-      if (best < 0) { best = 0; while (usedF(best)) best += 1 }
-      usedF(best) = true; out(r) = candIds(best); r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (nf == 1) kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[java.lang.Double])
-    else kernelMulti(a.asInstanceOf[ArrayData], b.asInstanceOf[java.lang.Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("twoLevel", this, classOf[NearestCellsTwoLevel].getName)
-    val call = if (nf == 1) "kernel" else "kernelMulti"
-    nullSafeCodeGen(ctx, ev, (v, n) =>
-      s"${ev.value} = $ref.$call($v, $n);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCellsTwoLevel =
-    copy(vec = newLeft, nrm = newRight)
-
-  override def prettyName: String = "nearestcells_twolevel"
-
-  override def toString: String =
-    s"nearestcells_twolevel($vec, $nrm, coarse=${coarseIds.length}, " +
-      s"fine=${fineIdsByCoarse.map(_.length).sum})"
-}
-
-/** QUERY-side coarse multi-probe for the two-level quantizer (VERDICT
-  * r16 #2 — the dial that takes q109 from its deepest-pruning point to a
-  * deployable one): probe the `wc` nearest coarse cells, then rank the
-  * UNION of their fine anchors and keep the best `pf` fine cells —
-  * (score DESC, id ASC) at both levels, exactly the corpus-routing tie
-  * rule, so the declarative two-window oracle (crnk ≤ wc, frnk ≤ pf)
-  * computes bit-identical probe sets. Scan budget: pf fine cells ≈
-  * pf·n/K corpus rows — the SAME budget as the scaled flat path's
-  * nprobe = pf (q54), spent through the O((Kc + wc·K/Kc)·dim) two-level
-  * assignment instead of a flat O(K·dim) scan. Shares the routing
-  * arrays with [[NearestCellsTwoLevel]]; returns the probed fine cell
-  * ids in rank order (shorter when fewer candidates exist).
-  */
-case class NearestCellsTwoLevelProbe(
-    vec: Expression,
-    nrm: Expression,
-    coarseIds: IndexedSeq[Long],
-    coarseVecs: IndexedSeq[IndexedSeq[Float]],
-    coarseNrms: IndexedSeq[Double],
-    fineIdsByCoarse: IndexedSeq[IndexedSeq[Long]],
-    fineVecsByCoarse: IndexedSeq[IndexedSeq[IndexedSeq[Float]]],
-    fineNrmsByCoarse: IndexedSeq[IndexedSeq[Double]],
-    wc: Int,
-    pf: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  require(coarseIds.nonEmpty, "NearestCellsTwoLevelProbe: empty coarse set")
-  require(wc >= 1 && pf >= 1, s"wc=$wc pf=$pf must be >= 1")
 
   override def left: Expression = vec
   override def right: Expression = nrm
@@ -310,45 +98,50 @@ case class NearestCellsTwoLevelProbe(
     acc
   }
 
+  /** (s, id) ranks above (bs, bid): score DESC, a NaN score lowest,
+    * ties — NaN ties included — to the lower id.
+    */
+  private def above(s: Double, id: Long, bs: Double, bid: Long): Boolean =
+    if (s.isNaN) bs.isNaN && id < bid
+    else bs.isNaN || s > bs || (s == bs && id < bid)
+
+  /** Indices of the `n` best (score, id) pairs in rank order, by
+    * repeated max passes (n is small).
+    */
+  private def top(scores: Array[Double], ids: Array[Long], n: Int): Array[Int] = {
+    val out = new Array[Int](math.min(n, scores.length))
+    val used = new Array[Boolean](scores.length)
+    var r = 0
+    while (r < out.length) {
+      var best = -1
+      var i = 0
+      while (i < scores.length) {
+        if (!used(i) && (best < 0 || above(scores(i), ids(i), scores(best), ids(best)))) best = i
+        i += 1
+      }
+      used(best) = true; out(r) = best; r += 1
+    }
+    out
+  }
+
   /** Public so generated code can call it through the reference object. */
   def kernel(v: ArrayData, vNrm: Double): ArrayData = {
     val fl = elemIsFloat
-    // Level 1: top-wc coarse cells by (score DESC, id ASC). Coarse
-    // arrays are id-sorted, so repeated strict-max passes keep the
-    // earlier id on ties — wc·Kc comparisons, wc is small (⌈√p⌉).
-    val nC = cIds.length
-    val cScores = new Array[Double](nC)
+    val cScores = new Array[Double](cIds.length)
     var a = 0
-    while (a < nC) { cScores(a) = dot(v, fl, cMats(a)) / (vNrm * cNrms(a)); a += 1 }
-    val wcEff = math.min(wc, nC)
-    val pickedC = new Array[Int](wcEff)
-    val usedC = new Array[Boolean](nC)
-    var r = 0
-    while (r < wcEff) {
-      var best = -1
-      var bestS = Double.NegativeInfinity
-      var i = 0
-      while (i < nC) {
-        if (!usedC(i) && cScores(i) > bestS) { bestS = cScores(i); best = i }
-        i += 1
-      }
-      // NaN fallback as in NearestCellsTwoLevel.kernel: first unused.
-      if (best < 0) { best = 0; while (usedC(best)) best += 1 }
-      usedC(best) = true; pickedC(r) = best; r += 1
-    }
-    // Level 2: rank the union of the probed cells' fine anchors by
-    // (score DESC, id ASC) — the union is NOT id-sorted across cells,
-    // so ties compare ids explicitly.
+    while (a < cIds.length) { cScores(a) = dot(v, fl, cMats(a)) / (vNrm * cNrms(a)); a += 1 }
+    val picked = top(cScores, cIds, ac)
+    // Level 2 ranks the union of the picked cells' fine anchors; the
+    // union is not id-sorted across cells, which the id tie-break covers.
     var nCand = 0
-    r = 0
-    while (r < wcEff) { nCand += fIds(pickedC(r)).length; r += 1 }
+    var r = 0
+    while (r < picked.length) { nCand += fIds(picked(r)).length; r += 1 }
     val candIds = new Array[Long](nCand)
     val candScores = new Array[Double](nCand)
     var o = 0
     r = 0
-    while (r < wcEff) {
-      val c = pickedC(r)
-      val ids = fIds(c); val mats = fMats(c); val nrms = fNrms(c)
+    while (r < picked.length) {
+      val ids = fIds(picked(r)); val mats = fMats(picked(r)); val nrms = fNrms(picked(r))
       var f = 0
       while (f < ids.length) {
         candIds(o) = ids(f)
@@ -357,61 +150,40 @@ case class NearestCellsTwoLevelProbe(
       }
       r += 1
     }
-    val pfEff = math.min(pf, nCand)
-    val out = new Array[Long](pfEff)
-    val usedF = new Array[Boolean](nCand)
+    val best = top(candScores, candIds, nf)
+    val out = new Array[Long](best.length)
     r = 0
-    while (r < pfEff) {
-      var best = -1
-      var bestS = Double.NegativeInfinity
-      var bestId = Long.MaxValue
-      var i = 0
-      while (i < nCand) {
-        if (!usedF(i) && (candScores(i) > bestS ||
-            (candScores(i) == bestS && candIds(i) < bestId))) {
-          bestS = candScores(i); bestId = candIds(i); best = i
-        }
-        i += 1
-      }
-      // NaN fallback: first unused candidate (deterministic).
-      if (best < 0) { best = 0; while (usedF(best)) best += 1 }
-      usedF(best) = true; out(r) = candIds(best); r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    while (r < out.length) { out(r) = candIds(best(r)); r += 1 }
+    new GenericArrayData(out)
   }
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[java.lang.Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("twoLevelProbe", this, classOf[NearestCellsTwoLevelProbe].getName)
+    val ref = ctx.addReferenceObj("twoLevel", this, classOf[NearestCellsTwoLevel].getName)
     nullSafeCodeGen(ctx, ev, (v, n) =>
       s"${ev.value} = $ref.kernel($v, $n);")
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCellsTwoLevelProbe =
+      newLeft: Expression, newRight: Expression): NearestCellsTwoLevel =
     copy(vec = newLeft, nrm = newRight)
 
-  override def prettyName: String = "nearestcells_twolevel_probe"
+  override def prettyName: String = "nearestcells_twolevel"
 
   override def toString: String =
-    s"nearestcells_twolevel_probe($vec, $nrm, coarse=${coarseIds.length}, " +
-      s"fine=${fineIdsByCoarse.map(_.length).sum}, wc=$wc, pf=$pf)"
+    s"nearestcells_twolevel($vec, $nrm, coarse=${coarseIds.length}, " +
+      s"fine=${fineIdsByCoarse.map(_.length).sum}, ac=$ac, nf=$nf)"
 }
 
 object NearestCellsTwoLevel {
 
-  /** Driver-side routing-table construction from the flat anchor list
-    * (id-rank-ordered as collected — hash-rank order). The first `kc`
-    * anchors double as the coarse set; every fine anchor routes to its
-    * nearest coarse anchor with the same scoring fold and tie rule the
-    * kernel and the SQL oracle use. Each coarse anchor routes to itself
-    * (score 1 is its own maximum), so no cell is empty.
-    */
-  /** (kept coarse anchors, fine anchors grouped by kept coarse cell) —
-    * shared by the corpus-assignment and query-probe constructors so
-    * both sides of q109 route through one table.
+  /** Driver-side routing table from the flat anchor list (hash-rank
+    * order, as collected): the first `kc` anchors double as the coarse
+    * set, and every fine anchor routes to its nearest coarse anchor with
+    * the kernel's scoring fold and tie rule. Returns (kept coarse
+    * anchors, fine anchors grouped by kept coarse cell).
     */
   private def routingTable(anchorsByRank: Seq[(Long, Seq[Float], Double)], kc: Int)
       : (Seq[(Long, Seq[Float], Double)], Seq[Seq[(Long, Seq[Float], Double)]]) = {
@@ -448,8 +220,8 @@ object NearestCellsTwoLevel {
   /** The fine→coarse routing as a persistable relation: fine anchor id →
     * kept coarse anchor id, computed by the SAME fold/tie rule as
     * [[routingTable]] (it IS routingTable, flattened). Persisted by the
-    * ANN index table (VERDICT r17 #6) so a reuse tick reconstructs the
-    * routing without recomputing K·Kc anchor dots.
+    * ANN index table so a reuse tick reconstructs the routing without
+    * recomputing K·Kc anchor dots.
     */
   def routeOf(anchorsByRank: Seq[(Long, Seq[Float], Double)], kc: Int): Map[Long, Long] = {
     val (kept, byCoarse) = routingTable(anchorsByRank, kc)
@@ -470,6 +242,11 @@ object NearestCellsTwoLevel {
     (kept, kept.map(c => grouped(c._1).sortBy(_._1)))
   }
 
+  /** The two-level cells column: the `nf` best fine cells within the
+    * `ac` nearest coarse cells, as `array<bigint>` in rank order. `route`
+    * is a persisted [[routeOf]] map; without it the table is computed
+    * from `anchorsByRank` and `kc`.
+    */
   def column(
       vec: Column, nrm: Column,
       anchorsByRank: Seq[(Long, Seq[Float], Double)], kc: Int,
@@ -486,25 +263,5 @@ object NearestCellsTwoLevel {
       byCoarse.map(_.map(_._2.toIndexedSeq).toIndexedSeq).toIndexedSeq,
       byCoarse.map(_.map(_._3).toIndexedSeq).toIndexedSeq,
       ac, nf))
-  }
-
-  /** The query-side multi-probe column: the `pf` best fine cells within
-    * the `wc` nearest coarse cells — same routing table as [[column]].
-    */
-  def probeColumn(
-      vec: Column, nrm: Column,
-      anchorsByRank: Seq[(Long, Seq[Float], Double)], kc: Int,
-      wc: Int, pf: Int, route: Option[Map[Long, Long]] = None): Column = {
-    val (kept, byCoarse) = route.map(routingFromPersisted(anchorsByRank, _))
-      .getOrElse(routingTable(anchorsByRank, kc))
-    ExpressionUtils.column(NearestCellsTwoLevelProbe(
-      ExpressionUtils.expression(vec), ExpressionUtils.expression(nrm),
-      kept.map(_._1).toIndexedSeq,
-      kept.map(_._2.toIndexedSeq).toIndexedSeq,
-      kept.map(_._3).toIndexedSeq,
-      byCoarse.map(_.map(_._1).toIndexedSeq).toIndexedSeq,
-      byCoarse.map(_.map(_._2.toIndexedSeq).toIndexedSeq).toIndexedSeq,
-      byCoarse.map(_.map(_._3).toIndexedSeq).toIndexedSeq,
-      wc, pf))
   }
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.NearestCellsTwoLevel
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two-level IVF routing kernel (q109) must reproduce the
+/** The two-level IVF routing kernel (q109, q111) must reproduce the
   * declarative two-window formulation it replaces — fine→coarse routing
   * and both per-row ranking levels, including row_number tie-breaks —
   * on the REAL sf0.01 corpus with the real anchor derivation.
@@ -16,6 +16,7 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.01"
+  private type Anchor = (Long, Seq[Float], Double)
 
   override def beforeAll(): Unit = {
     spark = graft.Sessions.builder("4").getOrCreate()
@@ -24,97 +25,42 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("two-level cell assignment equals the declarative two-window ranking on sf0.01") {
-    val e = graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm"))
-    // Same derivation as q109: anchors by min-hash rank, Kc = ceil(sqrt(K)).
+  private def corpus(): DataFrame = graft.sources.Tables.embeddings(spark, dir)
+    .select(col("vec_id"), col("embedding"),
+      VectorFunctions.norm(col("embedding")).as("nrm"))
+
+  /** Same derivation as q109: the K corpus vectors with the smallest
+    * min-hash rank, K = clamp(64, 65536, 4⌊√n⌋), in hash-rank order.
+    */
+  private def anchorsOf(e: DataFrame): (Int, Seq[Anchor]) = {
     val hash = (col("vec_id") % 1000003L) * 2654435761L % 1000000007L
     val n = e.count()
     val k = math.max(64L, math.min(65536L,
       4L * math.floor(math.sqrt(n.toDouble)).toLong)).toInt
-    val anchors = e.orderBy(hash, col("vec_id")).limit(k).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq
-    val kc = math.ceil(math.sqrt(anchors.size.toDouble)).toInt
-
-    val kernel = e.select(col("vec_id"),
-        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc).as("cell"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-
-    // Declarative arm: coarse = first kc anchors by rank; route fine
-    // anchors by windowed rank; route corpus rows coarse-then-fine.
-    val s2 = spark; import s2.implicits._
-    val aDf = anchors.zipWithIndex
-      .map { case ((id, v, nr), i) => (id, v, nr, i + 1) }
-      .toDF("a_id", "av", "anrm", "hrnk")
-    val coarse = aDf.filter(col("hrnk") <= kc)
-      .select(col("a_id").as("c_id"), col("av").as("cv"), col("anrm").as("cnrm"))
-    def cos(v: org.apache.spark.sql.Column, nrm: org.apache.spark.sql.Column,
-        av: org.apache.spark.sql.Column, anrm: org.apache.spark.sql.Column) =
-      VectorFunctions.dot(v, av) / (nrm * anrm)
-    val wf = Window.partitionBy(col("a_id"))
-      .orderBy(cos(col("av"), col("anrm"), col("cv"), col("cnrm")).desc, col("c_id"))
-    val froute = aDf.crossJoin(coarse)
-      .withColumn("crnk", row_number().over(wf)).filter(col("crnk") === 1)
-      .select(col("a_id"), col("av"), col("anrm"), col("c_id"))
-    val presentCoarse = froute.select(col("c_id")).distinct()
-      .join(coarse, "c_id")
-    val w1 = Window.partitionBy(col("vec_id"))
-      .orderBy(cos(col("embedding"), col("nrm"), col("cv"), col("cnrm")).desc, col("c_id"))
-    val lvl1 = e.crossJoin(presentCoarse)
-      .withColumn("crnk", row_number().over(w1)).filter(col("crnk") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id"))
-    val w2 = Window.partitionBy(col("vec_id"))
-      .orderBy(cos(col("embedding"), col("nrm"), col("av"), col("anrm")).desc, col("a_id"))
-    val declarative = lvl1.join(froute.withColumnRenamed("c_id", "fc"),
-        col("fc") === col("c_id"))
-      .withColumn("frnk", row_number().over(w2)).filter(col("frnk") === 1)
-      .select(col("vec_id"), col("a_id").as("cell"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-
-    assert(kernel.size == n && declarative.size == n)
-    val diff = kernel.collect { case (id, c) if declarative(id) != c =>
-      (id, c, declarative(id)) }
-    assert(diff.isEmpty, s"two-level kernel diverges from the declarative " +
-      s"ranking on ${diff.size} rows, e.g. ${diff.take(3)}")
+    (k, e.orderBy(hash, col("vec_id")).limit(k).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq)
   }
 
-  test("ac=6 widened assignment + probeColumn equal the declarative multi-probe windows on sf0.01") {
-    // The r17 operating point (VERDICT r16 #2): corpus rows assign
-    // through their ac=6 nearest coarse cells; queries probe wc coarse
-    // cells and keep the pf best fine cells in the union. Both kernels
-    // must reproduce the declarative crnk<=ac / crnk<=wc / frnk<=pf
-    // window formulation the oracle uses, tie-breaks included.
-    val e = graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm"))
-    val hash = (col("vec_id") % 1000003L) * 2654435761L % 1000000007L
-    val n = e.count()
-    val k = math.max(64L, math.min(65536L,
-      4L * math.floor(math.sqrt(n.toDouble)).toLong)).toInt
-    val anchors = e.orderBy(hash, col("vec_id")).limit(k).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq
-    val kc = math.min(2L * math.ceil(math.sqrt(k.toDouble)).toLong, anchors.size.toLong).toInt
-    val wc = ((2L * 2L * math.ceil(math.sqrt(k.toDouble)).toLong + 4L) / 5L).toInt
-    val pf = (k + 63) / 64
-    val ac = 6
+  private def kernelCells(e: DataFrame, anchors: Seq[Anchor], kc: Int,
+      ac: Int, nf: Int): Map[Long, Seq[Long]] =
+    e.select(col("vec_id"),
+        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc,
+          ac = ac, nf = nf).as("cells"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toMap
 
-    val kernel = e.select(col("vec_id"),
-        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc, ac).as("cell"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val probeK = e.filter(col("vec_id") < 5).select(col("vec_id"),
-        NearestCellsTwoLevel.probeColumn(col("embedding"), col("nrm"),
-          anchors, kc, wc, pf).as("cells"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-
+  /** The declarative arm: coarse = first kc anchors by rank; route fine
+    * anchors by windowed rank; rank each row's coarse cells (crnk ≤ ac),
+    * then the fine anchors of their union (frnk ≤ nf), in rank order.
+    */
+  private def declarativeCells(e: DataFrame, anchors: Seq[Anchor], kc: Int,
+      ac: Int, nf: Int): Map[Long, Seq[Long]] = {
     val s2 = spark; import s2.implicits._
     val aDf = anchors.zipWithIndex
       .map { case ((id, v, nr), i) => (id, v, nr, i + 1) }
       .toDF("a_id", "av", "anrm", "hrnk")
     val coarse = aDf.filter(col("hrnk") <= kc)
       .select(col("a_id").as("c_id"), col("av").as("cv"), col("anrm").as("cnrm"))
-    def cos(v: org.apache.spark.sql.Column, nrm: org.apache.spark.sql.Column,
-        av: org.apache.spark.sql.Column, anrm: org.apache.spark.sql.Column) =
+    def cos(v: Column, nrm: Column, av: Column, anrm: Column) =
       VectorFunctions.dot(v, av) / (nrm * anrm)
     val wf = Window.partitionBy(col("a_id"))
       .orderBy(cos(col("av"), col("anrm"), col("cv"), col("cnrm")).desc, col("c_id"))
@@ -126,33 +72,53 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy(cos(col("embedding"), col("nrm"), col("cv"), col("cnrm")).desc, col("c_id"))
     val w2 = Window.partitionBy(col("vec_id"))
       .orderBy(cos(col("embedding"), col("nrm"), col("av"), col("anrm")).desc, col("a_id"))
-    // Declarative assignment: union of the ac nearest coarse cells.
     val lvl1 = e.crossJoin(presentCoarse)
       .withColumn("crnk", row_number().over(w1)).filter(col("crnk") <= ac)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id"))
-    val declarative = lvl1.join(froute.withColumnRenamed("c_id", "fc"),
-        col("fc") === col("c_id"))
-      .withColumn("frnk", row_number().over(w2)).filter(col("frnk") === 1)
-      .select(col("vec_id"), col("a_id").as("cell"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(kernel.size == n && declarative.size == n)
-    val diff = kernel.collect { case (id, c) if declarative(id) != c => (id, c, declarative(id)) }
-    assert(diff.isEmpty, s"ac=$ac kernel diverges on ${diff.size} rows, e.g. ${diff.take(3)}")
-
-    // Declarative probe: wc coarse cells, pf best fine in the union,
-    // kept in rank order.
-    val qprobe = e.filter(col("vec_id") < 5).crossJoin(presentCoarse)
-      .withColumn("crnk", row_number().over(w1)).filter(col("crnk") <= wc)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id"))
-    val fprobe = qprobe.join(froute.withColumnRenamed("c_id", "fc"),
-        col("fc") === col("c_id"))
-      .withColumn("frnk", row_number().over(w2)).filter(col("frnk") <= pf)
+    lvl1.join(froute.withColumnRenamed("c_id", "fc"), col("fc") === col("c_id"))
+      .withColumn("frnk", row_number().over(w2)).filter(col("frnk") <= nf)
       .select(col("vec_id"), col("a_id"), col("frnk"))
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq).toMap
-    assert(probeK.keySet == fprobe.keySet)
-    val pdiff = probeK.collect { case (id, cs) if fprobe(id) != cs => (id, cs, fprobe(id)) }
-    assert(pdiff.isEmpty, s"probe kernel diverges on ${pdiff.size} queries, e.g. ${pdiff.take(2)}")
+  }
+
+  private def assertSame(what: String, got: Map[Long, Seq[Long]],
+      want: Map[Long, Seq[Long]]): Unit = {
+    assert(got.keySet == want.keySet, s"$what: row sets differ")
+    val diff = got.collect { case (id, cs) if want(id) != cs => (id, cs, want(id)) }
+    assert(diff.isEmpty, s"$what diverges from the declarative windows on " +
+      s"${diff.size} rows, e.g. ${diff.take(3)}")
+  }
+
+  test("two-level cell assignment equals the declarative two-window ranking on sf0.01") {
+    val e = corpus()
+    val (_, anchors) = anchorsOf(e)
+    val kc = math.ceil(math.sqrt(anchors.size.toDouble)).toInt
+    val kernel = kernelCells(e, anchors, kc, ac = 1, nf = 1)
+    assert(kernel.size == e.count() && kernel.values.forall(_.length == 1))
+    assertSame("two-level kernel", kernel, declarativeCells(e, anchors, kc, ac = 1, nf = 1))
+  }
+
+  test("ac=6 widened assignment + the ac=wc, nf=pf probe equal the declarative multi-probe windows on sf0.01") {
+    // The deployed operating point: corpus rows assign through their
+    // ac=6 nearest coarse cells; queries probe wc coarse cells and keep
+    // the pf best fine cells in the union. Both calls must reproduce
+    // the declarative crnk<=ac / crnk<=wc / frnk<=pf window formulation
+    // the oracle uses, tie-breaks included.
+    val e = corpus()
+    val (k, anchors) = anchorsOf(e)
+    val kc = math.min(2L * math.ceil(math.sqrt(k.toDouble)).toLong, anchors.size.toLong).toInt
+    val wc = ((2L * 2L * math.ceil(math.sqrt(k.toDouble)).toLong + 4L) / 5L).toInt
+    val pf = (k + 63) / 64
+    val ac = 6
+
+    val kernel = kernelCells(e, anchors, kc, ac, nf = 1)
+    assert(kernel.size == e.count())
+    assertSame(s"ac=$ac kernel", kernel, declarativeCells(e, anchors, kc, ac, nf = 1))
+
+    val q = e.filter(col("vec_id") < 5)
+    assertSame("probe (ac=wc, nf=pf)", kernelCells(q, anchors, kc, wc, pf),
+      declarativeCells(q, anchors, kc, wc, pf))
   }
 
   test("identical-vector twin anchors: empty coarse cells drop from level-1 routing (degenerate branch)") {
@@ -162,7 +128,7 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     // no fine anchors and must vanish from level-1 routing — without the
     // constructor's drop, a vector nearest to 20 would route into an
     // empty cell. Anchor 30 is far away on another axis.
-    val anchors: Seq[(Long, Seq[Float], Double)] = Seq(
+    val anchors: Seq[Anchor] = Seq(
       (10L, Seq(1f, 0f, 0f), 1.0),
       (20L, Seq(1f, 0f, 0f), 1.0),
       (30L, Seq(0f, 0f, 1f), 1.0))
@@ -172,8 +138,8 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDF("vec_id", "embedding")
       .withColumn("nrm", sqrt(VectorFunctions.dot(col("embedding"), col("embedding"))))
     // kc = 3: every anchor is coarse; cell 20 routes to 10 and empties.
-    val got = df.select(col("vec_id"),
-        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, 3).as("cell"))
+    val got = df.select(col("vec_id"), element_at(
+        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, 3), 1).as("cell"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // Row 1: level-1 over {10, 30} (20 dropped) → 10; level-2 within
     // cell 10 = {10, 20} → tie on identical vectors → lower id 10.
@@ -183,10 +149,10 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("zero-norm rows route deterministically instead of crashing (ADVICE r17 NaN fallback)") {
     val s2 = spark; import s2.implicits._
-    // A zero-norm vector makes every cosine 0/0 = NaN: no strict-max
-    // comparison fires, so pre-fix bestC stayed -1 and used(-1) threw.
-    // The fallback routes through the first (lowest-id) cells.
-    val anchors: Seq[(Long, Seq[Float], Double)] = Seq(
+    // A zero-norm vector makes every cosine 0/0 = NaN. NaN ranks lowest
+    // and NaN ties go to the lower id, so the row routes through the
+    // lowest-id cells instead of throwing.
+    val anchors: Seq[Anchor] = Seq(
       (10L, Seq(1f, 0f, 0f), 1.0),
       (20L, Seq(0f, 1f, 0f), 1.0),
       (30L, Seq(0f, 0f, 1f), 1.0))
@@ -195,82 +161,64 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, Seq(0.0f, 0.1f, 0.9f))  // healthy row, unaffected
     ).toDF("vec_id", "embedding")
       .withColumn("nrm", sqrt(VectorFunctions.dot(col("embedding"), col("embedding"))))
-    val got = df.select(col("vec_id"),
-        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, 3, 2).as("cell"))
+    val got = df.select(col("vec_id"), element_at(
+        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, 3, 2), 1).as("cell"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // Zero row: coarse fallback = first unused cells, fine fallback =
-    // lowest fine id scanned → 10. Healthy row still routes to 30.
+    // Zero row: coarse cells 10, 20 → lowest fine id 10. Healthy row
+    // still routes to 30.
     assert(got == Map(1L -> 10L, 2L -> 30L), s"got $got")
     val probed = df.select(col("vec_id"),
-        NearestCellsTwoLevel.probeColumn(col("embedding"), col("nrm"),
-          anchors, 3, 2, 2).as("cells"))
+        NearestCellsTwoLevel.column(col("embedding"), col("nrm"),
+          anchors, 3, ac = 2, nf = 2).as("cells"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-    // Zero row probes the first two cells in array order — stable, no throw.
+    // Zero row probes the two lowest-id cells — stable, no throw.
     assert(probed(1L) == Seq(10L, 20L), s"got ${probed(1L)}")
     assert(probed(2L).head == 30L, s"got ${probed(2L)}")
   }
 
+  test("zero-norm row: nf=1, nf=2 and the probe all take the declarative all-tie order") {
+    val s2 = spark; import s2.implicits._
+    // Hash-rank order 50, 40, 10 with kc = 2: coarse = {40, 50}, and
+    // fine 10 routes under 50, so the cells are 40 → {40}, 50 → {10, 50}.
+    // A zero-norm row ties every score (NaN), so both levels rank by id:
+    // coarse (40, 50), then fine (10, 40, 50) — the declarative windows'
+    // order. Taking the union in coarse-pick order instead would give
+    // (40, 10).
+    val anchors: Seq[Anchor] = Seq(
+      (50L, Seq(1f, 0f, 0f), 1.0),
+      (40L, Seq(0f, 1f, 0f), 1.0),
+      (10L, Seq(0.9f, 0.1f, 0f), math.sqrt(0.9f.toDouble * 0.9f + 0.1f.toDouble * 0.1f)))
+    val df = Seq((1L, Seq(0f, 0f, 0f))).toDF("vec_id", "embedding")
+      .withColumn("nrm", sqrt(VectorFunctions.dot(col("embedding"), col("embedding"))))
+    // The declarative cosine divides by a zero norm: ANSI division
+    // throws, the legacy one returns null, and all-null scores tie.
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    val want = try (1 to 3).map(nf => nf -> declarativeCells(df, anchors, 2, 2, nf)).toMap
+      finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert(want(2) == Map(1L -> Seq(10L, 40L)), s"declarative windows gave ${want(2)}")
+    // nf = 1 and 2 are assignment; nf = 3 with ac = 2 is the probe
+    // (wc = 2 coarse cells, pf = 3 fine cells).
+    for (nf <- 1 to 3)
+      assertSame(s"ac=2, nf=$nf", kernelCells(df, anchors, 2, 2, nf), want(nf))
+  }
+
   test("nf=2 multi-assignment equals the declarative frnk<=2 window on sf0.01 (q111's r19 dial (a))") {
-    // The promoted beyond-cap operating point multi-assigns each corpus
-    // row to its TOP-2 fine cells in the ac-coarse union (rank order).
-    // The kernel must reproduce the declarative frnk<=2 formulation the
+    // The beyond-cap operating point multi-assigns each corpus row to
+    // its TOP-2 fine cells in the ac-coarse union (rank order). The
+    // kernel must reproduce the declarative frnk<=2 formulation the
     // q111 oracle uses, tie-breaks included, and its rank-1 cell must
-    // equal the single-assign kernel's cell on every row.
-    val e = graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm"))
-    val hash = (col("vec_id") % 1000003L) * 2654435761L % 1000000007L
-    val n = e.count()
-    val k = math.max(64L, math.min(65536L,
-      4L * math.floor(math.sqrt(n.toDouble)).toLong)).toInt
-    val anchors = e.orderBy(hash, col("vec_id")).limit(k).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq
+    // equal the single-assign cell on every row.
+    val e = corpus()
+    val (k, anchors) = anchorsOf(e)
     val kc = math.min(2L * math.ceil(math.sqrt(k.toDouble)).toLong, anchors.size.toLong).toInt
     val ac = 6
 
-    val multi = e.select(col("vec_id"),
-        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc, ac,
-          nf = 2).as("cells"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-    val single = e.select(col("vec_id"),
-        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc, ac).as("cell"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-
-    val s2 = spark; import s2.implicits._
-    val aDf = anchors.zipWithIndex
-      .map { case ((id, v, nr), i) => (id, v, nr, i + 1) }
-      .toDF("a_id", "av", "anrm", "hrnk")
-    val coarse = aDf.filter(col("hrnk") <= kc)
-      .select(col("a_id").as("c_id"), col("av").as("cv"), col("anrm").as("cnrm"))
-    def cos(v: org.apache.spark.sql.Column, nrm: org.apache.spark.sql.Column,
-        av: org.apache.spark.sql.Column, anrm: org.apache.spark.sql.Column) =
-      VectorFunctions.dot(v, av) / (nrm * anrm)
-    val wf = Window.partitionBy(col("a_id"))
-      .orderBy(cos(col("av"), col("anrm"), col("cv"), col("cnrm")).desc, col("c_id"))
-    val froute = aDf.crossJoin(coarse)
-      .withColumn("crnk", row_number().over(wf)).filter(col("crnk") === 1)
-      .select(col("a_id"), col("av"), col("anrm"), col("c_id"))
-    val presentCoarse = froute.select(col("c_id")).distinct().join(coarse, "c_id")
-    val w1 = Window.partitionBy(col("vec_id"))
-      .orderBy(cos(col("embedding"), col("nrm"), col("cv"), col("cnrm")).desc, col("c_id"))
-    val w2 = Window.partitionBy(col("vec_id"))
-      .orderBy(cos(col("embedding"), col("nrm"), col("av"), col("anrm")).desc, col("a_id"))
-    val lvl1 = e.crossJoin(presentCoarse)
-      .withColumn("crnk", row_number().over(w1)).filter(col("crnk") <= ac)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id"))
-    val declarative = lvl1.join(froute.withColumnRenamed("c_id", "fc"),
-        col("fc") === col("c_id"))
-      .withColumn("frnk", row_number().over(w2)).filter(col("frnk") <= 2)
-      .select(col("vec_id"), col("a_id"), col("frnk"))
-      .collect().groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq).toMap
-
-    assert(multi.size == n && declarative.size == n)
-    val diff = multi.collect { case (id, cs) if declarative(id) != cs =>
-      (id, cs, declarative(id)) }
-    assert(diff.isEmpty, s"nf=2 kernel diverges from the declarative frnk<=2 " +
-      s"window on ${diff.size} rows, e.g. ${diff.take(3)}")
-    val rankDiff = multi.collect { case (id, cs) if cs.head != single(id) => id }
+    val multi = kernelCells(e, anchors, kc, ac, nf = 2)
+    val single = kernelCells(e, anchors, kc, ac, nf = 1)
+    assert(multi.size == e.count())
+    assertSame("nf=2 kernel", multi, declarativeCells(e, anchors, kc, ac, nf = 2))
+    val rankDiff = multi.collect { case (id, cs) if cs.take(1) != single(id) => id }
     assert(rankDiff.isEmpty,
       s"nf=2 rank-1 cell diverges from single-assign on ${rankDiff.size} rows")
     assert(multi.values.forall(_.length == 2),
@@ -279,7 +227,7 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("nf=2 zero-norm rows fall back to the first two candidates deterministically") {
     val s2 = spark; import s2.implicits._
-    val anchors: Seq[(Long, Seq[Float], Double)] = Seq(
+    val anchors: Seq[Anchor] = Seq(
       (10L, Seq(1f, 0f, 0f), 1.0),
       (20L, Seq(0f, 1f, 0f), 1.0),
       (30L, Seq(0f, 0f, 1f), 1.0))
@@ -292,24 +240,19 @@ class NearestCellsTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
         NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, 3, 2,
           nf = 2).as("cells"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
-    // Zero row: first-unused fallback at both levels → candidates in
-    // pick order (cells 10, 20), take the first two.
+    // Zero row: every score ties (NaN), so both levels rank by id —
+    // coarse cells 10, 20, then their fine anchors 10, 20.
     assert(got(1L) == Seq(10L, 20L), s"got ${got(1L)}")
     // Healthy row: best fine 30, runner-up 20 (0.1 on the y axis).
     assert(got(2L) == Seq(30L, 20L), s"got ${got(2L)}")
   }
 
   test("kernel assignment is identical on the interpreted (NO_CODEGEN) path") {
-    val e = graft.sources.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm"))
+    val e = corpus()
     val hash = (col("vec_id") % 1000003L) * 2654435761L % 1000000007L
     val anchors = e.orderBy(hash, col("vec_id")).limit(88).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq
-    def run(): Map[Long, Long] =
-      e.select(col("vec_id"),
-          NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, 10).as("cell"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    def run(): Map[Long, Seq[Long]] = kernelCells(e, anchors, 10, ac = 1, nf = 1)
     val gen = run()
     val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")

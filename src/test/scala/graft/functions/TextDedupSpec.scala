@@ -145,6 +145,18 @@ class TextDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(not(col("fast") <=> col("slow")))
       assert(diffs.count() == 0, s"native vs declarative mismatch: ${diffs.take(3).toSeq}")
     }
+    // A null hs array: the native kernel returns a null signature, the
+    // declarative spelling K nulls. They differ as signatures, so the
+    // equivalence that matters is downstream: identical band keys.
+    val nullHs = Seq((9007L, null.asInstanceOf[Seq[java.lang.Long]])).toDF("id", "hs")
+    for (df <- Seq(corpus, adversarial, nullHs)) {
+      val diffs = df.select(col("id"),
+          DedupFunctions.bandKeys(DedupFunctions.minhashSignature(col("hs"))).as("fast"),
+          DedupFunctions.bandKeys(
+            DedupFunctions.minhashSignatureDeclarative(col("hs"))).as("slow"))
+        .filter(not(col("fast") <=> col("slow")))
+      assert(diffs.count() == 0, s"native vs declarative band keys: ${diffs.take(3).toSeq}")
+    }
   }
 
   test("SimHash: native codegen kernel ≡ the UDF spelling") {

@@ -60,10 +60,12 @@ class WallPlanesTilingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val k = 40
     val stacked = base ++ base.flatMap { case (id, x, y, z) =>
       (1 to k).map(c => (1000L * c + id, x, y, z)) }
-    def labels(rows: Seq[(Long, Double, Double, Double)]): Map[Long, Long] =
-      WallPlanes.tiledClusters(rows.toDF("cell_id", "f0", "f1", "f2"),
-          eps = 0.2, minSamples = 4, tiles = 4)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def labels(rows: Seq[(Long, Double, Double, Double)]): Map[Long, Long] = {
+      val (out, finish) = WallPlanes.tiledClusters(rows.toDF("cell_id", "f0", "f1", "f2"),
+        eps = 0.2, minSamples = 4, tiles = 4)
+      try out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally { finish(); out.unpersist(blocking = false) }
+    }
     val lb = labels(base)
     val ls = labels(stacked)
     assert(lb.values.toSet.size == 3 && !lb.values.exists(_ == -1L))

@@ -420,7 +420,8 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // structural guard above; this pins the committed numbers too).
     val guarded = Seq("q64_interval_join", "q81_iou_pairs", "q01_pricing_summary",
       "q05_broadcast_join", "q41_ngram_jaccard", "q78_mix_sample",
-      "q100_budget_select", "q108_late_watermark")
+      "q100_budget_select", "q108_late_watermark", "q49_ann_recall", "q50_knn_brute",
+      "q51_ivf_knn", "q54_ivf_nprobe", "q109_ivf_twolevel", "q111_ivf_cap_directprobe")
     val drift = guarded.flatMap { q =>
       val fresh = graft.PlanAudit.shapeOf(spark, q, dir)
       val committed = shapeIn(q)

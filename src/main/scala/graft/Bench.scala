@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.Registry
 object Bench {
 
   /** One timed result: a query either materialized cleanly (error = None)
@@ -12,14 +13,16 @@ object Bench {
       cacheBuildMs: Long = 0L)
 
   /** The timed sweep, factored out of main so BenchHarnessSpec can run it
-    * over a planted failing query. Deterministic name order: per-query
-    * numbers comparable across rounds.
+    * over a planted failing query. Runs through
+    * [[graft.queries.Registry.sweep]]: deterministic name order
+    * (per-query numbers comparable across rounds), and each query's
+    * declared releases fire after its timer.
     */
   private[graft] def runSweep(
       spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[QueryRun] = {
-    val sweptNames = queries.map(_._1).toSet
-    val runs = queries.sortBy(_._1).map { case (name, fn) =>
+    val fns = queries.toMap
+    Registry.sweep(spark, sfDir, queries.map(_._1)) { name =>
       val t0 = System.nanoTime()
       // Honest materialization: the noop sink evaluates EVERY column of
       // every row (unlike count(), which lets Catalyst prune unreferenced
@@ -27,20 +30,13 @@ object Bench {
       // NonFatal only: a fatal VM error (OOME, StackOverflow) must kill
       // the sweep loudly — recording it as an ordinary query error and
       // continuing on a corrupted JVM would manufacture garbage timings
-      // for every later query (the same rationale as the detections-
-      // ensure guard in main).
+      // for every later query (the same rationale as Registry.prepare).
       val err =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        try { fns(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case scala.util.control.NonFatal(e) =>
           Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      // Post-timer: drop SessionCache entries whose last consumer (in
-      // this sorted order) just ran — bounds live storage over the sweep.
-      // `.get`: a name outside the registry (spec-planted queries) simply
-      // has no declared releases.
-      graft.queries.Registry.byName.get(name).toSeq.flatMap(_.releases)
-        .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
       // SessionCache entries built DURING this query (eagerly
       // materialized and timed at the build site) attribute here: the
       // artifact's cache_build_ms separates one-time cache construction
@@ -79,17 +75,6 @@ object Bench {
       }
       QueryRun(name, dt, err, builtMs)
     }
-    // Release points declared on queries NOT in this sweep (ADVICE r18
-    // #3: a BENCH_ONLY/SKIP set excluding q54 left embN+annIndex live
-    // for the session — one pair per corpus dir). Firing the excluded
-    // queries' declared releases here reaches the same post-sweep cache
-    // state as a full sweep; session-lifetime entries (srpTightDupMass)
-    // declare no release point and stay untouched. Untimed: after the
-    // last query's timer.
-    graft.queries.Registry.all.filterNot(q => sweptNames(q.name))
-      .flatMap(_.releases).distinct
-      .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
-    runs
   }
 
   /** Reclaim threshold for the post-query gc gate: well under the
@@ -523,15 +508,11 @@ object Bench {
         s"[bench] SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknownOnly.toSeq.sorted.mkString(",")}")
       sys.exit(2)
     }
-    // The detections input table (see pipeline.DetectionsTable): at scale
-    // detections is an input TABLE the upstream Dag materialized, not a
-    // per-query derivation — ensure it here (setup, like the driver's
-    // testdata generation) so the sweep reads the production shape.
-    // Best-effort: a failed materialization (full /tmp, permissions)
-    // must degrade to the in-query derivation, not kill the sweep
-    // before a single query has run.
+    // Input tables (Registry.inputTables): at scale these are tables the
+    // upstream Dag materialized, not per-query derivations — ensure and
+    // seed them here, as set-up, so the sweep reads the production shape.
     //
-    // Under ONLY the ensure is skipped outright: a whitelist probe runs
+    // Under ONLY the set-up is skipped outright: a whitelist probe runs
     // at corpus scales where building the non-selected families' tables
     // (detections at sf1000 is ~90 GB) would fill the disk before the
     // first selected query ran. Committed tables are still USED if
@@ -541,43 +522,7 @@ object Bench {
     // documents, not hides.
     if (only.nonEmpty)
       System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY set: skipping input-table ensure/seed")
-    else
-    Seq(graft.pipeline.DetectionsTable, graft.pipeline.WallFeaturesTable,
-        graft.queries.ShinglesTable, graft.queries.DedupClustersTable,
-        // The grouping table too (same reason as the r13 q41 fix):
-        // without it a sweep whose /tmp happens to lack a committed
-        // grouped_detections runs the grouping kernel in-sweep — q80's
-        // time gains a cache_build bill AND the sweep-kernel skew
-        // accumulators double (the grouping kernel enumerates the same
-        // y-overlap pairs as q81's sweep), so pairs_enumerated reads 2x
-        // across rounds for a disk accident (measured r13→r14: 104.7M
-        // vs 209.4M at sweeps=2). WallClustersTable is deliberately NOT
-        // here: no bench query reads it (it exists only as q83's
-        // eps-oracle reference, Verify's job), and its GLOBAL DBSCAN
-        // kernel is gate-SF-sized by design — ensuring it at a
-        // rehearsal SF OOMs on the O(n²) adjacency (measured at sf10:
-        // 2.5M wall features).
-        graft.queries.GroupedDetectionsTable,
-        // The ANN serving index (VERDICT r17 #6): ensure + seed so the
-        // IVF queries read the persisted anchors/route on every sweep —
-        // the index build (count + TakeOrdered) lands in setup, and
-        // reuse ticks run zero full-corpus jobs before the query plan.
-        graft.queries.AnnIndexTable).foreach { t =>
-      // ensure + seed: a FRESH materialization of the dedup tables seeds
-      // shared SessionCache entries as a side effect of building through
-      // the cached readers ("build cost lands in setup" — by design);
-      // seedSessionCaches replays that on the REUSE path, so per-query
-      // bench numbers never depend on whether a committed table happened
-      // to pre-exist (the r12↔r13 q41 0.14↔1.97 swing was exactly this
-      // asymmetry: a warm jacPairs in r12's fresh-ensure setup, billed
-      // to q41 under r13's reuse).
-      try { t.ensure(spark, sfDir); t.seedSessionCaches(spark, sfDir) }
-      catch { case scala.util.control.NonFatal(e) =>
-        // NonFatal: an OOM'd JVM must die loudly, not continue into a
-        // sweep that would manufacture garbage numbers.
-        System.err.println(s"[bench] ${t.tableName} table unavailable, deriving in-query: $e")
-      }
-    }
+    else Registry.prepare(spark, sfDir, Registry.inputTables, seed = true)
 
     // Best-of-N sweeps (default 2): single-sweep numbers manufactured
     // 1.5–11× phantom regressions in three consecutive rounds, every
@@ -646,8 +591,7 @@ object Bench {
           // releases below either way).
           val rung = graft.pipeline.SessionCache.getOrBuildValue(
             spark, s"srpArm:$sfDir")(Integer.valueOf(-1)).intValue()
-          recallQs.foreach(q => graft.queries.Registry.byName(q).releases
-            .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir")))
+          recallQs.foreach(Registry.release(spark, sfDir, _))
           Some((counts(0), counts(1), rung))
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] recall measurement failed: $e"); None
@@ -674,8 +618,7 @@ object Bench {
             .join(exactDf, Seq("a_id", "b_id")).count()
           exactDf.unpersist()
           Seq("q41_ngram_jaccard", "q42_minhash_lsh", "q43_simhash")
-            .foreach(q => graft.queries.Registry.byName(q).releases
-              .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir")))
+            .foreach(Registry.release(spark, sfDir, _))
           Map("q42_minhash" -> (mh, exact), "q43_simhash_vs_jaccard" -> (sh, exact))
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] family recall measurement failed: $e"); Map.empty

@@ -48,17 +48,17 @@ object PlanAudit {
   }
 
   /** One query's shape, computed HERMETICALLY so the artifact is stable
-    * across JVMs and query order: AQE off (restored after), the dedup/
-    * detections input tables committed (their presence changes a scan
-    * from inline-derivation to table read — the production shape Bench
-    * measures), and this dir's SessionCache entries dropped first so
+    * across JVMs and query order: AQE off (restored after), the
+    * Registry's input tables committed but not seeded (their presence
+    * changes a scan from inline-derivation to table read — the
+    * production shape Bench measures), and this dir's SessionCache entries dropped first so
     * every query plans against cold caches rather than whatever a
     * previous query happened to build. Safe to call from specs sharing
     * a session.
     */
   def shapeOf(spark: org.apache.spark.sql.SparkSession, name: String,
       dir: String): Map[String, Int] = {
-    ensureTables(spark, dir)
+    graft.queries.Registry.prepare(spark, dir, graft.queries.Registry.inputTables, seed = false)
     val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     graft.pipeline.SessionCache.liveKeys(spark)
@@ -67,20 +67,6 @@ object PlanAudit {
     try shape(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
     finally spark.conf.set("spark.sql.adaptive.enabled", prior)
   }
-
-  /** Commit the materialized input tables (same set Bench ensures) so
-    * audited plans read the production table shape. Idempotent and
-    * cheap at the audit SF; best-effort like Bench's setup.
-    */
-  def ensureTables(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    Seq(graft.pipeline.DetectionsTable, graft.pipeline.WallFeaturesTable,
-        graft.queries.ShinglesTable, graft.queries.DedupClustersTable,
-        graft.queries.GroupedDetectionsTable).foreach { t =>
-      try t.ensure(spark, dir)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[planaudit] ${t.tableName} unavailable: $e")
-      }
-    }
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.json")

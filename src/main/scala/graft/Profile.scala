@@ -50,15 +50,7 @@ object Profile {
     spark.sparkContext.setLogLevel("ERROR")
     // Same setup as Bench: ensure + seed input tables so the profiled
     // plan is the production table-read shape, not in-query derivation.
-    Seq(graft.pipeline.DetectionsTable, graft.pipeline.WallFeaturesTable,
-        graft.queries.ShinglesTable, graft.queries.DedupClustersTable,
-        graft.queries.GroupedDetectionsTable,
-        graft.queries.AnnIndexTable).foreach { t =>
-      try { t.ensure(spark, sfDir); t.seedSessionCaches(spark, sfDir) }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[profile] ${t.tableName} unavailable: $e")
-      }
-    }
+    graft.queries.Registry.prepare(spark, sfDir, graft.queries.Registry.inputTables, seed = true)
     val tally = new StageTally
     spark.sparkContext.addSparkListener(tally)
     names.foreach { name =>
@@ -79,8 +71,7 @@ object Profile {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        graft.queries.Registry.byName.get(name).toSeq.flatMap(_.releases)
-          .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
+        graft.queries.Registry.release(spark, sfDir, name)
         val builtMs = graft.pipeline.SessionCache.drainBuildLog(spark).map(_._2).sum
         // Listener events are posted async; a short settle beats reaching
         // into the private listener bus for a measurement harness.

@@ -42,13 +42,9 @@ object RunDag {
     if (dagName == "inputs") {
       // ensure() is always an incremental tick (fingerprint-gated reuse);
       // staleness here is structural, so --no-refresh has nothing to add.
-      Seq(graft.pipeline.DetectionsTable, graft.pipeline.WallFeaturesTable,
-          graft.queries.ShinglesTable, graft.queries.DedupClustersTable,
-          graft.queries.GroupedDetectionsTable,
-          // The ANN serving index (r18): the one-command path a
-          // production deployment uses to (re)build the persisted
-          // anchors+route before serving sessions start.
-          graft.queries.AnnIndexTable).foreach { t =>
+      // Not Registry.prepare: a scheduled job fails loudly instead of
+      // degrading to in-query derivation, and reports each table's time.
+      graft.queries.Registry.inputTables.foreach { t =>
         val t0 = System.nanoTime()
         val p = t.ensure(spark, sfDir)
         println(f"${t.tableName}%-16s ${(System.nanoTime() - t0) / 1000000}%6d ms  $p")

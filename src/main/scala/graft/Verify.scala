@@ -1,75 +1,48 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Dump each query's result to `outDir/<name>` as one parquet file,
+    * through [[graft.queries.Registry.sweep]] (name order, declared
+    * releases after each write). A query that throws is logged to stderr
+    * and skipped, so one broken query never costs the rest of the dump.
+    * NonFatal only: a fatal VM error aborts the dump instead of leaving a
+    * partial sweep that the oracle compare would read as complete.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Unit = {
+    val fns = queries.toMap
+    graft.queries.Registry.sweep(spark, sfDir, queries.map(_._1)) { name =>
+      try fns(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Materialize the detections input table up front (see
-    // pipeline.DetectionsTable): the correctness sweep then exercises the
-    // production table-read path, and q85's oracle checks the persisted
-    // table round-trip end-to-end. Best-effort: a failed materialization
-    // degrades to the in-query derivation (value-identical), never to a
-    // dead sweep.
-    // Rehearsal knob (never set by the driver): skip named table
-    // ensures at scale SFs — WallClustersTable's GLOBAL DBSCAN kernel
-    // is gate-SF-sized by design (it exists as q83's eps-oracle
-    // reference); ensuring it at sf1+ grinds O(n²) adjacency for hours
-    // (same hazard Bench documents by omitting it entirely). The sweep
-    // degrades to in-query derivation exactly as a failed ensure would.
-    val skipTables = sys.env.get("SPARK_GRAFT_SKIP_TABLES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-    Seq(graft.pipeline.DetectionsTable, graft.pipeline.WallFeaturesTable,
-        graft.queries.ShinglesTable, graft.queries.DedupClustersTable,
-        // Eps-oracle support (VERDICT r11 #3 / r12 #2): the grouping and
-        // clustering kernels' outputs as tables the q80/q82/q83/q86 eps
-        // SQL can read_parquet.
-        graft.queries.GroupedDetectionsTable,
-        graft.queries.WallClustersTable,
-        // The ANN serving index (VERDICT r17 #6): the sweep then
-        // exercises the persisted-index read path the way production
-        // serving would — q49/q51/q54/q109 stay oracle-green reading it.
-        graft.queries.AnnIndexTable)
-      .filterNot(t => skipTables.contains(t.tableName)).foreach { t =>
-      try { t.ensure(spark, sfDir); () }
-      catch { case scala.util.control.NonFatal(e) =>
-        // NonFatal: a fatal VM error must abort the dump, not produce a
-        // partial sweep the driver would compare as if complete.
-        System.err.println(s"[verify] ${t.tableName} table unavailable, deriving in-query: $e")
-      }
-    }
+    // Commit the input tables up front, unseeded: the correctness sweep
+    // then exercises the production table-read path, q85's oracle checks
+    // the persisted detections round-trip end-to-end, and the ANN index
+    // keeps q49/q51/q54/q109 oracle-green reading it. WallClustersTable
+    // is Verify's alone: with the grouping table it is what the
+    // q80/q82/q83/q86 eps SQL reads.
+    graft.queries.Registry.prepare(spark, sfDir,
+      graft.queries.Registry.inputTables :+ graft.queries.WallClustersTable, seed = false)
     // Optional trailing args restrict the dump to named queries — the
     // local fast loop (tools/check_subset.py); the driver passes none.
-    // Sorted by name so QueryDef release points (declared against this
-    // order) fire after an entry's true last consumer.
-    val swept = SparkEntry.queries.keySet
-      .filter(name => only.isEmpty || only(name))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => swept(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      graft.queries.Registry.byName(name).releases
-        .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
-    }
-    // Release points declared on queries EXCLUDED from this sweep
-    // (ADVICE r18 #3: a q110-only subset run left srpsigTight live for
-    // the session because its release rides q110's slot, but a subset
-    // EXCLUDING q54 likewise left embN+annIndex live). Firing them here
-    // reaches the same post-sweep cache state as the full sweep;
-    // deliberately-unreleased session-lifetime entries (srpTightDupMass)
-    // declare no release point and stay untouched.
-    graft.queries.Registry.all.filterNot(q => swept(q.name))
-      .flatMap(_.releases).distinct
-      .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
+    dump(spark, sfDir, outDir,
+      SparkEntry.queries.toSeq.filter { case (name, _) => only.isEmpty || only(name) })
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Jsons.quote(k)}: ${Jsons.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -22,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * life. Release is purely a storage knob: a consumer arriving after a
   * release simply rebuilds the entry through [[getOrPersist]], so a wrong
   * release point costs recompute, never correctness. Query definitions
-  * declare their release points ([[graft.queries.QueryDef.releases]]) and
-  * the sweep harnesses (Verify/Bench) fire them after each query's
+  * declare their release points ([[graft.queries.QueryDef]]) and
+  * [[graft.queries.Registry.sweep]] fires them after each query's
   * action completes — releasing mid-plan would drop storage a pending
   * lazy consumer was counting on. Releasing a key whose build is still
   * in flight is also safe: the builder detects the removal when it

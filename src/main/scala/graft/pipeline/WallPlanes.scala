@@ -138,11 +138,10 @@ object WallPlanes {
   /** Global-kernel row ceiling for [[labeledAuto]]: [[Dbscan.fit]]
     * precomputes full neighbor lists in ONE task, so a dense corpus of
     * n points can hold O(n²) neighbor ints — the sf1 gate's first run
-    * (176k features) OOM'd a 24g driver there (VERDICT r18 #3/#4, the
-    * `SPARK_GRAFT_SKIP_TABLES` episode). 20k keeps every historical
-    * gate SF on the exact global kernel (sf0.1 = 17.6k features) while
-    * bounding the worst-case (single dense clique) neighbor storage at
-    * ~4·10⁸ ints ≈ 1.6 GB.
+    * (176k features) OOM'd a 24g driver there (VERDICT r18 #3/#4).
+    * 20k keeps every historical gate SF on the exact global kernel
+    * (sf0.1 = 17.6k features) while bounding the worst-case (single
+    * dense clique) neighbor storage at ~4·10⁸ ints ≈ 1.6 GB.
     */
   val maxGlobalRows = 20000L
 

@@ -83,69 +83,6 @@ object Domain {
       .groupBy(col("file_name")).as[String, PanoRow]
   }
 
-  /** Per-panorama SWEEP-LINE pair enumeration: the kernel alternative to
-    * the banded equi-join. groupByKey(file_name) (the same bounded-per-
-    * panorama shape as the greedy grouping kernel), sort boxes by y1
-    * into primitive arrays, and for each box scan forward only while
-    * y1(j) < y2(i) — enumerating EXACTLY the y-overlapping pairs (26.5M
-    * at sf0.1 vs the band join's 44.6M candidate rows, with no
-    * per-candidate join-row materialization at all). The θ-interval
-    * precondition and the [[org.apache.spark.sql.graft.IouKernel]] call
-    * are the same answer-preserving steps as the join form, so the pair
-    * set and every IoU bit are identical (PairEnumerationPropertySpec
-    * checks both forms against the naive all-pairs on adversarial
-    * boxes). At 100 TB the shuffle is one hash partition by file_name —
-    * no replication at all — and the per-task cost is bounded by the
-    * per-panorama box count exactly like q80's kernel.
-    */
-  /** Per-JVM kernel warm-up (r16 JIT slow-mode A/B arm, VERDICT r15
-    * #1), gated by `-Dgraft.kernelWarmup=1` (shipped to executors via
-    * SPARK_GRAFT_EXECUTOR_OPTS): before the first REAL sweep in this
-    * JVM, run the actual [[sweepRowPairs]]/[[org.apache.spark.sql.graft
-    * .IouKernel]] methods over a synthetic 256-box panorama enough
-    * times (~50k invocations, ~8M inner iterations) to cross the
-    * tier-4 invocation thresholds, so the first production task enters
-    * with C2 code in place rather than racing the compiler. A lazy val
-    * on the object = exactly once per executor JVM; cost ≈ 10 ms.
-    * Referenced (not just defined) inside both sweep closures so the
-    * warm-up provably runs executor-side, where the bimodal mode lives.
-    */
-  private lazy val kernelWarmed: Boolean = {
-    if (sys.props.get("graft.kernelWarmup").contains("1")) {
-      val rnd = new java.util.Random(42)
-      val rows = Array.tabulate(256) { k =>
-        val x1 = rnd.nextDouble() * 5000; val y1 = rnd.nextDouble() * 2000
-        PanoRow("warm", k.toLong, x1, y1, x1 + 40 + rnd.nextDouble() * 200,
-          y1 + 40 + rnd.nextDouble() * 200)
-      }
-      val p = new PanoArrays(rows, 5472.0 * 0.95)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
-      var sink = 0L
-      var pass = 0
-      while (pass < 200) {
-        var i = 0
-        while (i < p.n) {
-          sink += sweepRowPairs(i, p, "warm", 5472.0, 2736.0, 0.999, out)
-          i += 1
-        }
-        out.clear()
-        pass += 1
-      }
-      val marked = new Array[Boolean](p.n)
-      pass = 0
-      while (pass < 200) {
-        var i = 0
-        while (i < p.n) {
-          sink += sweepRowPartnered(i, p, marked, 5472.0, 2736.0)
-          i += 1
-        }
-        java.util.Arrays.fill(marked, false)
-        pass += 1
-      }
-      sink != Long.MinValue // data-dependent: the loop cannot be elided
-    } else true
-  }
-
   /** One outer-row step of the pair sweep: scan forward from i while y
     * overlaps, kernel + emit. A SEPARATE small method on purpose, not
     * loop-fusion pedantry (r15 multi-JVM skew incident, measured): with
@@ -185,6 +122,21 @@ object Domain {
     pairs
   }
 
+  /** Per-panorama SWEEP-LINE pair enumeration: the kernel alternative to
+    * the banded equi-join. groupByKey(file_name) (the same bounded-per-
+    * panorama shape as the greedy grouping kernel), sort boxes by y1
+    * into primitive arrays, and for each box scan forward only while
+    * y1(j) < y2(i) — enumerating EXACTLY the y-overlapping pairs (26.5M
+    * at sf0.1 vs the band join's 44.6M candidate rows, with no
+    * per-candidate join-row materialization at all). The θ-interval
+    * precondition and the [[org.apache.spark.sql.graft.IouKernel]] call
+    * are the same answer-preserving steps as the join form, so the pair
+    * set and every IoU bit are identical (PairEnumerationPropertySpec
+    * checks both forms against the naive all-pairs on adversarial
+    * boxes). At 100 TB the shuffle is one hash partition by file_name —
+    * no replication at all — and the per-task cost is bounded by the
+    * per-panorama box count exactly like q80's kernel.
+    */
   private[graft] def sweepIouPairs(
       det: org.apache.spark.sql.DataFrame, w: Double, h: Double,
       threshold: Double): org.apache.spark.sql.DataFrame = {
@@ -195,7 +147,6 @@ object Domain {
     val denseCutoff = graft.pipeline.SweepStats.threshold(spark)
     panoGroups(det)
       .flatMapGroups { (fn, it) =>
-        require(kernelWarmed)
         val p = new PanoArrays(it.toArray, seamSpan)
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
         var pairs = 0L
@@ -280,7 +231,6 @@ object Domain {
     val denseCutoff = graft.pipeline.SweepStats.threshold(spark)
     panoGroups(det)
       .flatMapGroups { (fn, it) =>
-        require(kernelWarmed)
         val p = new PanoArrays(it.toArray, seamSpan)
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long, Long, Double)]
         val marked = new Array[Boolean](p.n)
@@ -325,7 +275,6 @@ object Domain {
     val denseCutoff = graft.pipeline.SweepStats.threshold(spark)
     panoGroups(det)
       .flatMapGroups { (fn, it) =>
-        require(kernelWarmed)
         val p = new PanoArrays(it.toArray, seamSpan)
         val marked = new Array[Boolean](p.n)
         var pairs = 0L
@@ -691,9 +640,8 @@ object WallClustersTable extends graft.pipeline.InputTable(
   /** SELF-BOUNDED since r19 (VERDICT r18 #4): the ensure labels through
     * the global kernel only up to [[graft.pipeline.WallPlanes.maxGlobalRows]]
     * features (every gate SF — labels byte-identical to v1), and through
-    * the spec-proven-identical TILED kernel above it, so a scale-SF
-    * Verify no longer needs the `SPARK_GRAFT_SKIP_TABLES` carve-out
-    * (the r18 sf1 gate's 24g OOM).
+    * the spec-proven-identical TILED kernel above it, so Verify can
+    * ensure it at any SF (the r18 sf1 gate OOM'd a 24g driver here).
     */
   protected def dag(sfDir: String): Seq[graft.pipeline.Dag.Stage] =
     Seq(graft.pipeline.Dag.Stage("wall_clusters", Nil,

@@ -14,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                 Verify dumps these as `oracle_exclusions.json` so the
   *                 driver's gate can tell "explicitly excluded, verified
   *                 elsewhere" from "unverified" (ADVICE r9 #2).
-  * @param releases SessionCache key prefixes whose LAST consumer (in the
-  *                 harnesses' sorted-by-name sweep order) is this query:
-  *                 Verify/Bench release them once this query's action
+  * @param releases SessionCache key prefixes whose LAST consumer (in
+  *                 [[Registry.sweep]]'s by-name order) is this query: the
+  *                 sweep releases them once this query's action
   *                 completes. A release point that turns out early (a
   *                 spec or ad-hoc caller arriving later) just rebuilds
   *                 the entry — storage knob, never correctness.

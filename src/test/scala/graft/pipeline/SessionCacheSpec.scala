@@ -151,22 +151,31 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a full declared-query sweep keeps live entries bounded (releases fire)") {
-    // Mirrors the Verify/Bench harness loop at sf0.001: run every
-    // declared query in sorted order, fire its QueryDef releases, and
-    // assert the SessionCache high-water mark stays well below the
-    // total number of cacheable stages — i.e. entries actually retire
-    // as their last consumers pass, instead of accumulating for the
-    // life of the app.
+    // Runs the harnesses' sweep (Registry.sweep) at sf0.001 over every
+    // declared query and asserts the SessionCache high-water mark stays
+    // well below the total number of cacheable stages — i.e. entries
+    // actually retire as their last consumers pass, instead of
+    // accumulating for the life of the app — and that no release point
+    // fires early: a key built twice in one sweep was released before a
+    // later consumer read it.
     val dir = "/root/testdata/sf0.001"
     // Clean slate: entries other suites left behind are caches, so
     // releasing them is always safe (consumers rebuild).
     SessionCache.liveKeys(spark).foreach(k => SessionCache.release(spark, k))
+    SessionCache.drainBuildLog(spark)
     var highWater = 0
-    graft.queries.Registry.all.sortBy(_.name).foreach { qd =>
-      try qd.build(spark, dir).write.format("noop").mode("overwrite").save()
+    val builtBy = scala.collection.mutable.Map.empty[String, String]
+    val rebuilt = scala.collection.mutable.ArrayBuffer.empty[String]
+    graft.queries.Registry.sweep(spark, dir, graft.queries.Registry.all.map(_.name)) { name =>
+      try graft.queries.Registry.byName(name).build(spark, dir)
+        .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () } // streaming queries need no cache either way
       highWater = math.max(highWater, SessionCache.liveKeys(spark).size)
-      qd.releases.foreach(k => SessionCache.release(spark, s"$k:$dir"))
+      SessionCache.drainBuildLog(spark).foreach { case (k, _) =>
+        builtBy.get(k).foreach(first =>
+          rebuilt += s"$k built by $first and again by $name")
+        builtBy(k) = name
+      }
     }
     val after = SessionCache.liveKeys(spark)
     // <= 3 since r18: srpTightDupMass (one Double of per-corpus
@@ -184,5 +193,7 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the srpTightDupMass precedent). Still well below the ~30
     // cacheable stages — the retirement property this test pins.
     assert(highWater <= 13, s"high-water mark $highWater — entries not retiring")
+    assert(rebuilt.isEmpty,
+      s"a release point fired before a later consumer: ${rebuilt.mkString("; ")}")
   }
 }

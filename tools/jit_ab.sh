@@ -6,8 +6,6 @@
 # the adversarially skewed corpus under local-cluster, N times per arm:
 #
 #   base      - current defaults (r15's per-row-method restructuring in place)
-#   warmup    - -Dgraft.kernelWarmup=1: per-executor-JVM warm-up of the
-#               actual sweep methods past tier-4 thresholds before first use
 #   codecache - -XX:-UseCodeCacheFlushing -XX:ReservedCodeCacheSize=512m
 #   c2only    - -XX:-TieredCompilation (C2 only, no tiered handoff)
 #
@@ -22,14 +20,13 @@ RUNS=${2:-6}
 LOGDIR=${3:-/tmp/jit_ab}
 shift 3 2>/dev/null || true
 ARMS=("$@")
-[ ${#ARMS[@]} -eq 0 ] && ARMS=(base warmup codecache c2only)
+[ ${#ARMS[@]} -eq 0 ] && ARMS=(base codecache c2only)
 mkdir -p "$LOGDIR"
 cd "$(dirname "$0")/.."
 
 opts_for() {
   case "$1" in
     base)      echo "" ;;
-    warmup)    echo "-Dgraft.kernelWarmup=1" ;;
     codecache) echo "-XX:-UseCodeCacheFlushing -XX:ReservedCodeCacheSize=512m" ;;
     c2only)    echo "-XX:-TieredCompilation" ;;
     # Hypothesis arm: the hot group loop is ONE activation, so it only

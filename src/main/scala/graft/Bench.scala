@@ -86,7 +86,7 @@ object Bench {
   private def scratchRoots: Array[String] =
     sys.props.get("spark.local.dir")
       .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-      .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
+      .getOrElse(Fs.stateRoot)
       .split(",").map(_.trim).filter(_.nonEmpty)
 
   private def isScratchName(n: String): Boolean =
@@ -415,8 +415,7 @@ object Bench {
       "heap_mb" -> heapMb.toString,
       "cpus" -> Runtime.getRuntime.availableProcessors().toString,
       "master" -> Jsons.quote(c.get("spark.master", "?")),
-      "local_dirs" -> Jsons.quote(
-        c.get("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "java.io.tmpdir"))),
+      "local_dirs" -> Jsons.quote(scratchRoots.mkString(",")),
       "io_codec" -> Jsons.quote(c.get("spark.io.compression.codec", "lz4")),
       "shuffle_spill_compress" -> Jsons.quote(c.get("spark.shuffle.spill.compress", "true")),
       "executor_memory" -> Jsons.quote(c.get("spark.executor.memory", "driver-local")),

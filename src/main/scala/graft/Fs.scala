@@ -8,6 +8,15 @@ package graft
   */
 private[graft] object Fs {
 
+  /** The one root of every path the program keeps between runs: input
+    * tables (`graft_dag/`), reader fixtures (`graft_fixtures/`) and
+    * RunDag's default work dirs. It is the JVM's `java.io.tmpdir`, so a
+    * launcher that passes `-Djava.io.tmpdir=<fresh dir>` starts a run
+    * from no state without touching `/tmp`. Read per call, like the
+    * property.
+    */
+  def stateRoot: String = System.getProperty("java.io.tmpdir", "/tmp")
+
   def rmTree(f: java.io.File): Unit = {
     val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree); f.delete(): Unit
   }

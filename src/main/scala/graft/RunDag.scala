@@ -25,7 +25,7 @@ object RunDag {
       case _ => ("street", positional)
     }
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-    val workDir = rest.drop(1).headOption.getOrElse(s"/tmp/graft_dag_$dagName")
+    val workDir = rest.drop(1).headOption.getOrElse(defaultWorkDir(dagName))
     val refresh = !flags.contains("--no-refresh")
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -75,4 +75,8 @@ object RunDag {
       println(f"${"total"}%-16s jobs=${jobs.get}%8d  $totalMs%6d ms")
     }
   }
+
+  /** Where a DAG's stage tables go when no workDir is given. */
+  private[graft] def defaultWorkDir(dagName: String): String =
+    s"${Fs.stateRoot}/graft_dag_$dagName"
 }

@@ -35,41 +35,38 @@ object Sessions {
       // refuses the file (PARQUET_TYPE_ILLEGAL). Tables.events converts
       // the long back to TimestampType.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r19 (guide §2.2 per-block overhead): below this reducer count
-      // Spark's bypass-merge shuffle writer opens ONE FILE PER REDUCER
-      // per map task (32 reducers × 32 map tasks = 1024 file
-      // creates/commits per tiny exchange) — profiled here at
-      // ~50-170 ms of executor time per map task on KB-sized shuffles,
-      // i.e. the dominant fixed cost of every small exchange in the
-      // sweep. Threshold 1 selects the serialized (Unsafe) writer — one
-      // spill file + index per task regardless of reducer count —
+      // Below this reducer count Spark's bypass-merge shuffle writer
+      // opens ONE FILE PER REDUCER per map task (32 reducers × 32 map
+      // tasks = 1024 file creates/commits per tiny exchange) — profiled
+      // here at ~50-170 ms of executor time per map task on KB-sized
+      // shuffles, i.e. the dominant fixed cost of every small exchange
+      // in the sweep. Threshold 1 selects the serialized (Unsafe) writer
+      // — one spill file + index per task regardless of reducer count —
       // measured 2-4× cheaper per task on the micro and no slower on
       // MB-sized shuffles. SCALE-NEUTRAL: any shuffle with > 200
       // reducers (every production-sized exchange) already takes the
       // serialized path; this only changes the small-reducer-count
-      // regime the local harness lives in. Env override restores the
-      // Spark default for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      // r20 (guide §1.2 per-task work / §7.2): the driver's generated-code
-      // cache (CodeGenerator.cache) holds 100 entries by default; a
-      // 111-query sweep creates several hundred distinct codegen
-      // fragments, so by the time sweep 2 re-plans a query its fragments
-      // have been evicted and every WholeStageCodegen unit pays Janino
-      // compilation AGAIN — and, because compilation produces a fresh
-      // class, the JVM also re-pays C2 JIT warm-up on code it already
-      // optimized. Profiled here: per-query warm-vs-cold deltas of
-      // 0.2-0.8 s (q06 1.49 cold / 0.71 warm, q101 1.19 / 0.42) with
-      // identical plans and shuffle bytes. 4096 entries keeps every
-      // fragment of the whole declared-query suite resident (~900
-      // needed), so repeated plans — the production serving shape as
-      // much as the bench's sweep 2 — reuse both the compiled class and
-      // its JIT state. Memory cost is bounded (generated classes are
-      // KB-sized; the cache is size-, not byte-bounded, and 4096 is two
-      // decades under any heap concern). Env override restores the Spark
-      // default for A/B.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // regime the local harness lives in.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      // The driver's generated-code cache (CodeGenerator.cache) holds
+      // 100 entries by default; a 111-query sweep creates several
+      // hundred distinct codegen fragments, so by the time sweep 2
+      // re-plans a query its fragments have been evicted and every
+      // WholeStageCodegen unit pays Janino compilation AGAIN — and,
+      // because compilation produces a fresh class, the JVM also re-pays
+      // C2 JIT warm-up on code it already optimized. Profiled here:
+      // per-query warm-vs-cold deltas of 0.2-0.8 s (q06 1.49 cold / 0.71
+      // warm, q101 1.19 / 0.42) with identical plans and shuffle bytes.
+      // 4096 entries keeps every fragment of the whole declared-query
+      // suite resident (~900 needed), so repeated plans — the production
+      // serving shape as much as the bench's sweep 2 — reuse both the
+      // compiled class and its JIT state. Memory cost is bounded
+      // (generated classes are KB-sized; the cache is size-, not
+      // byte-bounded, and 4096 is two decades under any heap concern). A
+      // STATIC conf: CodeGenerator sizes its cache once per JVM, so the
+      // first session in the JVM wins and a later builder's value is
+      // silently ignored.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Cached blocks that overflow the storage pool hit local disk
       // UNCOMPRESSED by default; the corpus-sized shared caches
       // (tokenArrays, shingleSets, srpsig) overflow by design one decade

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal scheduled-job surface (north-star "Spark DataFrame
   * transformations with scheduled jobs") — the reference's Dagster asset
@@ -32,39 +33,44 @@ object Dag {
     *   scan instead of reading the whole table — the boundary that
     *   matters when the handoff is 100 TB and a consumer wants one
     *   split.
-    * @param requireChecks fail-closed quality gates (VERDICT r13 #7):
-    *   each takes the CANDIDATE table — the written-but-uncommitted tmp
-    *   output, read back from parquet so the gate judges exactly the
-    *   bytes that would commit — and returns a [[graft.quality
-    *   .DataQuality]] report `(check, violations, total, metric, pass)`.
-    *   Any `pass = false` row aborts the stage BEFORE the commit swap:
-    *   the poisoned batch is deleted, the previously committed table
-    *   stays live (a daily tick keeps serving yesterday's good data),
-    *   and dependents never start. A real scheduled pipeline quarantines
-    *   a failing batch; metrics nobody consumes gate nothing.
-    * @param incrementalOn partition-level incremental refresh (VERDICT
-    *   r14 #1 — Dagster's partitioned assets, the machinery the
-    *   reference's README names): the named column must LEAD
-    *   `partitionBy`, and the stage promises its build is
-    *   PARTITION-WISE — output partition `v` is a function of the
-    *   inputs' partition-`v` data alone (map/filter/per-key-within-
-    *   partition aggregation). In exchange, a tick fingerprints each
-    *   input partition directory (names, lengths, mtimes — pure file
-    *   stats, NO Spark job), rebuilds only values whose fingerprint is
-    *   new or changed, feeds the build inputs FILTERED to those values
-    *   (partition pruning makes the scan a delta scan), applies the
-    *   quality gates to the delta candidate, and swaps just those
-    *   partition directories into the committed table. A day-2 tick
-    *   over an append-only corpus runs zero jobs over day-1 partitions;
-    *   at 100 TB that is the difference between a daily tick and a
-    *   daily full recompute. Inputs NOT partitioned by the column (a
-    *   dims table) join the stamp chain whole: any change rebuilds all
-    *   partitions. Crash-consistency: each partition swap is an atomic
-    *   rename and the stamp rewrites only after all swaps — a crash
-    *   mid-tick re-detects the unrecorded values as stale and rebuilds
-    *   just them. Single-scheduler contract: concurrent ticks over one
-    *   workDir from DIFFERENT processes are out of contract here (the
-    *   whole-table path keeps its cross-process race protocol).
+    * @param requireChecks fail-closed quality gates: each takes the
+    *   CANDIDATE table — the written-but-uncommitted tmp output, read
+    *   back from parquet so the gate judges exactly the bytes that would
+    *   commit — and returns a [[graft.quality.DataQuality]] report
+    *   `(check, violations, total, metric, pass)`. Any `pass = false`
+    *   row aborts the stage BEFORE the commit swap: the poisoned batch
+    *   is parked in `_quarantine/`, the previously committed table stays
+    *   live (a daily tick keeps serving yesterday's good data), and
+    *   dependents never start.
+    * @param incrementalOn partition-level incremental refresh (Dagster's
+    *   partitioned assets, the machinery the reference's README names):
+    *   the named column must LEAD `partitionBy`, and the stage promises
+    *   its build is PARTITION-WISE — output partition `v` is a function
+    *   of the inputs' partition-`v` data alone (map/filter/per-key-
+    *   within-partition aggregation). The stage runs through the same
+    *   runner as every other stage; what changes is its stamp chain.
+    *   Each input exposing `col=value` dirs contributes one `_p:<value>`
+    *   fingerprint per value (names, lengths, mtimes — pure file stats,
+    *   NO Spark job) instead of one whole-table entry; every other input
+    *   (a dims table, an unpartitioned corpus) stays in the static chain,
+    *   so any change there rebuilds the whole table. A tick whose static
+    *   chain is fresh rebuilds only the values whose fingerprint is new
+    *   or changed: the build's partitioned inputs arrive FILTERED to
+    *   those values (partition pruning makes the scan a delta scan), the
+    *   quality gates judge the delta candidate, and just those partition
+    *   directories swap into the committed table. A day-2 tick over an
+    *   append-only corpus runs zero jobs over day-1 partitions.
+    *   Crash-consistency: each partition swap is an atomic rename and the
+    *   stamp rewrites only after all swaps — a crash mid-tick re-detects
+    *   the unrecorded values as stale and rebuilds just them. A delta
+    *   whose output partition tokens do not round-trip to the stale input
+    *   tokens falls back to a whole-table build. Single-scheduler
+    *   contract: concurrent DELTA ticks over one workDir from different
+    *   processes are out of contract (whole-table commits keep the
+    *   cross-process race check). Fingerprints are file stats: on a
+    *   filesystem with coarse mtimes, a same-length in-place rewrite
+    *   within one granularity unit stays invisible — writers that
+    *   rewrite in place should touch the directory or use fresh names.
     * @param externalInputs name → partitioned-parquet path of inputs
     *   that are NOT stages of this DAG (the raw corpus a root ingests).
     *   They arrive in the build's map like upstream stages, and their
@@ -94,10 +100,11 @@ object Dag {
   /** A settled stage as its dependents see it: the run report, the
     * committed dir's stamp (for their chain checks), and the schema this
     * call built it with — `None` when the table was reused, raced in by
-    * a sibling, partitioned or incremental, so dependents infer it.
+    * a sibling or partitioned (every incremental stage is), so
+    * dependents infer it.
     */
   private final case class Settled(
-      run: StageRun, stamp: String, builtSchema: Option[org.apache.spark.sql.types.StructType])
+      run: StageRun, stamp: String, builtSchema: Option[StructType])
 
   /** Topological order with deterministic tie-breaking (declaration
     * order); throws on cycles and unknown deps.
@@ -157,6 +164,9 @@ object Dag {
     */
   private val pathLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  private def locked[T](path: String)(body: => T): T =
+    pathLocks.computeIfAbsent(path, _ => new Object).synchronized(body)
+
   private[pipeline] def isCommitted(dir: java.io.File): Boolean =
     new java.io.File(dir, CommitMarker).exists() ||
       new java.io.File(dir, "_SUCCESS").exists()
@@ -183,6 +193,17 @@ object Dag {
     */
   private val LayoutKey = "_partitionBy"
 
+  /** Reserved stamp-chain key recording the incremental column: toggling
+    * a stage between whole-table and incremental mode (either direction)
+    * must fail the chain equality once and rebuild into the new regime.
+    */
+  private val IncKey = "_incrementalOn"
+
+  /** Stamp-chain key prefix of one partition value's input fingerprint
+    * (incremental stages only).
+    */
+  private val PartKey = "_p:"
+
   /** The committed dir's own commit stamp (line 1 of the stamp file) —
     * the table-identity token [[InputTable]] watches to detect that a
     * table was REPLACED in place (same path, fresh files).
@@ -207,7 +228,7 @@ object Dag {
   /** Materialize the DAG; returns per-stage run reports in topological
     * order.
     *
-    * Ready stages run CONCURRENTLY on a bounded pool (`parallelism`
+    * Ready stages run CONCURRENTLY on a bounded pool ([[Parallelism]]
     * threads): independent roots are each a full corpus scan at
     * production scale, and running them serially leaves the cluster
     * idle between stages — the scheduler overlaps them and the shuffle
@@ -218,40 +239,49 @@ object Dag {
     * to completion, and the first failure in topological order rethrows
     * after all settle — never a pool shot down under a live Spark job.
     *
-    * Commit discipline (the IngestDeduper rule): a stage WRITES to a
-    * process-unique `<name>.parquet.tmp-*` dir, stamps [[CommitMarker]]
-    * and its stamp chain, and atomically renames onto `<name>.parquet`;
-    * a stage is REUSED only when a commit marker exists AND its
-    * recorded upstream stamps match the upstreams' current stamps (see
-    * [[StampFile]]) — a tick that crashes mid-write leaves the tmp dir
-    * (swept on the next tick) or an uncommitted target, never a torn
-    * table that a later `refresh = false` tick would silently read as
-    * done, and an upstream rebuild cascades downstream instead of
-    * leaving stale derived tables. Refreshing an existing stage drops
-    * its markers BEFORE its data (Fs.uncommitThenDelete) so a crash
-    * mid-delete also reads as uncommitted. Two processes racing the
-    * same stage resolve before/at the atomic rename: the loser detects
-    * a committed winner and reuses it.
+    * Commit discipline (the IngestDeduper rule), one runner for every
+    * stage ([[runStage]]): the stage's stamp chain (see [[StampFile]])
+    * against the committed dir's recorded one picks one of three
+    * outcomes —
+    *  - SKIP: a commit marker exists, `refresh` is off and the chain
+    *    matches (for an incremental stage: no partition value is new,
+    *    changed or removed). Zero Spark jobs.
+    *  - WHOLE: the stage writes a process-unique `<name>.parquet.tmp-*`
+    *    candidate, gates it, stamps [[CommitMarker]] and its chain into
+    *    it, and atomically renames it onto `<name>.parquet`. Refreshing
+    *    an existing stage drops its markers BEFORE its data
+    *    (Fs.uncommitThenDelete) so a crash mid-delete reads as
+    *    uncommitted. Two processes racing the same stage resolve
+    *    before/at the rename: the loser detects a committed winner built
+    *    from the same chain and reuses it.
+    *  - DELTA (incremental stages, see [[Stage.incrementalOn]]): the
+    *    candidate holds only the stale partition values; each swaps into
+    *    the committed table by atomic rename and the stamp rewrites
+    *    last.
+    *
+    * A tick that crashes mid-write leaves the tmp dir (swept on the next
+    * tick) or an uncommitted target, never a torn table that a later
+    * `refresh = false` tick would silently read as done, and an upstream
+    * rebuild cascades downstream instead of leaving stale derived tables.
     *
     * Schema hand-off: a dependent reads an upstream that THIS call built
     * and committed whole with the schema the build produced
     * (`spark.read.schema(built).parquet`, as the quality gates read the
     * candidate) — equal to what inference would return, without the
-    * schema-merge Spark job inference runs per read. Reused, raced-in,
-    * partitioned and incremental upstreams are read with inference.
-    * Every stage's row count comes from its parquet footers, read with
-    * the session's Hadoop conf.
+    * schema-merge Spark job inference runs per read. Reused, raced-in
+    * and partitioned upstreams are read with inference. Every stage's
+    * row count comes from its parquet footers, read with the session's
+    * Hadoop conf.
     */
   def materialize(
       spark: SparkSession,
       stages: Seq[Stage],
       workDir: String,
-      refresh: Boolean = true,
-      parallelism: Int = 4): Seq[StageRun] = {
+      refresh: Boolean = true): Seq[StageRun] = {
     new java.io.File(workDir).mkdirs()
     val ordered = topoSort(stages)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, ordered.size)))
+      math.max(1, math.min(Parallelism, ordered.size)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     try {
@@ -287,6 +317,9 @@ object Dag {
       settled.map(_.get.run)
     } finally pool.shutdown()
   }
+
+  /** Stage threads per [[materialize]] call. */
+  private val Parallelism = 4
 
   /** How many gate-rejected candidates `_quarantine/` retains per work
     * dir before the oldest is dropped. Small on purpose: a flapping
@@ -324,16 +357,18 @@ object Dag {
     }
   }
 
-  /** Reserved stamp-chain key recording the incremental column: toggling
-    * a stage between whole-table and incremental mode (either direction)
-    * must fail the chain equality once and rebuild into the new regime.
-    */
-  private val IncKey = "_incrementalOn"
-
-  /** Sweep stale tmp dirs of one stage (crashed ticks) — see the
-    * commentary at the call sites: only OUR OWN non-in-flight tmps and
-    * tmps whose owning process is dead are swept; a live sibling
-    * process may be mid-write into its tmp right now.
+  /** Sweep stale tmp dirs of one stage (crashed ticks) — on EVERY tick,
+    * skipped or not: a crashed refresh leaves a near-full-size tmp next
+    * to a still-committed table, and a sweep gated on rebuild would keep
+    * it for as long as the table stays fresh. The tmp name embeds the
+    * writer's pid: only OUR OWN tmps (a failed earlier tick of this JVM,
+    * and not in flight — two same-JVM materialize calls may overlap, so
+    * live tmps register in [[liveTmps]]) and tmps whose owning process
+    * is DEAD are swept — a live sibling process may be mid-write into
+    * its tmp right now (the InputTable lock is JVM-local), and deleting
+    * it would fail the write the race check exists to let finish.
+    * Bounded pid digits: an unparseable name is left alone rather than
+    * crashing the tick on Long overflow.
     */
   private def sweepStaleTmps(fs: java.io.File, stageName: String): Unit = {
     val TmpOwner = (java.util.regex.Pattern.quote(s"$stageName.parquet.tmp-") +
@@ -351,19 +386,20 @@ object Dag {
   /** Quality gate over a written-but-uncommitted candidate dir, BEFORE
     * any stamp or commit marker exists: a failing candidate is parked in
     * `_quarantine/` and the stage throws — the target keeps its
-    * previously committed table. The candidate reads back from parquet
-    * (not the live plan) so the gate judges the exact bytes that would
-    * commit, and with the BUILT schema supplied (ADVICE r14 #3):
-    * partition values parse from the directory strings straight into the
-    * built types — a numeric-looking string partition value ("01") is
-    * judged as "01", never as directory-name inference's integer 1.
-    * Per-read schema, so thread-safe under the concurrent stage pool —
-    * unlike flipping spark.sql.sources.partitionColumnTypeInference on
-    * the shared session. collect() is driver-tiny: one report row per
-    * declared check.
+    * previously committed table, and a crash DURING the gate leaves an
+    * unmarked tmp the next tick sweeps. The candidate reads back from
+    * parquet (not the live plan) so the gate judges the exact bytes that
+    * would commit, and with the BUILT schema supplied: partition values
+    * parse from the directory strings straight into the built types — a
+    * numeric-looking string partition value ("01") is judged as "01",
+    * never as directory-name inference's integer 1. Per-read schema, so
+    * thread-safe under the concurrent stage pool — unlike flipping
+    * spark.sql.sources.partitionColumnTypeInference on the shared
+    * session. collect() is driver-tiny: one report row per declared
+    * check.
     */
   private def applyGates(spark: SparkSession, s: Stage, workDir: String,
-      tmp: String, schema: org.apache.spark.sql.types.StructType): Unit = {
+      tmp: String, schema: StructType): Unit = {
     if (s.requireChecks.isEmpty) return
     val candidate = spark.read.schema(schema).parquet(tmp)
     val failed = s.requireChecks.flatMap { gate =>
@@ -378,6 +414,24 @@ object Dag {
       quarantine(workDir, s.name, tmp)
       throw new QualityGateException(s.name, failed)
     }
+  }
+
+  /** Backfill one empty part file carrying `schema` when the table dir
+    * holds none. A zero-partition result writes NO part files; the
+    * commit would then succeed but every dependent's spark.read.parquet
+    * would fail schema inference FOREVER (the empty table reads as
+    * committed-and-fresh, so no tick rebuilds it). Written WITHOUT
+    * partitionBy even for partitioned stages, since a zero-row
+    * dynamic-partition write also creates no files; an empty table has
+    * no partitions to prune anyway.
+    */
+  private def backfillIfEmpty(spark: SparkSession, dir: String, schema: StructType): Unit = {
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val hasPart =
+      try stream.anyMatch(p => p.getFileName.toString.startsWith("part-")) finally stream.close()
+    if (!hasPart)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        .repartition(1).write.mode("append").parquet(dir)
   }
 
   /** `value-token → directory` for one input's hive-style partition dirs
@@ -400,7 +454,7 @@ object Dag {
     *
     * Each file's entry string ends with a NUL terminator before folding
     * into the rolling hash — without it, adjacent entries concatenate
-    * ambiguously ("a"+"bc" hashes like "ab"+"c"; ADVICE r15 #4). The
+    * ambiguously ("a"+"bc" hashes like "ab"+"c"). The
     * mtime is read at nanosecond precision where the filesystem provides
     * it (ext4/xfs/apfs do), so a same-length rewrite within one
     * lastModified millisecond still changes the fingerprint. CAVEAT
@@ -429,216 +483,13 @@ object Dag {
     java.lang.Long.toHexString(h)
   }
 
-  /** The partition-level incremental tick (VERDICT r14 #1). Contract and
-    * crash story in [[Stage.incrementalOn]]'s doc; mechanics:
-    *
-    *  1. Inputs partitioned by the column (those exposing `col=value`
-    *     dirs) contribute a PER-VALUE fingerprint; all other inputs
-    *     (whole dep stamps, unpartitioned externals) join the static
-    *     chain — any change there rebuilds everything.
-    *  2. `stale` = values whose fingerprint is new or changed;
-    *     `removed` = recorded values no longer present in any input.
-    *     Both empty (and static chain fresh) → skip: the tick ran ZERO
-    *     Spark jobs (fingerprints are file stats, row counts come from
-    *     parquet footers).
-    *  3. A full (re)build — uncommitted target, `refresh`, static-chain
-    *     change, mode toggle — takes the whole-table path: full inputs,
-    *     tmp write, gate, atomic whole-dir swap.
-    *  4. A delta tick feeds the build inputs FILTERED to the stale
-    *     values (`col IN (...)` over partitioned inputs — partition
-    *     pruning scans only the delta), gates the delta candidate, and
-    *     atomically renames each built `col=value` dir over the target's
-    *     — the commit marker never drops, so readers keep being served
-    *     throughout (per-partition flips are individually atomic; the
-    *     cross-partition window is the standard dynamic-partition-
-    *     overwrite exposure). The stamp rewrites LAST (tmp + atomic
-    *     rename): a crash mid-tick leaves unrecorded values stale and
-    *     the next tick rebuilds exactly them.
-    */
-  private def runIncremental(
-      spark: SparkSession,
-      s: Stage,
-      workDir: String,
-      refresh: Boolean,
-      upstreamNow: Map[String, String]): Settled = {
-    import org.apache.spark.sql.functions.{col => sqlCol}
-    val c = s.incrementalOn.get
-    val fs = new java.io.File(workDir)
-    val path = s"$workDir/${s.name}.parquet"
-    val target = new java.io.File(path)
-    val t0 = System.nanoTime()
-    sweepStaleTmps(fs, s.name)
-
-    val inputDirs: Seq[(String, java.io.File)] =
-      s.deps.map(d => d -> new java.io.File(s"$workDir/$d.parquet")) ++
-        s.externalInputs.toSeq.sortBy(_._1).map { case (n, p) => n -> new java.io.File(p) }
-    // Partitioned-by-the-column inputs contribute per-value fingerprints;
-    // the rest join the static chain whole. An input that is DECLARED
-    // partitioned but currently empty classifies as unpartitioned — the
-    // chain's key set then differs from the recorded one and the tick
-    // degrades to a full rebuild: never wrong, at worst unlazy.
-    val perPart = inputDirs.filter { case (_, f) => partValues(f, c).nonEmpty }
-    val perPartNames = perPart.map(_._1).toSet
-    val staticChain: Map[String, String] =
-      Map(LayoutKey -> s.partitionBy.mkString(","), IncKey -> c) ++
-        s.deps.filterNot(perPartNames).map(d => d -> upstreamNow(d)) ++
-        s.externalInputs.toSeq.filterNot(e => perPartNames(e._1))
-          .map { case (n, p) => s"_ext:$n" -> dirFp(Seq((n, new java.io.File(p)))) }
-
-    val currentVals: Map[String, String] = perPart
-      .flatMap { case (n, f) => partValues(f, c).keys.map(v => (v, n, f)) }
-      .groupBy(_._1)
-      .map { case (v, owners) =>
-        v -> dirFp(owners.map { case (_, n, f) => n -> new java.io.File(f, s"$c=$v") })
-      }
-    val recorded = readStamp(target)
-    val recFp: Map[String, String] = recorded.map(_._2.collect {
-      case (k, fp) if k.startsWith("_p:") => k.stripPrefix("_p:") -> fp
-    }.toMap).getOrElse(Map.empty)
-    val staticFresh = recorded.exists(_._2.filterNot(_._1.startsWith("_p:")) == staticChain)
-    val fullBuild = !isCommitted(target) || refresh || !staticFresh
-    val stale: Set[String] =
-      if (fullBuild) currentVals.keySet
-      else currentVals.collect { case (v, fp) if !recFp.get(v).contains(fp) => v }.toSet
-    val removed: Set[String] = recFp.keySet -- currentVals.keySet
-    val skipped = !fullBuild && stale.isEmpty && removed.isEmpty
-
-    def stampLines(own: String, pMap: Map[String, String]): String =
-      (own +: (staticChain ++ pMap.map { case (v, fp) => s"_p:$v" -> fp })
-        .toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }).mkString("\n")
-
-    // Build + commit for one tick. `full` is a parameter (not just the
-    // outer `fullBuild` val) because a delta attempt can DEGRADE to a
-    // full rebuild mid-tick: if the build's output partition tokens
-    // drift from the stale input tokens (partition-dir type inference
-    // re-typing an external dir's `ds=01` to `ds=1`, or a build that
-    // rewrites the column), a token-keyed delta swap would move nothing,
-    // delete the target's stale dirs, and stamp the values fresh —
-    // silently serving a lost delta forever (ADVICE r15 #1). Drift is
-    // detected against the tmp's ACTUAL `c=*` dirs BEFORE anything
-    // touches the target or the stamp, and the tick re-runs whole-table:
-    // never wrong, at worst unlazy (a drifting stage pays full rebuilds
-    // every changed tick until its tokens round-trip).
-    def buildAndCommit(full: Boolean): Unit = {
-      val tmp = s"$workDir/${s.name}.parquet.tmp-${ProcessHandle.current.pid}-${System.nanoTime()}"
-      val tmpAbs = new java.io.File(tmp).getAbsolutePath
-      liveTmps.add(tmpAbs)
-      try {
-        val unescape =
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName _
-        val staleSeq = stale.toSeq.sorted
-        val upstream = inputDirs.map { case (n, f) =>
-          val df = spark.read.parquet(f.getAbsolutePath)
-          n -> (if (!full && perPartNames(n))
-            df.filter(sqlCol(c).isin(staleSeq.map(unescape): _*))
-          else df)
-        }.toMap
-        val built = s.build(spark, upstream)
-        built.write.mode("overwrite").partitionBy(s.partitionBy: _*).parquet(tmp)
-        applyGates(spark, s, workDir, tmp, built.schema)
-        val own = s"${ProcessHandle.current.pid}-${System.nanoTime()}"
-        if (full) {
-          // Whole-table path: same commit discipline as non-incremental
-          // stages (backfill an empty result's schema, stamp + marker
-          // into the tmp, atomic whole-dir swap).
-          val hasPart = {
-            val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-            try stream.anyMatch(p => p.getFileName.toString.startsWith("part-"))
-            finally stream.close()
-          }
-          if (!hasPart)
-            spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], built.schema)
-              .repartition(1).write.mode("append").parquet(tmp)
-          java.nio.file.Files.write(java.nio.file.Paths.get(tmp, StampFile),
-            stampLines(own, currentVals).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, CommitMarker))
-          pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
-            graft.Fs.uncommitThenDelete(target, Seq(CommitMarker, "_SUCCESS"))
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(path),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        } else {
-          val tmpF = new java.io.File(tmp)
-          val tmpTokens = Option(tmpF.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isDirectory && f.getName.startsWith(c + "="))
-            .map(_.getName.substring(c.length + 1)).toSet
-          // Token round-trip invariant: a partition-wise build fed only
-          // the stale values can only emit those values, so every tmp
-          // token must BE a stale token. A violation means the keyed
-          // swap below would mis-address the target — degrade to the
-          // whole-table path before touching anything. (A stale token
-          // MISSING from tmp is legitimate: that value's new content is
-          // zero rows, and the swap deletes its target dir.)
-          val drift = tmpTokens -- stale
-          if (drift.nonEmpty) {
-            System.err.println(s"[graft.Dag] stage ${s.name}: delta build emitted " +
-              s"partition token(s) ${drift.toSeq.sorted.mkString(", ")} matching no stale " +
-              s"input token of $c — tokens do not round-trip (type inference or a column-" +
-              "rewriting build); degrading this tick to a full rebuild")
-            graft.Fs.rmTree(tmpF)
-            buildAndCommit(full = true)
-            return
-          }
-          pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
-          // Delta commit: swap only the stale values' partition dirs.
-          // A root-level schema-backfill part file from an earlier
-          // EMPTY full build must not coexist with partition dirs (a
-          // mixed layout fails Spark's partition discovery) — drop it
-          // the moment real partitions arrive.
-          val tmpHasDirs = tmpTokens.nonEmpty
-          if (tmpHasDirs)
-            Option(target.listFiles()).getOrElse(Array.empty)
-              .filter(f => f.isFile && f.getName.startsWith("part-"))
-              .foreach(f => f.delete())
-          staleSeq.foreach { v =>
-            val dst = new java.io.File(target, s"$c=$v")
-            val src = new java.io.File(tmpF, s"$c=$v")
-            if (dst.exists()) graft.Fs.rmTree(dst)
-            if (src.exists())
-              java.nio.file.Files.move(src.toPath, dst.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-          removed.foreach(v => graft.Fs.rmTree(new java.io.File(target, s"$c=$v")))
-          // All partitions gone (every value removed/empty): backfill
-          // the schema so dependents' reads keep planning.
-          val anyPart = {
-            val stream = java.nio.file.Files.walk(target.toPath)
-            try stream.anyMatch(p => p.getFileName.toString.startsWith("part-"))
-            finally stream.close()
-          }
-          if (!anyPart)
-            spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], built.schema)
-              .repartition(1).write.mode("append").parquet(path)
-          // Stamp LAST, atomically: crash before this line re-detects
-          // the just-built values as stale next tick (unrecorded), and
-          // rebuilds only them.
-          val st = java.nio.file.Paths.get(path, StampFile + s".tmp-$own")
-          java.nio.file.Files.write(st,
-            stampLines(own, recFp -- removed -- stale ++ stale.map(v => v -> currentVals(v)))
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          java.nio.file.Files.move(st, java.nio.file.Paths.get(path, StampFile),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          graft.Fs.rmTree(tmpF)
-          }
-        }
-      } finally liveTmps.remove(tmpAbs)
-    }
-    if (!skipped) buildAndCommit(fullBuild)
-    pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
-      val ownStamp = readStamp(target).map(_._1).getOrElse("legacy")
-      val rows = graft.Fs.parquetRowCount(target, spark.sparkContext.hadoopConfiguration)
-      Settled(StageRun(s.name, rows, (System.nanoTime() - t0) / 1000000, skipped), ownStamp, None)
-    }
-  }
-
   /** One stage's materialize-or-reuse (thread-confined: all cross-stage
     * coordination flows through the settled upstreams the scheduler
-    * passes in). Returns the run report, this stage's CURRENT commit
-    * stamp for downstream chain checks, and the schema it was built with
-    * when this call committed it whole.
+    * passes in). The stamp chain picks SKIP, DELTA or WHOLE (see
+    * [[materialize]]); every build goes through one candidate writer and
+    * every whole-table build through one commit. Returns the run report,
+    * this stage's CURRENT commit stamp for downstream chain checks, and
+    * the schema it was built with when this call committed it whole.
     */
   private def runStage(
       spark: SparkSession,
@@ -646,147 +497,200 @@ object Dag {
       workDir: String,
       refresh: Boolean,
       ups: Map[String, Settled]): Settled = {
-    val upstreamNow = ups.map { case (d, u) => d -> u.stamp }
-    if (s.incrementalOn.isDefined)
-      return runIncremental(spark, s, workDir, refresh, upstreamNow)
-    val fs = new java.io.File(workDir)
+    import java.nio.file.{Files, Paths, StandardCopyOption}
     val path = s"$workDir/${s.name}.parquet"
+    val target = new java.io.File(path)
     val t0 = System.nanoTime()
-    val recorded = readStamp(new java.io.File(path))
-    // The full reuse contract: upstream stamps, external-input file
-    // fingerprints, AND the declared partition layout (a layout edit
-    // must rebuild the table into the new shape — a pre-edit stamp
-    // records no/another layout and fails this equality once).
-    val expectedChain = upstreamNow ++
-      s.externalInputs.map { case (n, p) =>
-        s"_ext:$n" -> dirFp(Seq((n, new java.io.File(p)))) } ++
-      (if (s.partitionBy.nonEmpty) Map(LayoutKey -> s.partitionBy.mkString(","))
-       else Map.empty[String, String])
-    // Legacy dirs (committed before stamps existed) have no stamp
-    // chain: reusable only as ROOTS (no upstreams to be stale
-    // against, no layout to honor) — a dependent stage without
-    // provenance rebuilds once.
-    val chainFresh = recorded.exists(_._2 == expectedChain) ||
+    sweepStaleTmps(new java.io.File(workDir), s.name)
+    val inputs: Seq[(String, String)] =
+      s.deps.map(d => d -> s"$workDir/$d.parquet") ++ s.externalInputs.toSeq.sortBy(_._1)
+    // An incremental stage's inputs partitioned by its column contribute
+    // per-value fingerprints; the rest join the static chain whole. An
+    // input DECLARED partitioned but currently empty classifies as
+    // unpartitioned — the chain's key set then differs from the
+    // recorded one and the tick degrades to a whole rebuild: never
+    // wrong, at worst unlazy.
+    val perPart: Map[String, Map[String, java.io.File]] = s.incrementalOn.fold(
+      Map.empty[String, Map[String, java.io.File]])(c => inputs.map { case (n, p) =>
+        n -> partValues(new java.io.File(p), c) }.filter(_._2.nonEmpty).toMap)
+    // The static chain: upstream stamps, external-input fingerprints, the
+    // declared partition layout (a layout edit must rebuild the table
+    // into the new shape — a pre-edit stamp records no or another layout
+    // and fails this equality once) and the incremental column.
+    val chain: Map[String, String] =
+      s.deps.filterNot(perPart.contains).map(d => d -> ups(d).stamp).toMap ++
+        s.externalInputs.filterNot(e => perPart.contains(e._1)).map { case (n, p) =>
+          s"_ext:$n" -> dirFp(Seq((n, new java.io.File(p)))) } ++
+        (if (s.partitionBy.nonEmpty) Map(LayoutKey -> s.partitionBy.mkString(","))
+         else Map.empty[String, String]) ++
+        s.incrementalOn.map(IncKey -> _)
+    val current: Map[String, String] = perPart.toSeq
+      .flatMap { case (n, vals) => vals.toSeq.map { case (v, f) => v -> (n -> f) } }
+      .groupBy(_._1).map { case (v, owners) => v -> dirFp(owners.map(_._2)) }
+    def withParts(parts: Map[String, String]): Map[String, String] =
+      chain ++ parts.map { case (v, fp) => s"$PartKey$v" -> fp }
+    val recorded = readStamp(target)
+    val (recParts, recChain) = recorded.fold(Map.empty[String, String])(_._2)
+      .partition(_._1.startsWith(PartKey))
+    val recFp = recParts.map { case (k, fp) => k.stripPrefix(PartKey) -> fp }
+    // Legacy dirs (committed before stamps existed) have no stamp chain:
+    // reusable only as ROOTS (no upstreams to be stale against, no layout
+    // to honor) — a dependent stage without provenance rebuilds once.
+    val fresh = (recorded.nonEmpty && recChain == chain) ||
       (recorded.isEmpty && s.deps.isEmpty && s.partitionBy.isEmpty)
-    val skipped = isCommitted(new java.io.File(path)) && chainFresh && !refresh
-    // Sweep stale tmp dirs of THIS stage (crashed ticks) — on EVERY
-    // tick, skipped or not: a crashed refresh leaves a near-full-size
-    // tmp next to a still-committed table, and a sweep gated on rebuild
-    // would retain it for as long as the table stays fresh (r11 review).
-    // The tmp name embeds the writer's pid: only OUR OWN tmps (a failed
-    // earlier tick of this JVM, and not currently in-flight — two
-    // same-JVM materialize calls may overlap, so live tmps register
-    // in [[liveTmps]]) and tmps whose owning process is DEAD (a
-    // crashed tick) are swept — a live sibling process may be
-    // mid-write into its tmp right now (the InputTable lock is
-    // JVM-local), and deleting it would fail its write after the
-    // racedWinner path below exists precisely to let both finish.
-    // Bounded pid digits: an unparseable name is left alone rather
-    // than crashing the tick on Long overflow.
-    sweepStaleTmps(fs, s.name)
-    var committedSchema = Option.empty[org.apache.spark.sql.types.StructType]
-    if (!skipped) {
-      val tmp = s"$workDir/${s.name}.parquet.tmp-${ProcessHandle.current.pid}-${System.nanoTime()}"
+    val whole = !isCommitted(target) || refresh || !fresh
+    val stale: Set[String] =
+      if (whole) current.keySet
+      else current.collect { case (v, fp) if !recFp.get(v).contains(fp) => v }.toSet
+    val removed = recFp.keySet -- current.keySet
+    val skipped = !whole && stale.isEmpty && removed.isEmpty
+    def newOwn() = s"${ProcessHandle.current.pid}-${System.nanoTime()}"
+    def stampBytes(own: String, entries: Map[String, String]): Array[Byte] =
+      (own +: entries.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" })
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+    // The candidate writer: a registered tmp dir, the build over its
+    // inputs (a same-call upstream read with its built schema — what
+    // inference would return, since parquet writes every column nullable
+    // and so does a user-schema read, without inference's schema-merge
+    // job on the critical path; on a delta, partitioned inputs filtered
+    // to the stale values), the write, the empty-result backfill of a
+    // whole table, and the gates. `commit` then owns the tmp, which
+    // stays registered in liveTmps until it returns.
+    def candidate[T](delta: Boolean)(commit: (String, StructType) => T): T = {
+      val tmp = s"$path.tmp-${newOwn()}"
       val tmpAbs = new java.io.File(tmp).getAbsolutePath
       liveTmps.add(tmpAbs)
       try {
-      // An upstream this call built reads with its built schema (what
-      // inference would return: parquet writes every column nullable,
-      // and so does a user-schema read): inference costs a schema-merge
-      // Spark job per read on the critical path.
-      val upstream = s.deps.map { d =>
-        val p = s"$workDir/$d.parquet"
-        d -> ups(d).builtSchema.fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
-      }.toMap ++
-        s.externalInputs.map { case (n, p) => n -> spark.read.parquet(p) }
-      val built = s.build(spark, upstream)
-      val schema = built.schema
-      built.write.mode("overwrite")
-        .partitionBy(s.partitionBy: _*).parquet(tmp)
-      // A zero-partition result writes NO part files (just _SUCCESS);
-      // the commit would then succeed but every dependent's
-      // spark.read.parquet would fail schema inference FOREVER (the
-      // empty table reads as committed-and-fresh, so no tick rebuilds
-      // it). Backfill one empty part file carrying the schema —
-      // written WITHOUT partitionBy even for partitioned stages, since
-      // a zero-row dynamic-partition write also creates no files; an
-      // empty table has no partitions to prune anyway.
-      val hasPart = {
-        val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-        try stream.anyMatch(p => p.getFileName.toString.startsWith("part-"))
-        finally stream.close()
-      }
-      if (!hasPart)
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          .repartition(1).write.mode("append").parquet(tmp)
-      // Quality gate, BEFORE the stamp and commit marker exist: a
-      // failing candidate is deleted and the stage throws — the target
-      // keeps its previously committed table, and a crash DURING the
-      // gate leaves an unmarked tmp the next tick sweeps. The gate
-      // reads the tmp parquet back (not the live plan) so it judges
-      // the exact bytes that would commit. collect() is driver-tiny:
-      // one report row per declared check.
-      applyGates(spark, s, workDir, tmp, schema)
-      val own = s"${ProcessHandle.current.pid}-${System.nanoTime()}"
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp, StampFile),
-        (own +: expectedChain.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" })
-          .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, CommitMarker))
-      // Cross-process race check BEFORE touching the target: a
-      // concurrent materializer may have committed a fresh table since
-      // our skip check (DetectionsTable's lock is JVM-local while the
-      // work dir is shared across bench/verify/test processes).
-      // Deleting first would destroy the winner's just-committed table
-      // non-atomically — a third-process reader could observe a
-      // partially-deleted dir. A RACED winner is one whose stamp
-      // CHANGED from what we read at the skip check AND whose chain
-      // matches our upstream stamps (identical build inputs ⇒
-      // identical content): reuse it and drop ours. An unchanged
-      // stamp is the stale table we set out to replace. Same-JVM
-      // racers serialize on the path lock, so the check-then-swap is
-      // atomic against them.
-      pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
-        val nowStamp = readStamp(new java.io.File(path))
-        val racedWinner = isCommitted(new java.io.File(path)) &&
-          nowStamp.exists { case (own2, chain) =>
-            !recorded.map(_._1).contains(own2) && chain == expectedChain
-          }
+        lazy val keep = stale.toSeq.sorted.map(
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName)
+        val upstream = inputs.map { case (n, p) =>
+          val df = ups.get(n).flatMap(_.builtSchema)
+            .fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+          n -> (if (delta && perPart.contains(n))
+            df.filter(org.apache.spark.sql.functions.col(s.incrementalOn.get).isin(keep: _*))
+          else df)
+        }.toMap
+        val built = s.build(spark, upstream)
+        val schema = built.schema
+        built.write.mode("overwrite").partitionBy(s.partitionBy: _*).parquet(tmp)
+        if (!delta) backfillIfEmpty(spark, tmp, schema)
+        applyGates(spark, s, workDir, tmp, schema)
+        commit(tmp, schema)
+      } finally liveTmps.remove(tmpAbs)
+    }
+
+    // The whole-table commit: stamp and marker into the candidate, then
+    // the race check and the swap under the path lock. Checked BEFORE
+    // touching the target: a concurrent materializer may have committed
+    // a fresh table since our skip check (the InputTable lock is
+    // JVM-local while the work dir is shared across processes), and
+    // deleting first would destroy the winner's just-committed table
+    // non-atomically — a third-process reader could observe a
+    // partially-deleted dir. A RACED winner is one whose stamp CHANGED
+    // from what we read at the skip check AND whose chain equals ours
+    // (identical build inputs ⇒ identical content): reuse it and drop
+    // ours. An unchanged stamp is the stale table we set out to replace.
+    // Same-JVM racers serialize on the path lock.
+    var builtSchema = Option.empty[StructType]
+    def commitWhole(tmp: String, schema: StructType): Unit = {
+      val entries = withParts(current)
+      Files.write(Paths.get(tmp, StampFile), stampBytes(newOwn(), entries))
+      Files.createFile(Paths.get(tmp, CommitMarker))
+      locked(path) {
+        val racedWinner = isCommitted(target) && readStamp(target).exists {
+          case (own, ch) => !recorded.map(_._1).contains(own) && ch == entries
+        }
         if (racedWinner) graft.Fs.rmTree(new java.io.File(tmp))
         else {
-          graft.Fs.uncommitThenDelete(new java.io.File(path), Seq(CommitMarker, "_SUCCESS"))
+          graft.Fs.uncommitThenDelete(target, Seq(CommitMarker, "_SUCCESS"))
           try {
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(path),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            Files.move(Paths.get(tmp), target.toPath, StandardCopyOption.ATOMIC_MOVE)
             // A partitioned table reads back with its partition columns
             // moved last and typed by inference: dependents infer it.
-            if (s.partitionBy.isEmpty) committedSchema = Some(schema)
+            if (s.partitionBy.isEmpty) builtSchema = Some(schema)
           } catch { case e: java.nio.file.FileSystemException =>
             // Target reappeared inside the unavoidable delete→rename
             // window (a sibling PROCESS — same-JVM racers hold the
             // lock). If the winner's table is committed, reuse it and
             // drop ours; anything else is a real failure.
-            if (isCommitted(new java.io.File(path))) graft.Fs.rmTree(new java.io.File(tmp))
-            else throw e
+            if (isCommitted(target)) graft.Fs.rmTree(new java.io.File(tmp)) else throw e
           }
         }
       }
-      } finally liveTmps.remove(tmpAbs)
     }
+
+    // The delta commit: swap only the stale values' partition dirs — the
+    // commit marker never drops, so readers keep being served (each flip
+    // is atomic; the cross-partition window is the standard dynamic-
+    // partition-overwrite exposure). Returns false, touching nothing,
+    // when the candidate's tokens do not round-trip: a partition-wise
+    // build fed only the stale values can only emit those values, so
+    // every tmp token must BE a stale token. Partition-dir inference
+    // re-typing an external dir's `ds=01` to `ds=1`, or a build that
+    // rewrites the column, breaks that — and a token-keyed swap would
+    // then move nothing, delete the target's stale dirs and stamp the
+    // values fresh, serving a lost delta forever. (A stale token MISSING
+    // from tmp is legitimate: that value's new content is zero rows, and
+    // the swap deletes its target dir.)
+    def commitDelta(tmp: String, schema: StructType): Boolean = {
+      val c = s.incrementalOn.get
+      val tmpF = new java.io.File(tmp)
+      val tokens = partValues(tmpF, c).keySet
+      val drift = tokens -- stale
+      if (drift.nonEmpty) {
+        System.err.println(s"[graft.Dag] stage ${s.name}: delta build emitted " +
+          s"partition token(s) ${drift.toSeq.sorted.mkString(", ")} matching no stale " +
+          s"input token of $c — tokens do not round-trip (type inference or a column-" +
+          "rewriting build); degrading this tick to a full rebuild")
+        graft.Fs.rmTree(tmpF)
+        false
+      } else locked(path) {
+        // A root-level backfill part file from an earlier EMPTY whole
+        // build must not coexist with partition dirs (a mixed layout
+        // fails Spark's partition discovery) — drop it the moment real
+        // partitions arrive.
+        if (tokens.nonEmpty)
+          Option(target.listFiles()).getOrElse(Array.empty)
+            .filter(f => f.isFile && f.getName.startsWith("part-"))
+            .foreach(f => f.delete())
+        stale.toSeq.sorted.foreach { v =>
+          val dst = new java.io.File(target, s"$c=$v")
+          val src = new java.io.File(tmpF, s"$c=$v")
+          if (dst.exists()) graft.Fs.rmTree(dst)
+          if (src.exists()) Files.move(src.toPath, dst.toPath, StandardCopyOption.ATOMIC_MOVE)
+        }
+        removed.foreach(v => graft.Fs.rmTree(new java.io.File(target, s"$c=$v")))
+        backfillIfEmpty(spark, path, schema)
+        // Stamp LAST, atomically: a crash before this line re-detects
+        // the just-built values as stale next tick (unrecorded), and
+        // rebuilds only them.
+        val own = newOwn()
+        val st = Paths.get(path, s"$StampFile.tmp-$own")
+        Files.write(st, stampBytes(own,
+          withParts(recFp -- removed -- stale ++ stale.map(v => v -> current(v)))))
+        Files.move(st, Paths.get(path, StampFile), StandardCopyOption.ATOMIC_MOVE)
+        graft.Fs.rmTree(tmpF)
+        true
+      }
+    }
+
+    // A delta whose tokens drift falls back to a whole build of all
+    // values: never wrong, at worst unlazy.
+    if (!skipped && (whole || !candidate(delta = true)(commitDelta)))
+      candidate(delta = false)(commitWhole)
     // The stage's CURRENT stamp for downstream chain checks: what the
-    // committed dir records (ours after a rebuild, the winner's after
-    // a lost race, the legacy-root sentinel otherwise). Under the path
+    // committed dir records (ours after a rebuild, the winner's after a
+    // lost race, the legacy-root sentinel otherwise). Under the path
     // lock: a same-JVM racer between its delete and rename must not be
-    // mid-swap during this read — a footer count over a half-deleted
-    // dir would throw or report 0, and a torn stamp would poison the
+    // mid-swap during this read — a footer count over a half-deleted dir
+    // would throw or report 0, and a torn stamp would poison the
     // downstream chain.
-    pathLocks.computeIfAbsent(path, _ => new Object).synchronized {
-      val ownStamp = readStamp(new java.io.File(path)).map(_._1).getOrElse("legacy")
-      val rows = graft.Fs.parquetRowCount(new java.io.File(path),
-        spark.sparkContext.hadoopConfiguration)
+    locked(path) {
+      val ownStamp = readStamp(target).map(_._1).getOrElse("legacy")
+      val rows = graft.Fs.parquetRowCount(target, spark.sparkContext.hadoopConfiguration)
       Settled(StageRun(s.name, rows, (System.nanoTime() - t0) / 1000000, skipped),
-        ownStamp, committedSchema)
+        ownStamp, builtSchema)
     }
   }
 
@@ -839,7 +743,7 @@ object Dag {
 }
 
 /** A materialized INPUT TABLE: a derivation persisted once per (sfDir,
-  * fingerprint) under /tmp and read by consumers as a plain parquet scan
+  * fingerprint) under `Fs.stateRoot` and read by consumers as a plain parquet scan
   * — the 100 TB shape, where the relation is a table an upstream
   * scheduled job wrote, and queries scan it like any other input.
   *
@@ -911,7 +815,12 @@ abstract class InputTable(
     * table's materializations (their fingerprints differ by construction,
     * so a shared namespace would sweep live tables as "stale siblings").
     */
-  private def tableRoot: String = s"/tmp/graft_dag/$tableName"
+  private def tableRoot: String = s"$inputRoot/$tableName"
+
+  /** Parent of every table's root. Tables used to live directly under
+    * it — the legacy layout [[ensure]] still sweeps.
+    */
+  private def inputRoot: String = s"${graft.Fs.stateRoot}/graft_dag"
 
   private def root(sfDir: String): String =
     s"$tableRoot/${sanitize(sfDir)}_${fingerprint(sfDir)}"
@@ -926,7 +835,7 @@ abstract class InputTable(
     * start for SessionCache-wrapped readers like detectionsCached,
     * whose cache hit legitimately short-circuits the resolve — so a
     * sibling replacing MID-sweep is out of contract there, the same
-    * exposure any shared-/tmp mutation under a running query has).
+    * exposure any shared-state-root mutation under a running query has).
     */
   private val seenStamps = scala.collection.mutable.Map.empty[String, String]
   /** Paths absent from disk at the LAST prune pass (see [[watchStamp]]):
@@ -1038,10 +947,10 @@ abstract class InputTable(
     val prefix = s"${sanitize(sfDir)}_"
     // Same-sfDir siblings under a DIFFERENT fingerprint, plus the
     // PRE-per-table legacy layout (tables used to live directly under
-    // /tmp/graft_dag/<sanitized>_<fp> — unreachable under the new root,
+    // <stateRoot>/graft_dag/<sanitized>_<fp> — unreachable under the new root,
     // they would leak sf-scale parquet until reboot).
     sweepStale(new java.io.File(tableRoot), prefix, Some(new java.io.File(dir).getName))
-    sweepStale(new java.io.File("/tmp/graft_dag"), prefix, None)
+    sweepStale(new java.io.File(inputRoot), prefix, None)
     // PRE-DIGEST layouts (before sanitize() carried the raw-path
     // digest): "<lossy>_<fp>" dirs, in both roots, that no current
     // reader can ever resolve — root() always appends the digest — so
@@ -1051,7 +960,7 @@ abstract class InputTable(
     // away from every digest-layout dir: its remainder "<digest>_<fp>"
     // contains '_'.
     sweepStale(new java.io.File(tableRoot), s"${lossySanitize(sfDir)}_", None)
-    sweepStale(new java.io.File("/tmp/graft_dag"), s"${lossySanitize(sfDir)}_", None)
+    sweepStale(new java.io.File(inputRoot), s"${lossySanitize(sfDir)}_", None)
     // Torn writes are Dag.materialize's problem: reuse is marker-gated
     // and writes commit via tmp + atomic rename.
     Dag.materialize(spark, dag(sfDir), dir, refresh = false)

@@ -25,7 +25,7 @@ object Readers {
     * version left behind.
     */
   private def fixtureDir(sfDir: String, sub: String): String = {
-    val d = Paths.get("/tmp/graft_fixtures",
+    val d = Paths.get(graft.Fs.stateRoot, "graft_fixtures",
       sfDir.replaceAll("[^a-zA-Z0-9.]", "_"), sub)
     if (Files.exists(d)) {
       val files = Files.list(d)

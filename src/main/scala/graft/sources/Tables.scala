@@ -84,7 +84,7 @@ object Tables {
       spark.read.parquet(s"$sfDir/$name.parquet"))
 
   /** Path-addressed variant for tables OUTSIDE the sfDir layout — the
-    * materialized input tables under /tmp/graft_dag. Same memo. The
+    * materialized input tables under `Fs.stateRoot`. Same memo. The
     * stability assumption (content changes move the fingerprinted
     * path) has one exception: InputTable.invalidate + re-ensure
     * rebuilds AT the same path with fresh part-file names — those call

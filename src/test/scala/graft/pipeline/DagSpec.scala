@@ -185,7 +185,13 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dag.Stage("c", Seq("b", "split"), (_, up) => {
         saw("c", up)
         up("b").join(up("split").select("id", "split"), "id")
-      }))
+      }),
+      // An incremental stage over an upstream it is not partitioned by:
+      // `b` joins its static chain whole and reads like any other input.
+      Dag.Stage("inc", Seq("b"), (_, up) => {
+        saw("inc", up)
+        up("b").selectExpr("CASE WHEN id < 3 THEN 'lo' ELSE 'hi' END AS half", "id")
+      }, partitionBy = Seq("half"), incrementalOn = Some("half")))
     def jobsOf(body: => Unit): Int = {
       val started = new java.util.concurrent.atomic.AtomicInteger(0)
       val ended = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -218,9 +224,10 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     val inferJobs = jobsOf((1 to stages.size).foreach(n =>
       Dag.materialize(spark, stages.take(n), inferred, refresh = false)))
     val inferSeen = seen.asScala.toMap
-    // b<-a, split<-b, c<-b; c<-split is partitioned and infers in both.
-    assert(inferJobs - handOffJobs == 3, s"hand-off $handOffJobs jobs, inference $inferJobs")
-    assert(handOffSeen.keySet == Set("b<-a", "split<-b", "c<-b", "c<-split"))
+    // b<-a, split<-b, c<-b, inc<-b; c<-split is partitioned and infers
+    // in both.
+    assert(inferJobs - handOffJobs == 4, s"hand-off $handOffJobs jobs, inference $inferJobs")
+    assert(handOffSeen.keySet == Set("b<-a", "split<-b", "c<-b", "c<-split", "inc<-b"))
     assert(handOffSeen == inferSeen)
     handOffSeen.foreach { case (k, schema) =>
       val dep = k.split("<-")(1)
@@ -666,6 +673,50 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.Fs.rmTree(new java.io.File(dir))
   }
 
+  test("an incremental stage's whole build that loses a race reuses the winner's commit") {
+    import org.apache.spark.sql.functions._
+    // Two materialize calls build the incremental stage whole from an
+    // empty work dir. The first stalls in its build until the second has
+    // committed; its commit must then find the winner's table (same
+    // chain, a stamp it never saw) and drop its own candidate, leaving
+    // the winner's stamp in place.
+    val evDir = java.nio.file.Files.createTempDirectory("dag-inc-race-ev").toString
+    val dir = java.nio.file.Files.createTempDirectory("dag-inc-race").toString
+    Seq("2024-01-01", "2024-01-02").foreach(ds =>
+      spark.range(5).select(col("id"), lit(ds).as("ds"))
+        .write.mode("append").partitionBy("ds").parquet(evDir))
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val stages = Seq(Dag.Stage("ing", Nil, (_, up) => {
+      if (builds.getAndIncrement() == 0) {
+        started.countDown()
+        assert(go.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      }
+      up("events").withColumn("v", col("id") * 2)
+    }, partitionBy = Seq("ds"), incrementalOn = Some("ds"),
+      externalInputs = Map("events" -> evDir)))
+    val stamp = java.nio.file.Paths.get(s"$dir/ing.parquet/_graft_stamp")
+    def owner() = java.nio.file.Files.readAllLines(stamp).get(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try {
+      val loser = scala.concurrent.Future(Dag.materialize(spark, stages, dir, refresh = false))
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val winner = Dag.materialize(spark, stages, dir, refresh = false)
+      assert(!winner.head.skipped && winner.head.rows == 10)
+      val won = owner()
+      go.countDown()
+      val lost = scala.concurrent.Await.result(loser, scala.concurrent.duration.Duration(60, "s"))
+      assert(!lost.head.skipped && lost.head.rows == 10)
+      assert(owner() == won, "the losing whole build replaced the winner's committed table")
+      assert(!new java.io.File(dir).listFiles().exists(_.getName.contains(".tmp-")))
+      assert(Dag.materialize(spark, stages, dir, refresh = false).head.skipped)
+    } finally { go.countDown(); pool.shutdown() }
+    Seq(evDir, dir).foreach(d => graft.Fs.rmTree(new java.io.File(d)))
+  }
+
   test("detections replace-in-place drops the SessionCache table scan automatically") {
     val sf = "/root/testdata/sf0.001"
     DetectionsTable.invalidate(sf)
@@ -709,6 +760,27 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     WallFeaturesTable.ensure(spark, sf)
     assert(Synthetic.wallFeatures(spark, sf).count() == live.count())
     WallFeaturesTable.invalidate(sf)
+  }
+
+  test("input tables and RunDag's default work dir resolve under Fs.stateRoot") {
+    val sf = "/root/testdata/sf0.001"
+    val root = java.nio.file.Files.createTempDirectory("state-root").toString
+    val prior = System.getProperty("java.io.tmpdir")
+    System.setProperty("java.io.tmpdir", root)
+    try {
+      assert(graft.Fs.stateRoot == root)
+      assert(graft.RunDag.defaultWorkDir("street") == s"$root/graft_dag_street")
+      val p = DetectionsTable.ensure(spark, sf)
+      assert(p.startsWith(s"$root/graft_dag/detections/"), p)
+      assert(Dag.isCommitted(new java.io.File(p)))
+      assert(DetectionsTable.materializedPath(sf).contains(p))
+    } finally {
+      // Invalidate while the root still resolves to the temporary dir, so
+      // cached plans are evicted before their files are deleted.
+      DetectionsTable.invalidate(sf)
+      System.setProperty("java.io.tmpdir", prior)
+    }
+    graft.Fs.rmTree(new java.io.File(root))
   }
 
   test("detections input table: ensure materializes once, consumers read it bit-identically") {

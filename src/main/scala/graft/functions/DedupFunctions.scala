@@ -27,10 +27,14 @@ object DedupFunctions {
 
   /** Deterministic affine hash family h_i(x) = (a_i x + b_i) mod P.
     * a_i derived from Knuth's multiplicative constant; all arithmetic
-    * stays below 2^63 (x < 1e9+7, a_i < P → a_i*x < 2^62).
+    * stays below 2^63 because x is a shingle hash, x < PolyHashKernel.Mod
+    * (a_i < P → a_i*x < 2^62) — the `require` below fails loudly if
+    * either range grows.
     */
   val A: IndexedSeq[Long] = (1 to K).map(i => (2654435761L * i) % P)
   val B: IndexedSeq[Long] = (1 to K).map(i => (40503L * i * i + 17L) % P)
+  require(org.apache.spark.sql.graft.PolyHashKernel.Mod - 1 <= (Long.MaxValue - B.max) / A.max,
+    "MinHash a_i*x + b_i would overflow a long over the shingle hash range")
 
   /** SimHash bit width and spreading multiplier: the 30-bit polynomial
     * shingle hash is spread to 48 bits via h*KNUTH mod 2^48 so bits are
@@ -41,7 +45,7 @@ object DedupFunctions {
   val Spread = 2654435761L
 
   /** MinHash signature (array of K longs) from an array of shingle
-    * hashes (longs in [0, 1e9+7)).
+    * hashes (longs in [0, PolyHashKernel.Mod)).
     */
   def minhashSignature(shingleHashes: Column): Column =
     // r20: one-pass native kernel (org.apache.spark.sql.graft.

@@ -238,8 +238,8 @@ object BBoxGrouping {
   }
 
   /** One outer-row step of the adjacency sweep — a SEPARATE small method
-    * for the same JIT-shape reason as Domain.sweepRowPairs (r15 multi-JVM
-    * skew incident): with the whole n² sweep inside one activation, a hot
+    * for the same measured JIT-shape reason as Domain.sweepRowBoth: with
+    * the whole n² sweep inside one activation, a hot
     * panorama's task runs start-to-finish on whatever code the JIT had at
     * loop entry (on fresh executors, a tier-3 OSR compilation that
     * inlines the kernel WITH profiling counters). Called once per outer

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GeoFunctions, GeoSql}
+import graft.functions.GeoSql
 import graft.pipeline.{Detection, RayMesh, StreetLevel, Synthetic, WallPlanes}
 
 /** Domain-parity suite (SURVEY.md §7 phase 3): the reference's street-level
@@ -35,9 +35,8 @@ object Domain {
   private[queries] final case class PanoRow(
       file_name: String, det_idx: Long, x1: Double, y1: Double, x2: Double, y2: Double)
 
-  /** One panorama's boxes loaded into y1-sorted primitive arrays — the
-    * shared prologue of both sweep kernels, so the enumeration geometry
-    * (sort order, seam classification) has exactly one spelling.
+  /** One panorama's boxes loaded into y1-sorted primitive arrays, with
+    * each box's seam class (`plain`: not wrapped, not a >95%-span giant).
     */
   private final class PanoArrays(rows: Array[PanoRow], seamSpan: Double) {
     val n: Int = rows.length
@@ -68,111 +67,22 @@ object Domain {
       StreetLevel.vertexRays(grouped(spark, dir), Synthetic.poses(spark, dir), spacing = 2)
     }
 
-  /** The per-panorama grouping both kernels ride: one hash partition by
-    * file_name, no replication. Relational groupBy(col).as[K, V], not
-    * typed groupByKey(_.file_name) — the typed form's key lambda
-    * deserializes every row pre-shuffle just to read the key (see
-    * StreetLevel.groupedDetections for the measurement).
-    */
-  private def panoGroups(det: org.apache.spark.sql.DataFrame) = {
-    val spark = det.sparkSession
-    import spark.implicits._
-    det.select(col("file_name"), col("det_idx").cast("long"),
-        col("x1").cast("double"), col("y1").cast("double"),
-        col("x2").cast("double"), col("y2").cast("double"))
-      .groupBy(col("file_name")).as[String, PanoRow]
-  }
-
   /** One outer-row step of the pair sweep: scan forward from i while y
-    * overlaps, kernel + emit. A SEPARATE small method on purpose, not
-    * loop-fusion pedantry (r15 multi-JVM skew incident, measured): with
-    * the whole n² sweep inside ONE method activation, the hot
-    * panorama's 57M-iteration loop runs start-to-finish on whatever
-    * code the JIT had AT ENTRY — on fresh executors that was
-    * interpreter/OSR-pessimized code for the entire activation, and the
-    * SAME task measured bimodally 3.5 s or ~58 s (16×) across runs,
-    * turning q81 into 18 s single-JVM vs 191 s cross-process for
-    * identical work (993,870,086 enumerated pairs both ways; JFR +
-    * -XX:+PrintCompilation adjudicated). Called once per outer row, the
-    * worst single activation is one row's ≤n-iteration scan, tier-up
-    * amortizes over thousands of invocations, and the method is small
-    * enough for deterministic standard (non-OSR) tier-4 compilation.
-    */
-  private def sweepRowPairs(i: Int, p: PanoArrays, fn: String,
-      w: Double, h: Double, threshold: Double,
-      out: scala.collection.mutable.ArrayBuffer[(String, Long, Long, Double)]): Long = {
-    import p._
-    val ay2 = y2(i)
-    var pairs = 0L
-    var j = i + 1
-    // Sorted by y1 ⇒ y1(j) ≥ y1(i), so y1(j) < y2(i) is the full
-    // strict y-overlap test (heights are positive).
-    while (j < n && y1(j) < ay2) {
-      pairs += 1
-      if (!plain(i) || !plain(j) || (x1(i) < x2(j) && x1(j) < x2(i))) {
-        val iou = org.apache.spark.sql.graft.IouKernel.compute(
-          x1(i), y1(i), x2(i), y2(i), x1(j), y1(j), x2(j), y2(j), w, h)
-        if (iou >= threshold) {
-          if (idx(i) < idx(j)) out += ((fn, idx(i), idx(j), iou))
-          else out += ((fn, idx(j), idx(i), iou))
-        }
-      }
-      j += 1
-    }
-    pairs
-  }
-
-  /** Per-panorama SWEEP-LINE pair enumeration: the kernel alternative to
-    * the banded equi-join. groupByKey(file_name) (the same bounded-per-
-    * panorama shape as the greedy grouping kernel), sort boxes by y1
-    * into primitive arrays, and for each box scan forward only while
-    * y1(j) < y2(i) — enumerating EXACTLY the y-overlapping pairs (26.5M
-    * at sf0.1 vs the band join's 44.6M candidate rows, with no
-    * per-candidate join-row materialization at all). The θ-interval
-    * precondition and the [[org.apache.spark.sql.graft.IouKernel]] call
-    * are the same answer-preserving steps as the join form, so the pair
-    * set and every IoU bit are identical (PairEnumerationPropertySpec
-    * checks both forms against the naive all-pairs on adversarial
-    * boxes). At 100 TB the shuffle is one hash partition by file_name —
-    * no replication at all — and the per-task cost is bounded by the
-    * per-panorama box count exactly like q80's kernel.
-    */
-  private[graft] def sweepIouPairs(
-      det: org.apache.spark.sql.DataFrame, w: Double, h: Double,
-      threshold: Double): org.apache.spark.sql.DataFrame = {
-    val spark = det.sparkSession
-    import spark.implicits._
-    val seamSpan = w * 0.95
-    val stats = graft.pipeline.SweepStats.forSession(spark)
-    val denseCutoff = graft.pipeline.SweepStats.threshold(spark)
-    panoGroups(det)
-      .flatMapGroups { (fn, it) =>
-        val p = new PanoArrays(it.toArray, seamSpan)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Double)]
-        var pairs = 0L
-        var i = 0
-        while (i < p.n) {
-          pairs += sweepRowPairs(i, p, fn, w, h, threshold, out)
-          i += 1
-        }
-        stats.record(fn, p.n, pairs, denseCutoff)
-        out.iterator
-      }
-      .toDF("file_name", "a_idx", "b_idx", "iou_raw")
-  }
-
-  /** Per-outer-row step of the FUSED sweep (r19, guide §1.2 order #1 —
-    * don't compute things twice): q81's pair relation and q88/q89/q94's
-    * partnered-id set enumerated the SAME y-overlapping pairs in two
-    * independent kernel passes (26.5M pair scans each at sf0.1, the two
-    * largest cache builds in the sweep). The pair pass must compute
-    * every surviving pair's IoU anyway, so the partner marking rides it
-    * for free: one IouKernel call per enumerated pair feeds BOTH the
-    * `iou >= threshold` pair emission (bit-identical to
-    * [[sweepRowPairs]]) and the `iou > 0` endpoint marking
-    * (set-identical to [[sweepRowPartnered]] — its mark short-circuit
-    * was monotone, so always computing can only re-mark). Same separate
-    * small-method JIT shape as the other sweep steps.
+    * overlaps, and feed each enumerated pair's ONE IouKernel call to both
+    * outputs — the `iou >= threshold` pair emission and the `iou > 0`
+    * marking of both endpoints. A pair the scan never reaches has zero
+    * y-overlap, hence IoU 0: neither a pair nor a partner. The θ-interval
+    * precondition only skips plain pairs whose θ ranges are disjoint.
+    *
+    * A SEPARATE small method on purpose (measured in a multi-JVM skew
+    * run): with the whole n² sweep inside ONE method activation, the
+    * hot panorama's 57M-iteration loop runs start-to-finish on whatever
+    * code the JIT had AT ENTRY — on fresh executors that was OSR-
+    * pessimized code, and the SAME task measured bimodally 3.5 s or ~58 s
+    * (16×) across runs (JFR + -XX:+PrintCompilation adjudicated). Called
+    * once per outer row, the worst single activation is one row's
+    * ≤n-iteration scan, tier-up amortizes over thousands of invocations,
+    * and the method is small enough for standard tier-4 compilation.
     */
   private def sweepRowBoth(i: Int, p: PanoArrays, fn: String,
       w: Double, h: Double, threshold: Double, marked: Array[Boolean],
@@ -181,6 +91,8 @@ object Domain {
     val ay2 = y2(i)
     var pairs = 0L
     var j = i + 1
+    // Sorted by y1 ⇒ y1(j) ≥ y1(i), so y1(j) < y2(i) is the full
+    // strict y-overlap test (heights are positive).
     while (j < n && y1(j) < ay2) {
       pairs += 1
       if (!plain(i) || !plain(j) || (x1(i) < x2(j) && x1(j) < x2(i))) {
@@ -201,14 +113,9 @@ object Domain {
     * (session, sfDir): kind 0 rows are q81's pair relation
     * (a_idx < b_idx, iou_raw ≥ 0.02), kind 1 rows are the partnered-id
     * set ((file_name, a_idx) with any strictly-positive-IoU partner;
-    * b_idx/iou_raw are -1/0 fillers). Built at q81 (first consumer in
-    * sweep order), released by q88 (isolatedGrouped's build is the last
-    * reader). PairEnumerationPropertySpec pins both projections equal
-    * to the standalone kernels on adversarial boxes; the standalone
-    * kernels remain the spec surface. Accounting: sweep_stats.
-    * pairs_enumerated drops ~2× at every SF from this change — one
-    * enumeration where there were two (same class of artifact shift as
-    * the r15 iouPairs persist, documented then too).
+    * b_idx/iou_raw are -1/0 fillers) that q88/q89/q94's isolated slice
+    * anti-joins. Built at q81 (first consumer in sweep order), released
+    * by q88 (isolatedGrouped's build is the last reader).
     */
   private[queries] def sweepCombined(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -217,9 +124,17 @@ object Domain {
         StreetLevel.ImageWidth, StreetLevel.ImageHeight, 0.02)
     }
 
-  /** The uncached fused kernel ([[sweepCombined]] without the corpus
-    * binding) — the spec surface PairEnumerationPropertySpec pins
-    * against the standalone kernels on adversarial boxes.
+  /** The uncached sweep ([[sweepCombined]] without the corpus binding);
+    * PairEnumerationPropertySpec pins both projections to the naive
+    * all-pairs join on adversarial boxes.
+    *
+    * Per-panorama SWEEP-LINE enumeration: one hash partition by
+    * file_name (no replication; per-task work bounded by the panorama's
+    * box count), boxes sorted by y1 into primitive arrays, and only the
+    * y-overlapping pairs scanned. Relational groupBy(col).as[K, V], not
+    * typed groupByKey(_.file_name) — the typed form's key lambda
+    * deserializes every row pre-shuffle just to read the key (see
+    * StreetLevel.groupedDetections for the measurement).
     */
   private[graft] def sweepCombinedKernel(
       det: org.apache.spark.sql.DataFrame, w: Double, h: Double,
@@ -229,7 +144,10 @@ object Domain {
     val seamSpan = w * 0.95
     val stats = graft.pipeline.SweepStats.forSession(spark)
     val denseCutoff = graft.pipeline.SweepStats.threshold(spark)
-    panoGroups(det)
+    det.select(col("file_name"), col("det_idx").cast("long"),
+        col("x1").cast("double"), col("y1").cast("double"),
+        col("x2").cast("double"), col("y2").cast("double"))
+      .groupBy(col("file_name")).as[String, PanoRow]
       .flatMapGroups { (fn, it) =>
         val p = new PanoArrays(it.toArray, seamSpan)
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long, Long, Double)]
@@ -251,69 +169,6 @@ object Domain {
       .toDF("file_name", "kind", "a_idx", "b_idx", "iou_raw")
   }
 
-  /** The PARTNERED-id variant of [[sweepIouPairs]]: emits each box that
-    * has ANY positive-IoU partner in its panorama, exactly once —
-    * equivalent to exploding the `iou > 0` pair relation to both
-    * endpoints and distinct-ing, but without materializing the pair
-    * rows (4.9M at sf0.1 for a ≤600k id set), the explode, or the
-    * distinct exchange: the sweep marks both endpoints in a boolean
-    * array and emits marked ids per panorama. Same enumeration, same
-    * θ-interval precondition, same IouKernel bits; a box pair the sweep
-    * skips has zero y-overlap hence IoU == ±0.0 — not a partner. The
-    * per-panorama early exit (`!plain(i)` rows always probe) and mark
-    * short-circuit (`marked(i) && marked(j)` pairs skip the kernel) are
-    * answer-preserving: marking is monotone and the skipped kernel call
-    * could only re-mark. Output set equality with the explode-distinct
-    * form is pinned by PairEnumerationPropertySpec.
-    */
-  private[graft] def sweepPartneredIds(
-      det: org.apache.spark.sql.DataFrame, w: Double, h: Double): org.apache.spark.sql.DataFrame = {
-    val spark = det.sparkSession
-    import spark.implicits._
-    val seamSpan = w * 0.95
-    val stats = graft.pipeline.SweepStats.forSession(spark)
-    val denseCutoff = graft.pipeline.SweepStats.threshold(spark)
-    panoGroups(det)
-      .flatMapGroups { (fn, it) =>
-        val p = new PanoArrays(it.toArray, seamSpan)
-        val marked = new Array[Boolean](p.n)
-        var pairs = 0L
-        var i = 0
-        while (i < p.n) {
-          pairs += sweepRowPartnered(i, p, marked, w, h)
-          i += 1
-        }
-        stats.record(fn, p.n, pairs, denseCutoff)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        i = 0
-        while (i < p.n) { if (marked(i)) out += ((fn, p.idx(i))); i += 1 }
-        out.iterator
-      }
-      .toDF("file_name", "det_idx")
-  }
-
-  /** Per-outer-row step of the partnered sweep — same JIT-shape
-    * rationale as [[sweepRowPairs]].
-    */
-  private def sweepRowPartnered(i: Int, p: PanoArrays,
-      marked: Array[Boolean], w: Double, h: Double): Long = {
-    import p._
-    val ay2 = y2(i)
-    var pairs = 0L
-    var j = i + 1
-    while (j < n && y1(j) < ay2) {
-      pairs += 1
-      if (!(marked(i) && marked(j)) &&
-          (!plain(i) || !plain(j) || (x1(i) < x2(j) && x1(j) < x2(i)))) {
-        val iou = org.apache.spark.sql.graft.IouKernel.compute(
-          x1(i), y1(i), x2(i), y2(i), x1(j), y1(j), x2(j), y2(j), w, h)
-        if (iou > 0) { marked(i) = true; marked(j) = true }
-      }
-      j += 1
-    }
-    pairs
-  }
-
   val all: Seq[QueryDef] = Seq(
 
     // ── The synthetic detection derivation itself, fully oracled — if
@@ -326,15 +181,14 @@ object Domain {
         ORDER BY file_name, det_idx"""))((spark, dir) =>
       Synthetic.detectionsCached(spark, dir).orderBy(col("file_name"), col("det_idx"))),
 
-    // ── U1 as a codegen'd column expression on the J4 self-join shape:
-    // all pairs within a panorama with seam-aware cylindrical IoU over
-    // the pair threshold. The join key (file_name) bounds the O(n²) to
-    // one panorama — the 100 TB plan shuffles by file_name once and
-    // never crosses panoramas.
+    // ── U1 on the J4 self-join shape: all pairs within a panorama with
+    // seam-aware cylindrical IoU over the pair threshold, enumerated by
+    // the per-panorama sweep — one un-replicated shuffle on file_name,
+    // never crossing panoramas.
     QueryDef(
       "q81_iou_pairs",
-      // No release here since r19: the fused sweep relation (sweepIou)
-      // is also isolatedGrouped's input — q88, its last reader, releases.
+      // No release here: the sweep relation (sweepIou) is also
+      // isolatedGrouped's input — q88, its last reader, releases.
       releases = Nil,
       oracle = Some(s"""
         WITH det AS (${Synthetic.detectionsSql}),
@@ -347,46 +201,12 @@ object Domain {
           ON a.file_name = b.file_name AND a.det_idx < b.det_idx
         WHERE ${GeoSql.iouFromInvariantsExpr("a", "b")} >= 0.02
         ORDER BY file_name, a_idx, b_idx"""))( (spark, dir) => {
-      // Evolution of this plan, all output-identical (the oracle is the
-      // declarative spec and never moved):
-      //   round 2: file_name equi-join + native IouKernel call (the
-      //     expanded Column tree blew codegen past the JVM method limit
-      //     and fell back to interpreted eval: 11 s → 193 s at sf0.1);
-      //   round 3: (file_name, 512-px y-band) join key with canonical-
-      //     band dedupe + exact y-overlap and θ-interval preconditions —
-      //     Σ n_band² ≈ n²/3 (18.6 → ~9 s). 512 px is the measured knee:
-      //     boxes average ~244 px tall, so 256-px bands RAISE enumerated
-      //     pairs (44.6M → 47.7M).
-      //   round 4 (this form): per-panorama SWEEP-LINE kernel — sort by
-      //     y1 once per panorama and enumerate ONLY y-overlapping pairs
-      //     (26.5M at sf0.1) in a primitive-array loop with no join-row
-      //     materialization at all: 8.1 → 1.0 s warm, bit-identical
-      //     output (exceptAll both ways = 0 rows; adversarial equality
-      //     vs the naive all-pairs in PairEnumerationPropertySpec).
-      // Scale shape: ONE un-replicated shuffle on file_name; per-task
-      // work bounded by the per-panorama box count (the same contract as
-      // the q80 grouping kernel, which already rides groupByKey).
-      //
-      // The pairs relation PERSISTS before the global sort (r15
-      // multi-JVM skew incident): orderBy plans a range-partitioning
-      // SAMPLE pass plus the sort pass, so the un-cached sweep executed
-      // three times per query — and on fresh executors a hot panorama's
-      // pass runs on whatever code the JIT had at activation entry,
-      // measured bimodally 3.5 s or ~58 s for IDENTICAL work (18 s
-      // single-JVM vs 191 s cross-process at the skewed sf1 corpus,
-      // three cold activations back-to-back). Caching makes the kernel
-      // execute exactly once per corpus — the sort phases read the
-      // persisted pairs — which is also simply the right plan: never
-      // recompute a quadratic kernel to satisfy a sampler. Accounting
-      // note for cross-round readers: sweep_stats.pairs_enumerated drops
-      // 3× at every SF for this reason (one kernel execution where there
-      // were three), and q81's one-time build lands in cache_build_ms.
-      //   round 19 (this form): the persisted relation is the FUSED
-      //     sweep ([[sweepCombined]]): the same enumeration also marks
-      //     q88/q89/q94's partnered-id set, so the second 26.5M-pair
-      //     kernel pass disappears from the sweep (and
-      //     pairs_enumerated drops another ~2×). kind-0 rows ARE the
-      //     old pair relation, bit-for-bit.
+      // The sweep relation PERSISTS before the global sort: orderBy plans
+      // a range-partitioning SAMPLE pass plus the sort pass, so an
+      // un-cached sweep would run its quadratic kernel once per pass —
+      // and each cold activation on a fresh executor risks the JIT mode
+      // sweepRowBoth documents (18 s single-JVM vs 191 s cross-process at
+      // the skewed sf1 corpus). Cached, the kernel runs once per corpus.
       sweepCombined(spark, dir).filter(col("kind") === 0)
         .select(col("file_name"), col("a_idx"), col("b_idx"),
           round(col("iou_raw"), 9).as("iou"))

@@ -34,27 +34,16 @@ object DomainOracles {
 
   // ── Shared Spark-side pieces ──────────────────────────────────────────
 
-  /** Detections with no positive-IoU partner in their panorama, computed
-    * RELATIONALLY (one shuffle on file_name; invariants map-side like
-    * q81) — deliberately not via the grouping kernel, so the kernel run
-    * downstream is differentially tested against this definition.
+  /** Detections with no positive-IoU partner in their panorama: the
+    * anti-join against the kind-1 rows of the persisted pair sweep
+    * ([[Domain.sweepCombined]]; q81 already ran the enumeration, so this
+    * is a cache scan). Deliberately not via the grouping kernel — the
+    * two share only IouKernel — so the kernel run downstream is
+    * differentially tested against this definition; the relational
+    * oracle (isoCte) keeps the declarative one.
     */
   private def isolated(spark: SparkSession, dir: String): DataFrame = {
     val det = Synthetic.detectionsCached(spark, dir)
-    // Partner enumeration via the sweep-line MARKING kernel (one
-    // un-replicated shuffle on file_name, y-sorted primitive-array scan,
-    // θ-interval precondition, IouKernel call — set-identical to
-    // exploding the `iou > 0` pair relation, pinned adversarially by
-    // PairEnumerationPropertySpec, without materializing 4.9M pair rows
-    // + explode + distinct for a ≤600k id set). Still an INDEPENDENT
-    // code path from the greedy grouping kernel this slice
-    // differentially tests: both forms share only IouKernel; the
-    // relational oracle (isoCte) keeps the declarative definition.
-    // r19: the partnered set projects out of the FUSED sweep relation
-    // (Domain.sweepCombined) — the enumeration already ran for q81's
-    // pair relation, so this costs a cache scan, not a second
-    // 26.5M-pair kernel pass. sweepPartneredIds remains the standalone
-    // spec surface (PairEnumerationPropertySpec pins both forms).
     val partnered = Domain.sweepCombined(spark, dir)
       .filter(col("kind") === 1)
       .select(col("file_name"), col("a_idx").as("det_idx"))

@@ -333,10 +333,6 @@ object Similarity {
     (r.getLong(0) / 2, r.getLong(1) / keysPerVec)
   }
 
-  /** Any-band occupancy (rung 1) — retained call shape for the specs. */
-  private[queries] def srpEnumStats(sigs: DataFrame): (Long, Long) =
-    srpKeyEnumStats(srpComboKeys(sigs, 1), 8)
-
   /** WIDE-family rung-k combo keys over the 128-bit signature: the
     * C(16,k) size-k subsets of the 16 8-bit bands (bands 0-7 = lo word,
     * 8-15 = hi word), each as a (bp, k0, k1) masked-words key — the two
@@ -743,24 +739,6 @@ object Similarity {
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
       .distinct()
 
-  /** Rung 1: pairs sharing ANY of the 8 band keys. */
-  private[queries] def srpCandidatesAnyBand(sigs: DataFrame): DataFrame =
-    srpCandidatesKeyed(srpComboKeys(sigs, 1))
-
-  /** Rung 2: "≥ 2 of 8 bands match" via C(8,2)=28 band-PAIR keys. */
-  private[queries] def srpCandidatesPairKey(sigs: DataFrame): DataFrame =
-    srpCandidatesKeyed(srpComboKeys(sigs, 2))
-
-  /** Rung 3: "≥ 3 of 8 bands match" via C(8,3)=56 band-TRIPLE keys. */
-  private[queries] def srpCandidatesTripleKey(sigs: DataFrame): DataFrame =
-    srpCandidatesKeyed(srpComboKeys(sigs, 3))
-
-  /** Rung 4: "≥ 4 of 8 bands match" via C(8,4)=70 32-bit band-QUAD
-    * keys. Rungs 5-8 use the same generic construction (C(8,k)
-    * combined-mask keys); rung 8 is the single full-signature key.
-    */
-  private[queries] def srpCandidatesQuadKey(sigs: DataFrame): DataFrame =
-    srpCandidatesKeyed(srpComboKeys(sigs, 4))
 
   /** The SRP-LSH oracle, parameterized over the operating point
     * (exact-cosine threshold, hamming ceiling, per-vector enumeration

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   *
   * Value-identical to the declarative spelling
   * `array((0 until K).map(i => array_min(transform(hs, s => pmod(s*A(i)+B(i), P)))))`
-  * on the hash domain (shingle hashes live in [0, 1e9+7), so s*A(i)+B(i)
-  * never overflows a long there — outside it the ANSI declarative form
+  * on the hash domain (shingle hashes live in [0, PolyHashKernel.Mod), so
+  * s*A(i)+B(i) never overflows a long there, as DedupFunctions requires —
+  * outside it the ANSI declarative form
   * throws where this kernel would wrap) — same sign-corrected pmod, same
   * null semantics (null elements are skipped exactly as `array_min`
   * ignores them; an array with no non-null element yields K nulls, the

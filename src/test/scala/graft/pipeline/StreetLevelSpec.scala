@@ -6,7 +6,6 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DetectionReaders
-import graft.functions.GeoFunctions
 import graft.geo.BBox
 
 /** End-to-end street-level chain over the reference-shaped fixtures
@@ -117,7 +116,7 @@ class StreetLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = det.select(col("file_name").as("fn_b"), col("det_idx").as("b_idx"),
       col("x1").as("bx1"), col("y1").as("by1"), col("x2").as("bx2"), col("y2").as("by2"))
     val pairs = a.join(b, col("file_name") === col("fn_b") && col("a_idx") < col("b_idx"))
-      .withColumn("iou", GeoFunctions.cylindricalIou(
+      .withColumn("iou", org.apache.spark.sql.graft.CylindricalIou.column(
         col("ax1"), col("ay1"), col("ax2"), col("ay2"),
         col("bx1"), col("by1"), col("bx2"), col("by2"), lit(8000.0), lit(4000.0)))
       .filter(col("iou") > 0)

@@ -47,18 +47,19 @@ class SweepStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset(SweepStats.ThresholdConfKey)
   }
 
-  test("pair and partner sweeps record the same enumeration bound") {
+  test("the fused sweep records one enumeration bound") {
     val s = spark; import s.implicits._
     val h = SweepStats.forSession(spark)
     h.maxGroupBoxes.reset(); h.pairsEnumerated.reset(); h.denseGroups.reset()
     spark.conf.set(SweepStats.ThresholdConfKey, "10")
     try {
       val det = denseDetections.toDF()
-      graft.queries.Domain.sweepIouPairs(det, 8000.0, 4000.0, 0.02).collect()
+      val marks = graft.queries.Domain.sweepCombinedKernel(det, 8000.0, 4000.0, 0.02)
+        .filter("kind = 1").count()
+      // One enumeration also marks partners: every box x-overlaps a neighbour.
+      assert(marks == 30L)
       assert(h.pairsEnumerated.value == 435L && h.denseGroups.value == 1L)
-      graft.queries.Domain.sweepPartneredIds(det, 8000.0, 4000.0).collect()
-      assert(h.pairsEnumerated.value == 870L, "partner sweep enumerates the same pairs")
-      assert(h.denseGroups.value == 2L && h.maxGroupBoxes.value == 30L)
+      assert(h.maxGroupBoxes.value == 30L)
     } finally spark.conf.unset(SweepStats.ThresholdConfKey)
   }
 }

@@ -5,14 +5,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property guard for q81's pair-enumeration refinements (y-band
-  * bucketing with canonical-band dedupe, exact y-overlap prune, plain-
-  * pair θ-interval precondition): on ADVERSARIAL boxes — exact band
-  * boundaries, zero-width touching intervals, seam wraps (x2 < x1),
-  * >95%-span giants, boxes spanning multiple bands — the refined join
-  * must return exactly the pair set of the naive all-pairs formulation.
-  * The real-data oracle can't probe these edges densely; this generator
-  * does.
+/** Property guard for the pair sweep q81 and q88/q89/q94 read
+  * (`Domain.sweepCombinedKernel`: y-sorted sweep, exact y-overlap prune,
+  * plain-pair θ-interval precondition) and for a banded equi-join
+  * formulation (y-band bucketing with canonical-band dedupe): on
+  * ADVERSARIAL boxes — exact band boundaries, zero-width touching
+  * intervals, seam wraps (x2 < x1), >95%-span giants, boxes spanning
+  * multiple bands — each must return exactly the pair set of the naive
+  * all-pairs formulation, and the sweep's partner marking exactly the
+  * endpoints of the naive positive-IoU pairs. The real-data oracle can't
+  * probe these edges densely; this generator does.
   */
 class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -76,7 +78,7 @@ class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("a_idx", "b_idx").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
-  /** The refined enumeration, mirroring q81/DomainOracles exactly. */
+  /** The banded equi-join enumeration (band join + the same prunes). */
   private def refinedPairs(threshold: Double): Set[(Long, Long)] = {
     val bandOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       y => floor(y / 512.0).cast("long")
@@ -95,9 +97,14 @@ class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("a_idx", "b_idx").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
-  /** The round-4 sweep-line kernel (the declared q81 form). */
+  /** The production pair sweep; `kind` 0 rows are its pairs at `threshold`,
+    * `kind` 1 rows its partner marks.
+    */
+  private def sweep(threshold: Double, kind: Int): DataFrame =
+    Domain.sweepCombinedKernel(df, W, H, threshold).filter(col("kind") === kind)
+
   private def sweepPairs(threshold: Double): Set[(Long, Long)] =
-    Domain.sweepIouPairs(df, W, H, threshold)
+    sweep(threshold, 0)
       .select("a_idx", "b_idx").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("sweep-line kernel ≡ naive all-pairs on adversarial boxes (t = 0.02)") {
@@ -118,13 +125,14 @@ class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("marking kernel ≡ endpoints of the naive iou > 0 pair set") {
-    // sweepPartneredIds must equal exploding the strictly-positive pair
-    // relation to both endpoints — the isolated-slice feed for
-    // q88/q89/q94. Adversarial boxes probe the mark short-circuit
-    // (marked(i) && marked(j) skips the kernel) and every seam class.
+    // The sweep's kind-1 marks must equal exploding the strictly-positive
+    // pair relation to both endpoints — the isolated-slice feed for
+    // q88/q89/q94. The marks are taken at q81's 0.02 pair threshold, so
+    // a mark gated on the pair threshold instead of `iou > 0` fails
+    // here; adversarial boxes probe every seam class.
     val want = naivePairs(java.lang.Double.MIN_VALUE).flatMap(p => Seq(p._1, p._2))
-    val got = Domain.sweepPartneredIds(df, W, H)
-      .select("det_idx").collect().map(_.getLong(0)).toSet
+    val got = sweep(0.02, 1)
+      .select("a_idx").collect().map(_.getLong(0)).toSet
     assert(got == want, s"missing: ${want -- got}; spurious: ${got -- want}")
   }
 

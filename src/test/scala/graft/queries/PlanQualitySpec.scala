@@ -208,9 +208,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val sigsD = Similarity.srpSignatures(spark, dir)
     for ((label, df) <- Seq(
         "q43 subset join" -> graft.SparkEntry.queries("q43_simhash")(spark, dir),
-        "q53 any-band arm" -> Similarity.srpCandidatesAnyBand(sigsD),
-        "q53 pair-key arm" -> Similarity.srpCandidatesPairKey(sigsD),
-        "q53 triple-key arm" -> Similarity.srpCandidatesTripleKey(sigsD))) {
+        "q53 any-band arm" -> Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigsD, 1)),
+        "q53 pair-key arm" -> Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigsD, 2)),
+        "q53 triple-key arm" -> Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigsD, 3)))) {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("SortMergeJoin"), s"$label must sort-merge")
       assert(!p.contains("BroadcastHashJoin"), s"$label must never broadcast a banded side")

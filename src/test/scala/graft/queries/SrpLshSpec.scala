@@ -68,7 +68,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pair-key rung ≡ declarative '≥2 of 8 bands' on the gate corpus") {
     val sigs = Similarity.srpSignatures(spark, dir)
-    val viaPairKeys = Similarity.srpCandidatesPairKey(sigs)
+    val viaPairKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, 2))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val declarative = declarativeAtLeastKBands(sigs, 2)
     assert(declarative.nonEmpty, "the ≥2-band set must be non-trivial on this corpus")
@@ -78,7 +78,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("triple-key rung ≡ declarative '≥3 of 8 bands' on the gate corpus") {
     val sigs = Similarity.srpSignatures(spark, dir)
-    val viaTripleKeys = Similarity.srpCandidatesTripleKey(sigs)
+    val viaTripleKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, 3))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val declarative = declarativeAtLeastKBands(sigs, 3)
     assert(viaTripleKeys == declarative,
@@ -90,7 +90,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quad-key rung ≡ declarative '≥4 of 8 bands' on the gate corpus") {
     val sigs = Similarity.srpSignatures(spark, dir)
-    val viaQuadKeys = Similarity.srpCandidatesQuadKey(sigs)
+    val viaQuadKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, 4))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val declarative = declarativeAtLeastKBands(sigs, 4)
     assert(viaQuadKeys == declarative,
@@ -193,7 +193,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Gate corpus: low occupancy ⇒ the recall-first WIDE any-band rung
     // (rung 11 in the encoding) — the budget headroom buys recall.
     val sigs = Similarity.srpSignatures(spark, dir)
-    val (enumRows, n) = Similarity.srpEnumStats(sigs)
+    val (enumRows, n) = Similarity.srpKeyEnumStats(Similarity.srpComboKeys(sigs, 1), 8)
     info(s"sf0.01: enumRows=$enumRows n=$n perVector=${enumRows.toDouble / n}")
     assert(n > 0 && enumRows <= Similarity.srpEnumBudget * n,
       "gate corpus must stay on the any-band rung")
@@ -212,7 +212,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("vec_id"),
         graft.functions.VectorFunctions.srpSignature(col("embedding"), 64, 64).as("sig"),
         graft.functions.VectorFunctions.srpSignatureHi(col("embedding"), 64, 64).as("sig2"))
-    val (denseEnum, denseN) = Similarity.srpEnumStats(dense)
+    val (denseEnum, denseN) = Similarity.srpKeyEnumStats(Similarity.srpComboKeys(dense, 1), 8)
     assert(denseN == 600 && denseEnum > Similarity.srpEnumBudget * denseN,
       s"concentrated corpus must leave rung 1: $denseEnum vs ${Similarity.srpEnumBudget * denseN}")
     assert(Similarity.srpSelectArm(dense) == 8,
@@ -220,7 +220,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
         "rung's budget, wide included — terminal rung")
     // Empty relation: defined decision (the recall-max wide rung fits
     // trivially), no div-by-zero.
-    val (e0, n0) = Similarity.srpEnumStats(dense.limit(0))
+    val (e0, n0) = Similarity.srpKeyEnumStats(Similarity.srpComboKeys(dense.limit(0), 1), 8)
     assert(e0 == 0 && n0 == 0)
     assert(Similarity.srpSelectArm(dense.limit(0)) == 11)
   }

@@ -36,7 +36,7 @@ opts_for() {
     # unused. dontinline forces every call site through the standalone
     # methods (which tier up in milliseconds), trading ~ns of call
     # overhead for immunity to the caller's compilation level.
-    dontinline) echo "-XX:CompileCommand=quiet -XX:CompileCommand=dontinline,org.apache.spark.sql.graft.IouKernel$::compute -XX:CompileCommand=dontinline,graft.queries.Domain$::sweepRowPairs -XX:CompileCommand=dontinline,graft.queries.Domain$::sweepRowPartnered" ;;
+    dontinline) echo "-XX:CompileCommand=quiet -XX:CompileCommand=dontinline,org.apache.spark.sql.graft.IouKernel$::compute -XX:CompileCommand=dontinline,graft.queries.Domain$::sweepRowBoth" ;;
     # Hypothesis arm: fresh executor JVMs flood the C2 queue with Spark
     # startup + codegen classes; a hot loop that OSR-compiled at tier 3
     # stays there until C2 drains to its request. More compiler threads

@@ -115,9 +115,6 @@ object VectorSql {
 
   def normExpr(a: String): String = s"sqrt(${dotExpr(a, a)})"
 
-  def cosineExpr(a: String, b: String): String =
-    s"(${dotExpr(a, b)} / (${normExpr(a)} * ${normExpr(b)}))"
-
   /** v · plane_p with the plane generated by the same closed form as
     * [[VectorFunctions.srpPlane]] (exact dyadic values both sides). The
     * p-dependent term is pre-reduced mod 127 in Scala so the SQL stays in
@@ -150,14 +147,8 @@ object VectorSql {
       s"(CASE WHEN ${srpDotHiExpr(v, q)} >= 0.0 THEN ${1L << q} ELSE 0 END)"
     }.mkString("(", " + ", ")::BIGINT")
 
-  def srpBandKeysExpr(sig: String, bands: Int, bitsPerBand: Int): String =
-    (0 until bands).map { b =>
-      val mask = ((1L << bitsPerBand) - 1) << (b * bitsPerBand)
-      s"{band: $b, key: ($sig & $mask)}"
-    }.mkString("[", ", ", "]")
-
-  /** Ladder-rung-k combo keys, the SQL spelling of
-    * [[graft.queries.Similarity.srpComboKeys]]: the C(bands,k) size-k
+  /** Ladder-rung-k combo keys, the SQL spelling of a narrow
+    * [[graft.queries.Similarity.srpRungKeys]] rung: the C(bands,k) size-k
     * band subsets as combined-mask (bp, key) structs. The oracle only
     * needs these for the rung-occupancy scalar subqueries — the
     * candidate predicate itself stays the declarative per-band join +
@@ -174,10 +165,10 @@ object VectorSql {
     * words, 16 8-bit bands): the C(16,k) size-k band subsets as
     * (bp, k0, k1) structs — bands 0-7 mask the lo word, 8-15 the hi
     * word, the pair of masked words IS the combined key (no hashing, no
-    * collision question). SQL spelling of
-    * [[graft.queries.Similarity.srpComboKeysWide]].
+    * collision question). SQL spelling of a wide
+    * [[graft.queries.Similarity.srpRungKeys]] rung.
     */
-  def srpComboKeysWideExpr(sigLo: String, sigHi: String, k: Int): String = {
+  def srpWideComboKeysExpr(sigLo: String, sigHi: String, k: Int): String = {
     def mask(b: Int): Long = 255L << ((b % 8) * 8)
     (0 until 16).combinations(k).toSeq.zipWithIndex.map { case (bs, p) =>
       val lo = bs.filter(_ < 8).map(mask).foldLeft(0L)(_ | _)

@@ -80,8 +80,8 @@ object AnnIngest {
     val idx = Similarity.annIndex(spark, dir)
     batch
       .withColumn("nrm", graft.functions.VectorFunctions.norm(col("embedding")))
-      .withColumn("cell", element_at(org.apache.spark.sql.graft.NearestCells
-        .column(col("embedding"), col("nrm"), idx.anchors, 1), 1))
+      .withColumn("cell", element_at(org.apache.spark.sql.graft.NearestCellsTwoLevel
+        .column(col("embedding"), col("nrm"), idx.anchors, kc = 1), 1))
       .select(col("vec_id"), col("cell"))
   }
 }

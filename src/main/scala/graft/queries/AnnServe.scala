@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.NearestCells
+import org.apache.spark.sql.graft.NearestCellsTwoLevel
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => VF}
@@ -153,7 +153,7 @@ final class AnnIngestStore(
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .withColumn("nrm", VF.norm(col("embedding")))
       .withColumn("cell", element_at(
-        NearestCells.column(col("embedding"), col("nrm"), state.idx.anchors, 1), 1))
+        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), state.idx.anchors, kc = 1), 1))
       .withColumn("base_fp", lit(state.epoch))
     val seg = store.commitBatch(batchId) { tmp =>
       assigned.write.mode("overwrite").parquet(s"$tmp/vecs")
@@ -186,7 +186,7 @@ final class AnnIngestStore(
       .withColumn("cell",
         when(col("base_fp") === lit(epoch), col("cell"))
           .otherwise(element_at(
-            NearestCells.column(col("embedding"), col("nrm"), anchors, 1), 1)))
+            NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc = 1), 1)))
       .drop("base_fp")
 
   /** True when any durable state was stamped under a quantizer epoch
@@ -249,7 +249,7 @@ final class AnnIngestStore(
         oldVecs
           .drop("cell", "base_fp")
           .withColumn("cell", element_at(
-            NearestCells.column(col("embedding"), col("nrm"), anchors, 1), 1))
+            NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc = 1), 1))
           .withColumn("base_fp", lit(s"fold:$n:$foldFp"))
           .write.mode("overwrite").parquet(s"$tmp/vecs")
         anchorDf.write.mode("overwrite").parquet(s"$tmp/anchors")
@@ -279,13 +279,13 @@ final class AnnIngestStore(
     val base = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
       .withColumn("cell", element_at(
-        NearestCells.column(col("embedding"), col("nrm"), anchors, 1), 1))
+        NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc = 1), 1))
     val corpus = base.unionByName(servedSegments(anchors, state.epoch))
     val q = queries
       .select(col("q_id").cast("long").as("q_id"), col("qv"))
       .withColumn("qn", VF.norm(col("qv")))
       .withColumn("qcell", explode(
-        NearestCells.column(col("qv"), col("qn"), anchors, p)))
+        NearestCellsTwoLevel.column(col("qv"), col("qn"), anchors, kc = 1, nf = p)))
     val scored = corpus.join(broadcast(q),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),

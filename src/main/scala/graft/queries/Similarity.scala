@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.NearestCells
+import org.apache.spark.sql.graft.NearestCellsTwoLevel
 import graft.functions.{VectorFunctions => VF, VectorSql => VS}
 import graft.sources.Tables._
 
@@ -51,7 +51,7 @@ object Similarity {
     * at the 65536 cap it scans ~1.5 GB). The cap keeps the two
     * structural guarantees that made the fixed design safe: the
     * centroid set stays driver-held (65536 × dim floats, ≤32 MB at
-    * dim=128) and the per-row NearestCells assignment stays a bounded
+    * dim=128) and the per-row flat (kc = 1) assignment stays a bounded
     * O(K·dim) map-side projection — beyond the cap the honest next step
     * is a two-level quantizer, not a bigger flat K. The hash is plain
     * 64-bit modular arithmetic — `((vec_id % 1000003) * 2654435761) %
@@ -134,16 +134,10 @@ object Similarity {
     */
   private[queries] def annIndexRel(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val e = embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
-    val n = corpusCount(spark, dir)
-    val k = anchorKFor(n)
-    val anchors = collectAnchors(e, k)
-    val route = org.apache.spark.sql.graft.NearestCellsTwoLevel
-      .routeOf(anchors, annKc(k, anchors.size))
+    val idx = annIndexDerived(spark, dir)
     val s2 = spark; import s2.implicits._
-    anchors.zipWithIndex.map { case ((id, v, nr), i) =>
-      (id, v, nr, i + 1, route(id), n) }
+    idx.anchors.zipWithIndex.map { case ((id, v, nr), i) =>
+      (id, v, nr, i + 1, idx.route(id), idx.n) }
       .toDF("a_id", "av", "anrm", "hrnk", "coarse_route", "corpus_n")
   }
 
@@ -184,8 +178,8 @@ object Similarity {
       }
     }
 
-  /** The live (no committed table) index derivation — the gate path, and
-    * the empty-table fallback above.
+  /** The live index derivation: the gate path, the rows
+    * [[annIndexRel]] commits, and the empty-table fallback above.
     */
   private def annIndexDerived(spark: org.apache.spark.sql.SparkSession,
       dir: String): AnnIndex = {
@@ -194,9 +188,7 @@ object Similarity {
     val n = corpusCount(spark, dir)
     val k = anchorKFor(n)
     val anchors = collectAnchors(e, k)
-    AnnIndex(anchors, n,
-      org.apache.spark.sql.graft.NearestCellsTwoLevel
-        .routeOf(anchors, annKc(k, anchors.size)))
+    AnnIndex(anchors, n, NearestCellsTwoLevel.routeOf(anchors, annKc(k, anchors.size)))
   }
 
   /** The corpus's embedding dimension, probed ONCE per (session, corpus)
@@ -297,89 +289,60 @@ object Similarity {
     */
   private[queries] val srpHammingMax = 55
 
-  /** Band-combination keys for ladder rung k: the C(8,k) size-k band
-    * subsets, each as a combined-mask key — a combo key matches ⇔ all
-    * k of its bands match, so joining on rung k's keys and deduping is
-    * set-identical to the declarative per-band join + HAVING
-    * count ≥ k (SrpLshSpec pins k = 2 and k = 3 by set equality).
-    * Rung 1 is exactly the any-band (band, key) relation.
+  /** The band subsets of ladder rung r (in [[srpSelectArm]]'s
+    * encoding): the C(8,r) size-r subsets of the lo word's 8 bands for a
+    * narrow rung, the C(16,r−10) subsets of all 16 bands (8-15 = the hi
+    * word) for a wide one.
     */
-  private[queries] def srpComboKeys(sigs: DataFrame, k: Int): DataFrame = {
-    def mask(b: Int): Long = ((1L << 8) - 1) << (b * 8)
-    val combos = (0 until 8).combinations(k).toSeq
-    // sig/sig2 ride along (24 B/row): the hamming pre-verify reads them
-    // INSIDE the candidate join, so enumerated pairs never pay a second
-    // join to fetch signatures.
-    sigs
-      .select(col("vec_id"), col("sig"), col("sig2"),
-        explode(array(combos.zipWithIndex.map { case (bs, p) =>
-          struct(lit(p).as("bp"),
-            col("sig").bitwiseAND(lit(bs.map(mask).reduce(_ | _))).as("key"))
-        }: _*)).as("pk"))
-      .select(col("vec_id"), col("sig"), col("sig2"),
-        col("pk.bp").as("bp"), col("pk.key").as("key"))
+  private def srpRungBands(rung: Int): Seq[Seq[Int]] =
+    if (rung >= 10) (0 until 16).combinations(rung - 10).toSeq
+    else (0 until 8).combinations(rung).toSeq
+
+  /** Band-combination keys for ladder rung r: one row per (vector, band
+    * subset), keyed by the subset's index `bp` and the signature words
+    * masked to its bands. A key matches ⇔ all k of its bands match, so
+    * joining on a rung's keys and deduping is set-identical to the
+    * declarative per-band join + HAVING count ≥ k (SrpLshSpec pins the
+    * rungs by set equality). A narrow rung keys on (bp, k0), the masked
+    * lo word; a wide rung adds k1, the masked hi word — the two masked
+    * longs ARE the combined key, so equality needs no hashing and has no
+    * collision question. Rungs 1 and 11 are the any-of-8 and any-of-16
+    * band relations. sig/sig2 ride along (24 B/row): the hamming
+    * pre-verify reads them INSIDE the candidate join, so enumerated
+    * pairs never pay a second join to fetch signatures.
+    */
+  private def srpRungKeys(sigs: DataFrame, rung: Int): DataFrame = {
+    def mask(bands: Seq[Int]): Long = bands.map(b => 255L << ((b % 8) * 8)).foldLeft(0L)(_ | _)
+    val keys = srpRungBands(rung).zipWithIndex.map { case (bs, p) =>
+      val (lo, hi) = bs.partition(_ < 8)
+      val words = col("sig").bitwiseAND(lit(mask(lo))).as("k0") +:
+        (if (rung >= 10) Seq(col("sig2").bitwiseAND(lit(mask(hi))).as("k1")) else Nil)
+      struct(lit(p).as("bp") +: words: _*)
+    }
+    sigs.select(col("vec_id"), col("sig"), col("sig2"), explode(array(keys: _*)).as("pk"))
+      .select(col("vec_id"), col("sig"), col("sig2"), col("pk.*"))
   }
 
-  /** Measured rung occupancy: (enumerated candidate rows, vectors).
-    * One cheap aggregate over the C(8,k)·n key rows — the same relation
-    * the rung's join would explode anyway.
+  /** A rung key relation's join key: every column but the vector's id
+    * and signature words — (bp, k0) narrow, (bp, k0, k1) wide.
     */
-  private[queries] def srpKeyEnumStats(keys: DataFrame, keysPerVec: Int): (Long, Long) = {
+  private def srpKeyCols(keys: DataFrame): Seq[String] =
+    keys.columns.toSeq.filterNot(Set("vec_id", "sig", "sig2"))
+
+  /** Measured rung occupancy: (enumerated candidate rows, vectors). The
+    * enumeration is Σ d·(d−1)/2 over the rung's key buckets, exactly the
+    * rows its self-join would enumerate — one cheap aggregate over the
+    * C·n key rows the rung's join would explode anyway.
+    */
+  private[queries] def srpRungOccupancy(sigs: DataFrame, rung: Int): (Long, Long) = {
+    val keys = srpRungKeys(sigs, rung)
     val r = keys
-      .groupBy(col("bp"), col("key")).agg(count(lit(1)).as("d"))
+      .groupBy(srpKeyCols(keys).map(col): _*).agg(count(lit(1)).as("d"))
       .agg(coalesce(sum(col("d") * (col("d") - 1)), lit(0L)).as("enum2"),
         coalesce(sum(col("d")), lit(0L)).as("rowsK"))
       .head()
-    (r.getLong(0) / 2, r.getLong(1) / keysPerVec)
+    (r.getLong(0) / 2, r.getLong(1) / srpRungBands(rung).size)
   }
-
-  /** WIDE-family rung-k combo keys over the 128-bit signature: the
-    * C(16,k) size-k subsets of the 16 8-bit bands (bands 0-7 = lo word,
-    * 8-15 = hi word), each as a (bp, k0, k1) masked-words key — the two
-    * masked longs ARE the combined key, so equality is exactly "all k
-    * bands match" with no hashing and no collision question. Rung W1
-    * (k = 1) is the any-of-16-bands relation.
-    */
-  private[queries] def srpComboKeysWide(sigs: DataFrame, k: Int): DataFrame = {
-    def mask(b: Int): Long = 255L << ((b % 8) * 8)
-    val combos = (0 until 16).combinations(k).toSeq
-    sigs
-      .select(col("vec_id"), col("sig"), col("sig2"),
-        explode(array(combos.zipWithIndex.map { case (bs, p) =>
-          val lo = bs.filter(_ < 8).map(mask).foldLeft(0L)(_ | _)
-          val hi = bs.filter(_ >= 8).map(mask).foldLeft(0L)(_ | _)
-          struct(lit(p).as("bp"),
-            col("sig").bitwiseAND(lit(lo)).as("k0"),
-            col("sig2").bitwiseAND(lit(hi)).as("k1"))
-        }: _*)).as("pk"))
-      .select(col("vec_id"), col("sig"), col("sig2"), col("pk.bp").as("bp"),
-        col("pk.k0").as("k0"), col("pk.k1").as("k1"))
-  }
-
-  /** Measured wide-rung occupancy — the (bp, k0, k1) spelling of
-    * [[srpKeyEnumStats]].
-    */
-  private[queries] def srpKeyEnumStatsWide(keys: DataFrame, keysPerVec: Int): (Long, Long) = {
-    val r = keys
-      .groupBy(col("bp"), col("k0"), col("k1")).agg(count(lit(1)).as("d"))
-      .agg(coalesce(sum(col("d") * (col("d") - 1)), lit(0L)).as("enum2"),
-        coalesce(sum(col("d")), lit(0L)).as("rowsK"))
-      .head()
-    (r.getLong(0) / 2, r.getLong(1) / keysPerVec)
-  }
-
-  /** The wide-rung candidate join — (bp, k0, k1) keys, same merge-hint
-    * discipline as [[srpCandidatesKeyed]] (Generate under-estimate).
-    */
-  private[queries] def srpCandidatesKeyedWide(keys: DataFrame): DataFrame =
-    keys.as("a").hint("merge")
-      .join(keys.as("b").hint("merge"),
-        col("a.bp") === col("b.bp") && col("a.k0") === col("b.k0")
-          && col("a.k1") === col("b.k1") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-
-  private[queries] def combosOf16(k: Int): Int = (0 until 16).combinations(k).size
 
   /** The selected ladder rung: the smallest k ∈ {1, …, 7} whose
     * measured enumeration fits [[srpEnumBudget]]·n; rung 8 (the full
@@ -430,9 +393,7 @@ object Similarity {
       budget: Long = srpEnumBudget): Int = {
     val ladder = Seq(11, 1, 12, 2, 13, 3, 4, 5, 6, 7)
     ladder.find { r =>
-      val (enumRows, n) =
-        if (r >= 10) srpKeyEnumStatsWide(srpComboKeysWide(sigs, r - 10), combosOf16(r - 10))
-        else srpKeyEnumStats(srpComboKeys(sigs, r), combosOf8(r))
+      val (enumRows, n) = srpRungOccupancy(sigs, r)
       val fits = enumRows <= budget * n
       // A rejected probe's shuffle files (n·C keys rows) are dead the
       // moment its aggregate returns, but Spark only deletes them when
@@ -455,40 +416,31 @@ object Similarity {
   private def hamming128(a: String, b: String) =
     expr(s"bit_count($a.sig ^ $b.sig) + bit_count($a.sig2 ^ $b.sig2)")
 
-  /** Hamming-gated candidates: the keyed self-join with the
-    * [[srpHammingMax]] pre-verify INSIDE the join, then distinct. Order
-    * matters at scale: the filter runs on streamed join output
-    * (24-byte rows, two popcounts), so the wide rungs' enumerated mass
-    * never reaches the distinct shuffle, and the exact-cosine verify
-    * downstream moves vectors only for the ~2% of random pairs that
-    * survive. [[srpCandidatesKeyed]]/[[srpCandidatesKeyedWide]] stay
-    * the PURE enumeration relations — the spec surface for the
-    * combo-key ≡ HAVING-count equivalences.
+  /** The rung-r candidate relation (r in [[srpSelectArm]]'s encoding)
+    * — what q53 (and q110, at its own ceiling) verifies exactly: the
+    * keyed self-join with the [[srpHammingMax]] pre-verify INSIDE the
+    * join, then distinct. Order matters at scale: the filter runs on
+    * streamed join output (24-byte rows, two popcounts), so the wide
+    * rungs' enumerated mass never reaches the distinct shuffle, and the
+    * exact-cosine verify downstream moves vectors only for the ~2% of
+    * random pairs that survive. At hmax = 128, which no pair of 64-bit
+    * words can exceed, it is the pure enumeration — the spec surface for
+    * the combo-key ≡ HAVING-count equivalences. merge hints on both
+    * sides: the key relations are explodes of the small cached signature
+    * relation, and Catalyst sizes Generate output at its CHILD's bytes —
+    * the under-estimate planned a multi-GiB BroadcastHashJoin at sf10
+    * (see q43's note).
     */
-  private[queries] def srpCandidatesHamming(keys: DataFrame, wide: Boolean,
+  private[queries] def srpCandidatesForRung(sigs: DataFrame, rung: Int,
       hmax: Int = srpHammingMax): DataFrame = {
-    val keyEq =
-      if (wide) col("a.bp") === col("b.bp") && col("a.k0") === col("b.k0") &&
-        col("a.k1") === col("b.k1")
-      else col("a.bp") === col("b.bp") && col("a.key") === col("b.key")
+    val keys = srpRungKeys(sigs, rung)
+    val keyEq = srpKeyCols(keys).map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
     keys.as("a").hint("merge")
       .join(keys.as("b").hint("merge"),
-        keyEq && col("a.vec_id") < col("b.vec_id")
-          && hamming128("a", "b") <= lit(hmax))
+        keyEq && col("a.vec_id") < col("b.vec_id") && hamming128("a", "b") <= lit(hmax))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
       .distinct()
   }
-
-  /** The rung-r candidate relation (r in [[srpSelectArm]]'s encoding),
-    * hamming-gated — what q53 (and q110, at its own ceiling) verifies
-    * exactly.
-    */
-  private[queries] def srpCandidatesForRung(sigs: DataFrame, rung: Int,
-      hmax: Int = srpHammingMax): DataFrame =
-    if (rung >= 10) srpCandidatesHamming(srpComboKeysWide(sigs, rung - 10), wide = true, hmax)
-    else srpCandidatesHamming(srpComboKeys(sigs, rung), wide = false, hmax)
-
-  private def combosOf8(k: Int): Int = (0 until 8).combinations(k).size
 
   /** LSH candidate pairs at the [[srpEnumBudget]]-selected operating
     * point. Rung 1 (recall-first: this corpus's near-dups sit at
@@ -725,21 +677,6 @@ object Similarity {
     srpCandidatesForRung(sigs, arm.intValue(), srpTightHammingMax)
   }
 
-  /** The rung-k candidate join: pairs sharing any combo key, deduped.
-    * merge hints on both sides: the key relations are explodes of the
-    * small cached signature relation, and Catalyst sizes Generate
-    * output at its CHILD's bytes — the under-estimate planned a
-    * multi-GiB BroadcastHashJoin at sf10 (see q43's note).
-    */
-  private[queries] def srpCandidatesKeyed(keys: DataFrame): DataFrame =
-    keys.as("a").hint("merge")
-      .join(keys.as("b").hint("merge"),
-        col("a.bp") === col("b.bp") && col("a.key") === col("b.key")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-
-
   /** The SRP-LSH oracle, parameterized over the operating point
     * (exact-cosine threshold, hamming ceiling, per-vector enumeration
     * budget): q53 instantiates (0.45, 55, 1024), q110 the
@@ -776,7 +713,7 @@ object Similarity {
           FROM sig, (SELECT unnest(${VS.srpWideBandKeysExpr("sig", "sig2")}) AS bk) u),
         ${(2 to 3).map(k => s"""wcombo$k AS (
           SELECT vec_id, u.ck.bp AS bp, u.ck.k0 AS k0, u.ck.k1 AS k1
-          FROM sig, (SELECT unnest(${VS.srpComboKeysWideExpr("sig", "sig2", k)}) AS ck) u)""")
+          FROM sig, (SELECT unnest(${VS.srpWideComboKeysExpr("sig", "sig2", k)}) AS ck) u)""")
           .mkString(",\n        ")},
         ${(2 to 7).map(k => s"""combo$k AS (
           SELECT vec_id, u.ck.bp AS bp, u.ck.key AS key
@@ -837,7 +774,7 @@ object Similarity {
     // set is collected to the driver (the IVF centroid set is always
     // driver-held — capped at 65536 × dim floats) and cell assignment
     // is ONE codegen'd map-side projection
-    // ([[org.apache.spark.sql.graft.NearestCells]]): the corpus embedding
+    // ([[NearestCellsTwoLevel]] at kc = 1): the corpus embedding
     // column never enters a shuffle. At scale the corpus can be written
     // bucketed-by-cell and each query reads ~1/n_cells of the data.
     // Recall < 1 by design — the oracle mirrors the same pipeline, so the
@@ -868,7 +805,7 @@ object Similarity {
       val idx = annIndex(spark, dir)
       val anchors = idx.anchors
       val cells = e.withColumn("cell",
-        element_at(NearestCells.column(col("embedding"), col("nrm"), anchors, 1), 1))
+        element_at(NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc = 1), 1))
       val q = cells.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
           col("nrm").as("qn"), col("cell").as("qcell"))
@@ -882,9 +819,9 @@ object Similarity {
     // ── IVF at the scaled operating point, nprobe = ⌈K/64⌉: the
     // recall/cost dial real IVF serving needs, now DERIVED from the
     // corpus alongside K (VERDICT r15 #2). Corpus vectors stay in their
-    // single nearest-anchor cell (the same map-side NearestCells
-    // projection as q51, k=1); each QUERY probes its p nearest cells
-    // (NearestCells k=p on the already-filtered tiny query batch) and
+    // single nearest-anchor cell (the same map-side kc = 1 projection
+    // as q51); each QUERY probes its p nearest cells (nf = p on the
+    // already-filtered tiny query batch) and
     // scores their union — ~p·n/K ≈ n/64 rows, the same scan budget as
     // the old fixed-64 single probe, spent at √n-finer quantizer
     // resolution. The oracle mirrors the whole pipeline (including the
@@ -921,11 +858,11 @@ object Similarity {
       val kk = idx.k
       val anchors = idx.anchors
       val cells = e.withColumn("cell",
-        element_at(NearestCells.column(col("embedding"), col("nrm"), anchors, 1), 1))
+        element_at(NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc = 1), 1))
       val probes = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"),
-          explode(NearestCells.column(col("embedding"), col("nrm"), anchors,
-            nprobeFor(kk))).as("qcell"))
+          explode(NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors,
+            kc = 1, nf = nprobeFor(kk))).as("qcell"))
       val scored = cells.join(broadcast(probes),
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
@@ -958,7 +895,7 @@ object Similarity {
     // so the routing tree AND the probe set are verified. One native
     // kernel, NearestCellsTwoLevel, serves both sides (assignment:
     // ac = 6, nf = 1; probe: ac = wc, nf = p) and keeps embeddings out
-    // of every exchange exactly like flat NearestCells. Recall at equal
+    // of every exchange exactly like the flat kc = 1 path. Recall at equal
     // scan budget vs the flat scaled path is measured at sf1/sf10 by
     // tools/ivf_scale_probe.py two_level (IVF_TWOLEVEL_r17.json).
     QueryDef(
@@ -1037,11 +974,11 @@ object Similarity {
       val p = nprobeFor(kk)
       val wc = ((2L * kcRaw + 4L) / 5L).toInt
       val cells = e.withColumn("cell", element_at(
-        org.apache.spark.sql.graft.NearestCellsTwoLevel.column(
+        NearestCellsTwoLevel.column(
           col("embedding"), col("nrm"), anchors, kc, ac = 6, route = Some(idx.route)), 1))
       val qc = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"),
-          explode(org.apache.spark.sql.graft.NearestCellsTwoLevel.column(
+          explode(NearestCellsTwoLevel.column(
             col("embedding"), col("nrm"), anchors, kc, ac = wc, route = Some(idx.route),
             nf = p)).as("qcell"))
       val scored = cells.join(broadcast(qc),
@@ -1129,13 +1066,13 @@ object Similarity {
       val p = nprobeFor(kk)
       val ph = math.max(1, p / 2)
       val cells = e.withColumn("cell", explode(
-        org.apache.spark.sql.graft.NearestCellsTwoLevel.column(
+        NearestCellsTwoLevel.column(
           col("embedding"), col("nrm"), anchors, kc, ac = 6, route = Some(idx.route),
           nf = 2)))
       val qc = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"),
-          explode(org.apache.spark.sql.graft.NearestCells.column(
-            col("embedding"), col("nrm"), anchors, ph)).as("qcell"))
+          explode(NearestCellsTwoLevel.column(
+            col("embedding"), col("nrm"), anchors, kc = 1, nf = ph)).as("qcell"))
       // Dedup on the scored narrow relation, not the vector-carrying
       // one: dup (q_id, neighbor) rows carry bit-identical cosines, so
       // the arbitrary keep is value-deterministic and embeddings never
@@ -1154,7 +1091,7 @@ object Similarity {
     // evaluation loop every ANN deployment runs before trusting a
     // pruned index, here as a first-class in-engine query rather than
     // an offline notebook. Both arms share the scan shapes proven by
-    // q50/q54 (broadcast query batch; map-side NearestCells cell
+    // q50/q54 (broadcast query batch; map-side kc = 1 cell
     // assignment; embeddings never shuffle) and the truth arm is linear
     // in the corpus — at scale this runs on a sampled query set, which
     // is exactly what the vec_id < 5 batch models. Ties beyond rank 5
@@ -1207,11 +1144,11 @@ object Similarity {
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
           (VF.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("c")))
       val cells = e.withColumn("cell",
-        element_at(NearestCells.column(col("embedding"), col("nrm"), anchors, 1), 1))
+        element_at(NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors, kc = 1), 1))
       val qc = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"),
-          explode(NearestCells.column(col("embedding"), col("nrm"), anchors,
-            nprobeFor(kk))).as("qcell"))
+          explode(NearestCellsTwoLevel.column(col("embedding"), col("nrm"), anchors,
+            kc = 1, nf = nprobeFor(kk))).as("qcell"))
       val approx = top5(cells.join(broadcast(qc),
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),

@@ -19,8 +19,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * String box + encoder round-trip per row while this stays inside
   * whole-stage codegen and hashes the UTF8String's bytes directly.
   *
-  * The filter rides in the expression (like [[NearestCells]]'s anchor
-  * matrix) and reaches generated code via `addReferenceObj`; it is
+  * The filter rides in the expression (like [[NearestCellsTwoLevel]]'s
+  * anchor matrices) and reaches generated code via `addReferenceObj`; it is
   * java-serializable, shipping once per task closure. Probing hashes the
   * value's UTF-8 bytes — the same bytes `DataFrameStatFunctions
   * .bloomFilter` hashed when it built the filter from a string column,

@@ -1,5 +1,7 @@
 // Hosted under org.apache.spark.sql.* because native Expression authoring
-// needs private[sql] extension points — see NearestCells.scala.
+// needs private[sql] extension points (AbstractDataType/TypeCollection and
+// the Column↔Expression bridge) — the conventional packaging for Spark
+// extension libraries shipping codegen expressions.
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
@@ -9,35 +11,42 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
-/** TWO-LEVEL IVF cell routing (the "beyond the flat-K cap" path named at
-  * [[graft.queries.Similarity]]'s anchorKFor): score a vector against
-  * the Kc coarse anchors, keep its `ac` nearest coarse cells, then rank
-  * the union of those cells' FINE anchors and return the best `nf` fine
-  * cell ids in rank order (shorter when the union holds fewer). Per-row
-  * cost is O((Kc + ac·K/Kc)·dim) instead of a flat O(K·dim) scan: at the
+/** IVF cell routing, map-side: score a vector against the Kc coarse
+  * anchors, keep its `ac` nearest coarse cells, then rank the union of
+  * those cells' FINE anchors and return the best `nf` fine cell ids in
+  * rank order (shorter when the union holds fewer). Per-row cost is
+  * O((Kc + ac·K/Kc)·dim) instead of a flat O(K·dim) scan: at the
   * 65536-anchor cap with ac = 1 that is 512 anchor dots per row instead
   * of 65536. This is the classical IVF coarse/fine decomposition (an
   * IMI/IVFADC-style routing tree of depth 2).
   *
-  * One kernel serves every two-level caller: corpus assignment (nf = 1,
-  * read with `element_at(…, 1)`), multi-assignment (nf > 1: a row that
-  * narrowly misassigns is still findable through its runner-up cell),
-  * and the query-side probe (ac = the probed coarse width, nf = the
-  * probed fine cells). Widening ac trades assignment cost for fewer
-  * hierarchical misassignments, which dominate the two-level recall
-  * loss (IVF_TWOLEVEL_r17.json).
+  * One kernel serves every IVF caller. With kc = 1 the one coarse cell
+  * holds every anchor, so level 2 ranks all K of them: the flat
+  * assignment (q51, q54, q49, the q111 probe, the ANN index and serving
+  * paths), one extra dot per row. With kc > 1: corpus assignment
+  * (nf = 1, read with `element_at(…, 1)`), multi-assignment (nf > 1: a
+  * row that narrowly misassigns is still findable through its runner-up
+  * cell), and the query-side probe (ac = the probed coarse width,
+  * nf = the probed fine cells). Widening ac trades assignment cost for
+  * fewer hierarchical misassignments, which dominate the two-level
+  * recall loss (IVF_TWOLEVEL_r17.json).
   *
   * Selection rule, both levels: score DESC, ties to the lower anchor id,
-  * a NaN score (zero-norm row: 0/0) ranks lowest and NaN ties also go to
-  * the lower id. That is the declarative `row_number() OVER (ORDER BY
-  * score DESC, id)` ranking whenever the scores are finite or all tie,
-  * so the two-window oracle computes bit-identical cells. Scores use the
-  * oracle's fold (double accumulation in array order, score =
-  * dot/(nrm·anrm)). The coarse set is the first Kc fine anchors by the
-  * same min-hash rank (a nested subset — no second anchor family to
-  * mirror), the fine→coarse routing table is computed once on the
-  * driver, and like [[NearestCells]] the anchor matrices ride in the
-  * expression, so the embedding column never enters an exchange.
+  * a NaN score (a zero-norm row or anchor: 0/0) ranks lowest and NaN
+  * ties also go to the lower id. That is the declarative `row_number()
+  * OVER (ORDER BY score DESC, id)` ranking (DuckDB's x/0 is NULL, and
+  * NULLs sort last), so the window oracles compute bit-identical cells.
+  * Scores use the oracle's fold (double accumulation in array order,
+  * score = dot/(nrm·anrm)). The coarse set is the first Kc fine anchors
+  * by the same min-hash rank (a nested subset — no second anchor family
+  * to mirror), and the fine→coarse routing table is computed once on
+  * the driver.
+  *
+  * The anchor matrices ride in the expression (driver-held, like any
+  * IVF/kmeans centroid set) and reach generated code via
+  * `addReferenceObj`, so the corpus embedding column never enters an
+  * exchange: a crossJoin(broadcast(anchors)) + window would shuffle
+  * corpus×K rows carrying the arrays just to take an argmax.
   *
   * The routing is HIERARCHICAL, not flat-best: a vector's nearest fine
   * anchor overall may live under a different coarse cell — the standard
@@ -196,8 +205,10 @@ object NearestCellsTwoLevel {
       while (i < n) { acc += v(i).toDouble * c._2(i).toDouble; i += 1 }
       acc / (vn * c._3)
     }
+    // One coarse cell owns every anchor: no routing dots to compute.
     val routed: Map[Long, Seq[(Long, Seq[Float], Double)]] =
-      anchorsByRank.groupBy { f =>
+      if (kc == 1) Map(coarse.head._1 -> anchorsByRank)
+      else anchorsByRank.groupBy { f =>
         // nearest coarse: score DESC, coarse id ASC (coarse is id-sorted,
         // strict > keeps the earlier id on ties)
         var bestId = coarse.head._1

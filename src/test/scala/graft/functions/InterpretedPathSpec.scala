@@ -45,8 +45,9 @@ class InterpretedPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       vecs.select(
         col("id"),
         VectorFunctions.dot(col("v"), col("v")).as("dot"),
-        org.apache.spark.sql.graft.NearestCells.column(
-          col("v"), sqrt(VectorFunctions.dot(col("v"), col("v"))), anchors, 2).as("cells"),
+        org.apache.spark.sql.graft.NearestCellsTwoLevel.column(
+          col("v"), sqrt(VectorFunctions.dot(col("v"), col("v"))), anchors, kc = 1, nf = 2)
+          .as("cells"),
         org.apache.spark.sql.graft.SrpSignature.column(col("v"), planes).as("sig"),
         org.apache.spark.sql.graft.SortedIntersectCount.column(
           array_sort(col("arr")), array_sort(col("arr"))).as("inter"),

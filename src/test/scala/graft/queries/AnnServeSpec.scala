@@ -163,8 +163,8 @@ class AnnServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idx.anchors.size == Similarity.anchorKFor(740))
     // Every persisted cell is the live assignment under the NEW anchors.
     val mismatch = store.segments()
-      .withColumn("live", element_at(org.apache.spark.sql.graft.NearestCells
-        .column(col("embedding"), col("nrm"), idx.anchors, 1), 1))
+      .withColumn("live", element_at(org.apache.spark.sql.graft.NearestCellsTwoLevel
+        .column(col("embedding"), col("nrm"), idx.anchors, kc = 1), 1))
       .filter(col("cell") =!= col("live")).count()
     assert(mismatch == 0, s"$mismatch segment rows carry stale cells after re-anchor")
     // Serving still brute-force-identical at full probe, and a RESTART
@@ -192,7 +192,7 @@ class AnnServeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a rebuilt session over a CHANGED base corpus cannot serve stale " +
       "segment cells: epoch drift reassigns at serve time and fires the " +
       "re-anchor inside the growth slack (VERDICT r18 #7)") {
-    import org.apache.spark.sql.graft.NearestCells
+    import org.apache.spark.sql.graft.NearestCellsTwoLevel
     val s = spark; import s.implicits._
     val dir2 = java.nio.file.Files.createTempDirectory("annserve-epoch").toString
     val state2 = java.nio.file.Files.createTempDirectory("annserve-epoch-state").toString
@@ -251,15 +251,15 @@ class AnnServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Non-vacuity: the PERSISTED cells really do disagree with the new
     // quantizer (without the epoch machinery these would be served as-is).
     val persistedStale = store2.segments()
-      .withColumn("live", element_at(NearestCells
-        .column(col("embedding"), col("nrm"), st.idx.anchors, 1), 1))
+      .withColumn("live", element_at(NearestCellsTwoLevel
+        .column(col("embedding"), col("nrm"), st.idx.anchors, kc = 1), 1))
       .filter(col("cell") =!= col("live")).count()
     assert(persistedStale > 0,
       "fixture failure: the base rewrite left every persisted cell valid")
     // The SERVED cells are all live assignments under the current anchors.
     val servedStale = store2.servedSegments(st.idx.anchors, st.epoch)
-      .withColumn("live", element_at(NearestCells
-        .column(col("embedding"), col("nrm"), st.idx.anchors, 1), 1))
+      .withColumn("live", element_at(NearestCellsTwoLevel
+        .column(col("embedding"), col("nrm"), st.idx.anchors, kc = 1), 1))
       .filter(col("cell") =!= col("live")).count()
     assert(servedStale == 0,
       s"$servedStale stale-epoch cells reached serving unreassigned")
@@ -280,8 +280,8 @@ class AnnServeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val st2 = store2.servingState()
     assert(st2.epoch.startsWith("fold:"))
     val postFoldStale = store2.segments()
-      .withColumn("live", element_at(NearestCells
-        .column(col("embedding"), col("nrm"), st2.idx.anchors, 1), 1))
+      .withColumn("live", element_at(NearestCellsTwoLevel
+        .column(col("embedding"), col("nrm"), st2.idx.anchors, kc = 1), 1))
       .filter(col("cell") =!= col("live")).count()
     assert(postFoldStale == 0, s"$postFoldStale stale cells survived the fold")
     val full2 = topIds(store2, full = true)

@@ -139,7 +139,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q51/q54/q49: no shuffle exchange carries the embedding column") {
-    // The IVF cell assignment must be a map-side NearestCells projection
+    // The IVF cell assignment must be a map-side NearestCellsTwoLevel projection
     // (anchors driver-held): the round-2 crossJoin(broadcast)+window shape
     // shuffled corpus×n_anchors rows with the arrays aboard. Only the
     // scored (q_id, neighbor_id, cos) triple may enter an exchange; the
@@ -165,8 +165,8 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
              || e.outputPartitioning.isInstanceOf[RangePartitioning])
         assert(!e.child.schema.fieldNames.exists(f => f == "embedding" || f.endsWith("v")),
           s"$q: keyed exchange carries vector column: ${e.child.schema.fieldNames.mkString(",")}")
-      assert(plan.toString.contains("nearestcells") || plan.toString.contains("NearestCells"),
-        s"$q: map-side NearestCells kernel present")
+      assert(plan.toString.contains("nearestcells_twolevel"),
+        s"$q: map-side NearestCellsTwoLevel kernel present")
     }
   }
 
@@ -208,9 +208,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val sigsD = Similarity.srpSignatures(spark, dir)
     for ((label, df) <- Seq(
         "q43 subset join" -> graft.SparkEntry.queries("q43_simhash")(spark, dir),
-        "q53 any-band arm" -> Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigsD, 1)),
-        "q53 pair-key arm" -> Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigsD, 2)),
-        "q53 triple-key arm" -> Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigsD, 3)))) {
+        "q53 wide any-band arm" -> Similarity.srpCandidatesForRung(sigsD, 11),
+        "q53 any-band arm" -> Similarity.srpCandidatesForRung(sigsD, 1),
+        "q53 pair-key arm" -> Similarity.srpCandidatesForRung(sigsD, 2),
+        "q53 triple-key arm" -> Similarity.srpCandidatesForRung(sigsD, 3))) {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("SortMergeJoin"), s"$label must sort-merge")
       assert(!p.contains("BroadcastHashJoin"), s"$label must never broadcast a banded side")
@@ -356,6 +357,11 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.window.WindowExec
+    // Earlier cases may have persisted the derivation under
+    // detectionsCached (no committed table yet in a fresh state root);
+    // the CacheManager would then substitute that cached scan into this
+    // plan. Plan the derivation itself.
+    graft.pipeline.SessionCache.release(spark, s"detections:$dir")
     val key = "spark.sql.files.maxPartitionBytes"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "16k")

@@ -66,10 +66,16 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
+  /** A rung's pure enumeration: the production candidate join at
+    * hmax = 128, which no pair of two 64-bit signature words exceeds.
+    */
+  private def enumerated(sigs: org.apache.spark.sql.DataFrame, rung: Int): Set[(Long, Long)] =
+    Similarity.srpCandidatesForRung(sigs, rung, hmax = 128)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("pair-key rung ≡ declarative '≥2 of 8 bands' on the gate corpus") {
     val sigs = Similarity.srpSignatures(spark, dir)
-    val viaPairKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, 2))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaPairKeys = enumerated(sigs, 2)
     val declarative = declarativeAtLeastKBands(sigs, 2)
     assert(declarative.nonEmpty, "the ≥2-band set must be non-trivial on this corpus")
     assert(viaPairKeys == declarative,
@@ -78,8 +84,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("triple-key rung ≡ declarative '≥3 of 8 bands' on the gate corpus") {
     val sigs = Similarity.srpSignatures(spark, dir)
-    val viaTripleKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, 3))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaTripleKeys = enumerated(sigs, 3)
     val declarative = declarativeAtLeastKBands(sigs, 3)
     assert(viaTripleKeys == declarative,
       s"triple-key rung diverged: only-triplekey=${viaTripleKeys -- declarative} only-declarative=${declarative -- viaTripleKeys}")
@@ -90,8 +95,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quad-key rung ≡ declarative '≥4 of 8 bands' on the gate corpus") {
     val sigs = Similarity.srpSignatures(spark, dir)
-    val viaQuadKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, 4))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaQuadKeys = enumerated(sigs, 4)
     val declarative = declarativeAtLeastKBands(sigs, 4)
     assert(viaQuadKeys == declarative,
       s"quad-key rung diverged: only-quadkey=${viaQuadKeys -- declarative} only-declarative=${declarative -- viaQuadKeys}")
@@ -106,8 +110,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
     // agreement) — the rungs the saturated decade-3.5 corpus lands on.
     val sigs = Similarity.srpSignatures(spark, dir)
     Seq(7, 8).foreach { k =>
-      val viaKeys = Similarity.srpCandidatesKeyed(Similarity.srpComboKeys(sigs, k))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val viaKeys = enumerated(sigs, k)
       val declarative = declarativeAtLeastKBands(sigs, k)
       assert(viaKeys == declarative,
         s"rung-$k diverged: only-keyed=${viaKeys -- declarative} only-declarative=${declarative -- viaKeys}")
@@ -139,8 +142,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("wide rungs ≡ declarative '≥k of 16 bands'; narrow rungs nest inside wide") {
     val sigs = Similarity.srpSignatures(spark, dir)
     Seq(1, 2, 3).foreach { k =>
-      val viaKeys = Similarity.srpCandidatesKeyedWide(Similarity.srpComboKeysWide(sigs, k))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val viaKeys = enumerated(sigs, 10 + k)
       val declarative = declarativeAtLeastKWide(sigs, k)
       assert(viaKeys == declarative,
         s"wide rung $k diverged: only-keyed=${viaKeys -- declarative} " +
@@ -172,20 +174,17 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (a1, a2) = sigById(a); val (b1, b2) = sigById(b)
       java.lang.Long.bitCount(a1 ^ b1) + java.lang.Long.bitCount(a2 ^ b2)
     }
-    Seq((1, true), (2, true), (1, false), (2, false)).foreach { case (k, wide) =>
-      val keys = if (wide) Similarity.srpComboKeysWide(sigs, k)
-        else Similarity.srpComboKeys(sigs, k)
-      val gated = Similarity.srpCandidatesHamming(keys, wide)
+    // Rungs W1, W2, N1, N2 in srpSelectArm's encoding.
+    Seq(11, 12, 1, 2).foreach { rung =>
+      val gated = Similarity.srpCandidatesForRung(sigs, rung)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val pure = (if (wide) Similarity.srpCandidatesKeyedWide(keys)
-        else Similarity.srpCandidatesKeyed(keys))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val pure = enumerated(sigs, rung)
       val expected = pure.filter { case (a, b) => hamming(a, b) <= Similarity.srpHammingMax }
       assert(gated == expected,
-        s"${if (wide) "wide" else "narrow"} rung $k hamming gate diverged: " +
+        s"rung $rung hamming gate diverged: " +
           s"leaked=${gated -- expected} overdropped=${expected -- gated}")
       assert(expected.size < pure.size || pure.isEmpty,
-        s"fixture too similar: the hamming gate filtered nothing at rung $k (pure=${pure.size})")
+        s"fixture too similar: the hamming gate filtered nothing at rung $rung (pure=${pure.size})")
     }
   }
 
@@ -193,7 +192,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Gate corpus: low occupancy ⇒ the recall-first WIDE any-band rung
     // (rung 11 in the encoding) — the budget headroom buys recall.
     val sigs = Similarity.srpSignatures(spark, dir)
-    val (enumRows, n) = Similarity.srpKeyEnumStats(Similarity.srpComboKeys(sigs, 1), 8)
+    val (enumRows, n) = Similarity.srpRungOccupancy(sigs, 1)
     info(s"sf0.01: enumRows=$enumRows n=$n perVector=${enumRows.toDouble / n}")
     assert(n > 0 && enumRows <= Similarity.srpEnumBudget * n,
       "gate corpus must stay on the any-band rung")
@@ -212,7 +211,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("vec_id"),
         graft.functions.VectorFunctions.srpSignature(col("embedding"), 64, 64).as("sig"),
         graft.functions.VectorFunctions.srpSignatureHi(col("embedding"), 64, 64).as("sig2"))
-    val (denseEnum, denseN) = Similarity.srpKeyEnumStats(Similarity.srpComboKeys(dense, 1), 8)
+    val (denseEnum, denseN) = Similarity.srpRungOccupancy(dense, 1)
     assert(denseN == 600 && denseEnum > Similarity.srpEnumBudget * denseN,
       s"concentrated corpus must leave rung 1: $denseEnum vs ${Similarity.srpEnumBudget * denseN}")
     assert(Similarity.srpSelectArm(dense) == 8,
@@ -220,7 +219,7 @@ class SrpLshSpec extends AnyFunSuite with BeforeAndAfterAll {
         "rung's budget, wide included — terminal rung")
     // Empty relation: defined decision (the recall-max wide rung fits
     // trivially), no div-by-zero.
-    val (e0, n0) = Similarity.srpKeyEnumStats(Similarity.srpComboKeys(dense.limit(0), 1), 8)
+    val (e0, n0) = Similarity.srpRungOccupancy(dense.limit(0), 1)
     assert(e0 == 0 && n0 == 0)
     assert(Similarity.srpSelectArm(dense.limit(0)) == 11)
   }

@@ -48,6 +48,26 @@ opts_for() {
   esac
 }
 
+# A CompileCommand naming a method that does not exist is a silent no-op,
+# and -XX:CompileCommand=quiet also drops the JVM's echo of each command,
+# so a renamed kernel would quietly turn the dontinline arm into the base
+# arm. Check every target against the compiled classes before any run
+# (exit 2 on a miss).
+CLASSES=target/scala-2.13/classes
+preflight() {
+  local opts t klass meth
+  opts=$(opts_for "$1") || exit 2
+  for t in $(printf '%s\n' $opts | sed -n 's/^-XX:CompileCommand=dontinline,//p'); do
+    klass=${t%%::*}; meth=${t##*::}
+    if ! javap -p -cp "$CLASSES" "$klass" 2>/dev/null | grep -q " $meth("; then
+      echo "arm $1: CompileCommand target $t not found under $CLASSES" \
+        "(renamed, or not compiled yet: run sbt compile)" >&2
+      exit 2
+    fi
+  done
+}
+for ARM in "${ARMS[@]}"; do preflight "$ARM"; done
+
 for ARM in "${ARMS[@]}"; do
   OPTS=$(opts_for "$ARM")
   for i in $(seq 1 "$RUNS"); do

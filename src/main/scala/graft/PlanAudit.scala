@@ -1,6 +1,6 @@
 package graft
 
-/** Committed plan-shape artifact (VERDICT r14 #6): for EVERY registry
+/** Committed plan-shape artifact: for EVERY registry
   * query, the physical-plan properties a scale review reads first —
   * shuffle exchanges, broadcasts, whole-stage-codegen spans, sorts, and
   * the join strategies — emitted as one JSON file (`PLANS_r{N}.json`).
@@ -21,6 +21,11 @@ package graft
   * AQE starts from. Plans are BUILT, not executed: the only jobs are
   * the driver-tiny constructions some queries do (anchor collects,
   * input-table ensures) at sf0.001.
+  *
+  *   runMain graft.PlanAudit [out.json] [sfDir] [plansDir]
+  *
+  * With `plansDir`, each query's formatted plan (the same build the
+  * shape counts) is written to `plansDir/<query>.txt`.
   */
 object PlanAudit {
 
@@ -51,31 +56,38 @@ object PlanAudit {
     * across JVMs and query order: AQE off (restored after), the
     * Registry's input tables committed but not seeded (their presence
     * changes a scan from inline-derivation to table read — the
-    * production shape Bench measures), and this dir's SessionCache entries dropped first so
-    * every query plans against cold caches rather than whatever a
-    * previous query happened to build. Safe to call from specs sharing
-    * a session.
+    * production shape Bench measures), and this dir's SessionCache
+    * entries dropped first so every query plans against cold caches
+    * rather than whatever a previous query happened to build. With
+    * `plansDir`, the same build's formatted plan goes to
+    * `plansDir/<name>.txt`. Safe to call from specs sharing a session.
     */
   def shapeOf(spark: org.apache.spark.sql.SparkSession, name: String,
-      dir: String): Map[String, Int] = {
+      dir: String, plansDir: Option[String] = None): Map[String, Int] = {
     graft.queries.Registry.prepare(spark, dir, graft.queries.Registry.inputTables, seed = false)
     val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     graft.pipeline.SessionCache.liveKeys(spark)
       .filter(_.endsWith(s":$dir"))
       .foreach(k => graft.pipeline.SessionCache.release(spark, k))
-    try shape(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
-    finally spark.conf.set("spark.sql.adaptive.enabled", prior)
+    try {
+      val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+      plansDir.foreach(d => java.nio.file.Files.writeString(java.nio.file.Paths.get(d, s"$name.txt"),
+        qe.explainString(org.apache.spark.sql.execution.FormattedMode)))
+      shape(qe.executedPlan.toString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
   }
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.json")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
+    val plansDir = args.lift(2)
+    plansDir.foreach(new java.io.File(_).mkdirs())
     val spark = Sessions.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val entries = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val body =
-        try shapeOf(spark, name, dir)
+        try shapeOf(spark, name, dir, plansDir)
           .toSeq.sortBy(_._1).map { case (k, v) => s"${Jsons.quote(k)}:$v" }
           .mkString("{", ",", "}")
         catch { case scala.util.control.NonFatal(e) =>

@@ -29,16 +29,6 @@ object RunDag {
     val refresh = !flags.contains("--no-refresh")
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Publish this JVM's pid FIRST (the chaos.sh lesson: pattern-matching
-    // process lists kills the sbt LAUNCHER, not the app) — tools/
-    // dag_chaos.sh SIGKILLs exactly this process mid-materialize to
-    // prove cross-process crash-resume of the commit-marker protocol.
-    if (dagName != "inputs") {
-      new java.io.File(workDir).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(workDir, "rundag.pid"),
-        ProcessHandle.current().pid().toString)
-    }
     if (dagName == "inputs") {
       // ensure() is always an incremental tick (fingerprint-gated reuse);
       // staleness here is structural, so --no-refresh has nothing to add.
@@ -49,20 +39,21 @@ object RunDag {
         val p = t.ensure(spark, sfDir)
         println(f"${t.tableName}%-16s ${(System.nanoTime() - t0) / 1000000}%6d ms  $p")
       }
-      spark.stop()
     } else {
+      // Publish this JVM's pid FIRST (the chaos.sh lesson: pattern-matching
+      // process lists kills the sbt LAUNCHER, not the app) — tools/
+      // dag_chaos.sh SIGKILLs exactly this process mid-materialize to
+      // prove cross-process crash-resume of the commit-marker protocol.
+      new java.io.File(workDir).mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(workDir, "rundag.pid"),
+        ProcessHandle.current().pid().toString)
       val stages = dagName match {
         case "curation" => graft.queries.CurationDag.stages(sfDir)
         case _ => graft.pipeline.Dag.streetLevelDag(sfDir)
       }
-      // Jobs the materialization launches. Listener events arrive
-      // asynchronously; spark.stop() delivers every queued one, so the
-      // count is read after it.
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-      })
+      // Jobs the materialization launches: the tally starts here.
+      val tally = JobTally.of(spark)
       val t0 = System.nanoTime()
       val runs = graft.pipeline.Dag.materialize(spark, stages, workDir, refresh)
       val totalMs = (System.nanoTime() - t0) / 1000000
@@ -71,9 +62,9 @@ object RunDag {
           .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
       runs.foreach(r => println(
         f"${r.name}%-16s rows=${r.rows}%8d  ${r.millis}%6d ms${if (r.skipped) "  (reused)" else ""}"))
-      spark.stop()
-      println(f"${"total"}%-16s jobs=${jobs.get}%8d  $totalMs%6d ms")
+      println(f"${"total"}%-16s jobs=${tally.total().jobs}%8d  $totalMs%6d ms")
     }
+    spark.stop()
   }
 
   /** Where a DAG's stage tables go when no workDir is given. */

@@ -6,9 +6,11 @@ import org.apache.spark.sql.SparkSession
   * the config that affects correctness and local performance.
   */
 object Sessions {
+  /** `spark.sql.codegen.cache.maxEntries`; Bench refuses to run without it. */
+  private[graft] val CodegenCacheEntries = "4096"
+
   def builder(cpus: String): SparkSession.Builder = {
-    // Master override (r13 multi-JVM rehearsal, VERDICT r12 next-round
-    // #1): `SPARK_GRAFT_MASTER=local-cluster[W,C,MB]` forks a real
+    // Master override: `SPARK_GRAFT_MASTER=local-cluster[W,C,MB]` forks a real
     // standalone Worker per W and real executor JVMs, so task/broadcast
     // serialization of the native expressions, executor-side
     // classloading, closure transport of the UDF kernels, and netty
@@ -66,7 +68,7 @@ object Sessions {
       // STATIC conf: CodeGenerator sizes its cache once per JVM, so the
       // first session in the JVM wins and a later builder's value is
       // silently ignored.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       // Cached blocks that overflow the storage pool hit local disk
       // UNCOMPRESSED by default; the corpus-sized shared caches
       // (tokenArrays, shingleSets, srpsig) overflow by design one decade
@@ -92,9 +94,9 @@ object Sessions {
       val b2 = b.config("spark.executor.extraClassPath", classes)
         .config("spark.executor.memory",
           sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", s"${workerMb}m"))
-      // Executor-JVM flag pass-through (r16 JIT slow-mode A/B,
-      // VERDICT r15 #1): the worker-forked executor JVMs are where the
-      // bimodal kernel mode lives, so the rehearsal arms need to vary
+      // Executor-JVM flag pass-through for the JIT A/B: the
+      // worker-forked executor JVMs are where the bimodal kernel mode
+      // lives, so the rehearsal arms need to vary
       // THEIR flags (code-cache, tiered-compilation, JFR), not the
       // driver's. Unset = byte-identical config to before.
       sys.env.get("SPARK_GRAFT_EXECUTOR_OPTS")

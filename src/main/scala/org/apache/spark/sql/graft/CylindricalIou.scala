@@ -6,17 +6,11 @@ import org.apache.spark.sql.types._
 
 /** Scalar kernel for the seam-aware cylindrical IoU (SURVEY.md §2 M11/U1;
   * heritage-guard/heritage_guard/entities/bbox.py:16-109), shared by the
-  * interpreted and generated code paths. Mirrors graft.geo.BBox.iou
-  * bitwise (same op order, same python-modulo convention).
+  * interpreted and generated code paths. Built from graft.geo.BBox's
+  * helpers in BBox.iou's op order, so the two agree bitwise.
   */
 object IouKernel {
-  private def pymod(a: Double, m: Double): Double = {
-    val r = a % m
-    if (r != 0 && (r < 0) != (m < 0)) r + m else r
-  }
-
-  private def overlap(min1: Double, max1: Double, min2: Double, max2: Double): Double =
-    math.max(0.0, math.min(max1, max2) - math.max(min1, min2))
+  import graft.geo.BBox.{overlap, pmod, thetaOverlapNormalized}
 
   def compute(
       ax1: Double, ay1: Double, ax2: Double, ay2: Double,
@@ -27,22 +21,13 @@ object IouKernel {
     val aMin = if (aSwap) ax2 else ax1; val aMax = if (aSwap) ax1 else ax2
     val bSwap = (bx2 - bx1) > w * 0.95
     val bMin = if (bSwap) bx2 else bx1; val bMax = if (bSwap) bx1 else bx2
-    val atMin = pymod(aMin / w * 360.0, 360.0); val atMax = pymod(aMax / w * 360.0, 360.0)
-    val btMin = pymod(bMin / w * 360.0, 360.0); val btMax = pymod(bMax / w * 360.0, 360.0)
-    val aArea = pymod(aMax - aMin, w) * (ay2 - ay1)
-    val bArea = pymod(bMax - bMin, w) * (by2 - by1)
+    val aArea = pmod(aMax - aMin, w) * (ay2 - ay1)
+    val bArea = pmod(bMax - bMin, w) * (by2 - by1)
     // θ overlap with wraparound (bbox.py:72-96).
-    val crosses1 = atMax < atMin
-    val crosses2 = btMax < btMin
-    val thetaOv =
-      if (!crosses1 && !crosses2) overlap(atMin, atMax, btMin, btMax)
-      else {
-        val adj1 = if (crosses1) atMax + 360.0 else atMax
-        val adj2 = if (crosses2) btMax + 360.0 else btMax
-        math.min(overlap(atMin, adj1, btMin, adj2), 360.0)
-      }
-    val yOv = overlap(ay1, ay2, by1, by2)
-    val inter = thetaOv * yOv
+    val thetaOv = thetaOverlapNormalized(
+      pmod(aMin / w * 360.0, 360.0), pmod(aMax / w * 360.0, 360.0),
+      pmod(bMin / w * 360.0, 360.0), pmod(bMax / w * 360.0, 360.0))
+    val inter = thetaOv * overlap(ay1, ay2, by1, by2)
     val union = aArea + bArea - inter
     if (union == 0.0) 0.0 else inter / union
   }

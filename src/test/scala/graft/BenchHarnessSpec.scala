@@ -4,11 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** VERDICT r5 "what's wrong" #2: a throwing query used to record its
-  * time-to-failure and read as a FAST PASS in the bench tail. The sweep
-  * now carries per-query errors into the JSON line; this spec plants a
-  * failing query next to a passing one and asserts the failure is
-  * visibly reported, not swallowed.
+/** The bench harness's artifact contracts: a throwing query is reported,
+  * never read as a fast pass; the contract line fits the driver's stdout
+  * tail; per-query job tallies attribute to the query that ran them and
+  * never reach the contract line.
   */
 class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -54,11 +53,30 @@ class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!json.contains("\"skipped\""), "driver line must be unchanged when nothing is skipped")
   }
 
+  test("per-query tallies attribute to the query that ran them") {
+    val planted: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "zz_tally_plain" -> ((s: SparkSession, _: String) => s.range(10).selectExpr("id * 2 AS twice")),
+      "zz_tally_eager" -> ((s: SparkSession, _: String) => {
+        s.sparkContext.parallelize(1 to 10).count()
+        s.range(10).selectExpr("id * 2 AS twice")
+      }))
+    val runs = Bench.runSweep(spark, "/root/testdata/sf0.001", planted)
+    val byName = runs.map(r => r.name -> r).toMap
+    val (plain, eager) = (byName("zz_tally_plain").jobs, byName("zz_tally_eager").jobs)
+    assert(plain.jobs > 0 && plain.stages > 0 && plain.tasks > 0, plain)
+    assert(eager.jobs - plain.jobs == 1, s"plain $plain, eager $eager")
+    val line = Bench.renderJson(runs, "/x", sweeps = 1)
+    assert(line == Bench.renderJson(runs.map(_.copy(jobs = JobTally.Counts())), "/x", sweeps = 1))
+    assert(Bench.renderDetailJson(runs, "/x")
+      .contains(s""""zz_tally_plain":{"jobs":${plain.jobs},"stages":${plain.stages},"""))
+    // run_meta records the codegen cache size the session really runs with.
+    assert(Bench.renderRunMetaJson(spark, 1).contains(""""codegen_cache_max_entries":"4096""""))
+  }
+
   test("the contract line fits the driver's 2000-char stdout tail with every registry query") {
-    // ADVICE r9 #1: the driver stores only the LAST 2000 chars of bench
-    // stdout; rounds 1-9 printed a ~3.5 KB full-name line whose start
-    // fell off that tail, so `parsed` was null in EVERY round artifact.
-    // Worst-case render: every query at a 4-digit-seconds time, plus a
+    // The driver stores only the LAST 2000 chars of bench stdout; a
+    // ~3.5 KB full-name line loses its start off that tail and parses as
+    // null. Worst-case render: every query at a 4-digit-seconds time, plus a
     // large sweep_stats payload — the whole line must leave room for the
     // ~100-char sbt "[success]" epilogue inside 2000.
     val names = graft.queries.Registry.all.map(_.name)
@@ -71,12 +89,11 @@ class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(line.startsWith("""{"metric":"""), line.take(40))
     assert(!line.contains("\n"))
     assert(line.length <= 1850, s"contract line ${line.length} chars overflows the tail budget")
-    // VERDICT r14 #1: the canary must live ON the driver-kept contract
-    // line, not only in run_meta (which falls off the 2000-char tail).
+    // The canary must live ON the driver-kept contract line, not only
+    // in run_meta (which falls off the 2000-char tail).
     assert(line.contains(""","cal":8888.88"""), line.takeRight(200))
-    // VERDICT r16 #1: host context (loadavg/mem) rides the contract line
-    // next to cal and is never degraded away — r16's artifact had cal but
-    // no run_meta because that line fell off the driver's stdout tail.
+    // Host context (loadavg/mem) rides the contract line next to cal and
+    // is never degraded away, for the same reason.
     assert(line.contains(""","loadavg_1m":8888.88,"mem_available_mb":999999"""),
       line.takeRight(200))
     // Short keys must be unique over the registry or the render silently
@@ -96,7 +113,7 @@ class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Bench.fmt(12.3999, 3) == "12.4")
     assert(Bench.fmt(1e-9, 3) == "0" && !Bench.fmt(1e-9, 3).contains("E"))
     // Non-finite timings render as the -1 sentinel instead of crashing
-    // the contract line (ADVICE r10).
+    // the contract line.
     assert(Bench.fmt(Double.NaN, 3) == "-1")
     assert(Bench.fmt(Double.PositiveInfinity, 3) == "-1")
     // The detail line leads with a non-"metric" key so a tail scanner
@@ -116,8 +133,8 @@ class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a failure round cannot regrow the contract line past the tail budget") {
-    // The review finding on the r10 line fix: error entries are largest
-    // exactly when the artifact matters most (a failing round). Plant
+    // Error entries are largest exactly when the artifact matters most
+    // (a failing run). Plant
     // the worst case — every registry query failed with a long message
     // at 4-digit seconds — and require the budget to hold via the
     // degradation cascade, with the failure count still visible.
@@ -144,13 +161,13 @@ class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cache builds attribute to the paying query; zero bills leave the line unchanged") {
-    // VERDICT r11 #7: cache_build_ms separates one-time SessionCache
-    // construction from kernel time in the artifact.
+    // cache_build_ms separates one-time SessionCache construction from
+    // kernel time in the artifact.
     val runs = Seq(Bench.QueryRun("zz_a", 1.0, None, 1234L), Bench.QueryRun("zz_b", 2.0, None))
     val line = Bench.renderJson(runs, "/x", 1, Some((1L, 2L, 3L)))
     assert(line.contains(""""cache_build_ms_total":1234"""), line)
     assert(line.contains(""""cache_build_ms":{"zz_a":1234}"""), line)
-    // Zero builds: byte-identical to the pre-r12 sweep_stats shape.
+    // Zero builds: no cache_build fields at all.
     val zero = Bench.renderJson(runs.map(_.copy(cacheBuildMs = 0L)), "/x", 1, Some((1L, 2L, 3L)))
     assert(!zero.contains("cache_build_ms"), zero)
     // The merge pairs the CHOSEN run's own build bill with its time —

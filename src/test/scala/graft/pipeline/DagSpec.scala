@@ -143,21 +143,13 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dag.Stage("b", Seq("a"), (_, up) => up("a").selectExpr("id * 2 AS id")))
     val first = Dag.materialize(spark, stages, dir)
     assert(first.map(_.rows) == Seq(5L, 5L))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val tick = Dag.materialize(spark, stages, dir, refresh = false)
-      assert(tick.forall(_.skipped) && tick.map(_.rows) == Seq(5L, 5L))
-      // Listener events post asynchronously — settle before asserting.
-      val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-      while (jobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(jobs.get() == 0,
-        s"a reused tick must not launch jobs (row counts come from parquet footers), saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val tally = graft.JobTally.of(spark)
+    val before = tally.total().jobs
+    val tick = Dag.materialize(spark, stages, dir, refresh = false)
+    assert(tick.forall(_.skipped) && tick.map(_.rows) == Seq(5L, 5L))
+    val jobs = tally.total().jobs - before
+    assert(jobs == 0,
+      s"a reused tick must not launch jobs (row counts come from parquet footers), saw $jobs")
     graft.Fs.rmTree(new java.io.File(dir))
   }
 
@@ -260,7 +252,7 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import graft.quality.DataQuality
     val dir = java.nio.file.Files.createTempDirectory("dag-dq").toString
-    // The fail-closed contract (VERDICT r13 #7): the gate judges the
+    // The fail-closed contract: the gate judges the
     // written candidate; pass=false aborts BEFORE the commit swap.
     val gate: Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] = Seq(
       DataQuality.run(_, Seq(DataQuality.NotNull("v"))),
@@ -297,8 +289,8 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!new java.io.File(dir).listFiles().exists(_.getName.contains(".tmp-")),
       "quarantined batch must not leave tmp residue")
 
-    // The rejected batch is PARKED for triage, not destroyed (VERDICT
-    // r14 #7): `_quarantine/<stage>-<pid>-<nanos>` holds the exact
+    // The rejected batch is PARKED for triage, not destroyed:
+    // `_quarantine/<stage>-<pid>-<nanos>` holds the exact
     // bytes the gate judged — readable, with the violations intact.
     val qdirs = Option(new java.io.File(dir, "_quarantine").listFiles())
       .getOrElse(Array.empty).filter(_.getName.startsWith("manifest-"))
@@ -329,7 +321,7 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("quality gates judge partition-column values as built, not as directory-name inference") {
     import org.apache.spark.sql.functions._
     import graft.quality.DataQuality
-    // ADVICE r14 #3: a partitioned stage's candidate reads back through
+    // A partitioned stage's candidate reads back through
     // partition-directory inference, so a numeric-looking STRING value
     // ("01") re-infers as an integer (1) and an AcceptedValues gate on
     // it judges values the build never produced. The gate read must see
@@ -354,7 +346,7 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("incremental stages: a day-2 tick builds ONLY the new partition, zero jobs over day-1") {
     import org.apache.spark.sql.functions._
-    // VERDICT r14 #1 — the Dagster-partitioned-assets shape: an
+    // The Dagster-partitioned-assets shape: an
     // append-only corpus, a daily tick, and proof that day-1 work never
     // re-runs. Day 1 is 20× day 2 so a single accidental day-1 scan is
     // unmissable in the task input metrics.
@@ -422,19 +414,12 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // Tick 3, nothing new: pure skip, ZERO jobs (fingerprints are file
     // stats; row counts come from parquet footers).
-    val jobs3 = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l3 = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs3.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l3)
-    try {
-      val third = tick()
-      assert(third.forall(_.skipped) && third.map(_.rows) == Seq(210L, 14L))
-      val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-      while (jobs3.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(jobs3.get() == 0, s"an all-fresh incremental tick launched ${jobs3.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(l3)
+    val tally = graft.JobTally.of(spark)
+    val before3 = tally.total().jobs
+    val third = tick()
+    assert(third.forall(_.skipped) && third.map(_.rows) == Seq(210L, 14L))
+    val jobs3 = tally.total().jobs - before3
+    assert(jobs3 == 0, s"an all-fresh incremental tick launched $jobs3 jobs")
 
     // The incrementally-grown table equals a from-scratch build.
     def snapshot(path: String) = spark.read.parquet(path)
@@ -551,7 +536,7 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("incremental delta whose tokens do not round-trip degrades to a full rebuild, never loses the delta") {
     import org.apache.spark.sql.functions._
-    // ADVICE r15 #1: an external input written with ds=01 (string token)
+    // An external input written with ds=01 (string token)
     // is re-typed by partition-dir inference on read (Spark 4 probes:
     // '01' → int 1), so the delta build writes ds=1 while the stale
     // stamp key is 01 — a token-keyed swap would move nothing, delete
@@ -594,8 +579,8 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quarantine retention: a sixth rejection evicts exactly the oldest entry") {
     import org.apache.spark.sql.functions._
-    // VERDICT r15 #7: _quarantine/ keeps QuarantineKeep (5) most recent
-    // rejected batches; nothing pinned the eviction until now.
+    // _quarantine/ keeps the QuarantineKeep (5) most recent rejected
+    // batches.
     val dir = java.nio.file.Files.createTempDirectory("dag-quar").toString
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val poisoned = Seq(Dag.Stage("bad", Nil,
@@ -836,8 +821,8 @@ class DagSpec extends AnyFunSuite with BeforeAndAfterAll {
     // PRE-DIGEST layout dirs — "<lossy-sanitized>_<fp>" with NO digest
     // segment — are unreachable by any current reader and must be swept
     // by their corpus's lossy prefix even though the digest-carrying
-    // prefix can never match them (r11 review: the digest change had
-    // silently orphaned them).
+    // prefix can never match them (a digest change once silently
+    // orphaned them).
     val lossyPrefix = prefix.substring(0, {
       val d = prefix.stripSuffix("_"); d.lastIndexOf('_') + 1
     })

@@ -7,14 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property guard for the pair sweep q81 and q88/q89/q94 read
   * (`Domain.sweepCombinedKernel`: y-sorted sweep, exact y-overlap prune,
-  * plain-pair θ-interval precondition) and for a banded equi-join
-  * formulation (y-band bucketing with canonical-band dedupe): on
-  * ADVERSARIAL boxes — exact band boundaries, zero-width touching
-  * intervals, seam wraps (x2 < x1), >95%-span giants, boxes spanning
-  * multiple bands — each must return exactly the pair set of the naive
-  * all-pairs formulation, and the sweep's partner marking exactly the
-  * endpoints of the naive positive-IoU pairs. The real-data oracle can't
-  * probe these edges densely; this generator does.
+  * plain-pair θ-interval precondition): on ADVERSARIAL boxes — 512-
+  * multiple y edges, zero-width touching intervals, seam wraps
+  * (x2 < x1), >95%-span giants, tall boxes — it must return exactly the
+  * pair set of the naive all-pairs formulation, and its partner marking
+  * exactly the endpoints of the naive positive-IoU pairs. The real-data
+  * oracle can't probe these edges densely; this generator does.
   */
 class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -78,25 +76,6 @@ class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("a_idx", "b_idx").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
-  /** The banded equi-join enumeration (band join + the same prunes). */
-  private def refinedPairs(threshold: Double): Set[(Long, Long)] = {
-    val bandOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      y => floor(y / 512.0).cast("long")
-    val (a0, b0) = sides(df)
-    val a = a0.withColumn("band", explode(sequence(bandOf(col("ay1")), bandOf(col("ay2")))))
-    val b = b0.withColumn("band_b", explode(sequence(bandOf(col("by1")), bandOf(col("by2")))))
-    val seamSpan = lit(W * 0.95)
-    val plainA = col("ax2") >= col("ax1") && (col("ax2") - col("ax1")) <= seamSpan
-    val plainB = col("bx2") >= col("bx1") && (col("bx2") - col("bx1")) <= seamSpan
-    a.join(b, col("file_name") === col("fn_b") && col("band") === col("band_b")
-        && col("band") === bandOf(greatest(col("ay1"), col("by1")))
-        && col("a_idx") < col("b_idx")
-        && col("ay1") < col("by2") && col("by1") < col("ay2")
-        && (!plainA || !plainB || (col("ax1") < col("bx2") && col("bx1") < col("ax2"))))
-      .withColumn("iou", iouCol).filter(col("iou") >= threshold)
-      .select("a_idx", "b_idx").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-  }
-
   /** The production pair sweep; `kind` 0 rows are its pairs at `threshold`,
     * `kind` 1 rows its partner marks.
     */
@@ -134,25 +113,6 @@ class PairEnumerationPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = sweep(0.02, 1)
       .select("a_idx").collect().map(_.getLong(0)).toSet
     assert(got == want, s"missing: ${want -- got}; spurious: ${got -- want}")
-  }
-
-  test("refined enumeration ≡ naive all-pairs on adversarial boxes (t = 0.02)") {
-    val naive = refinedVsNaive(0.02)
-    assert(naive._1 == naive._2, s"missing: ${naive._1 -- naive._2}; spurious: ${naive._2 -- naive._1}")
-  }
-
-  test("refined enumeration ≡ naive all-pairs at the iou > 0 slice threshold") {
-    // DomainOracles.isolated uses strictly-positive IoU — the tightest
-    // setting for the preconditions (any pruned positive-IoU pair would
-    // corrupt the isolated slice).
-    val naive = refinedVsNaive(java.lang.Double.MIN_VALUE)
-    assert(naive._1 == naive._2, s"missing: ${naive._1 -- naive._2}; spurious: ${naive._2 -- naive._1}")
-  }
-
-  private def refinedVsNaive(t: Double): (Set[(Long, Long)], Set[(Long, Long)]) = {
-    val n = naivePairs(t); val r = refinedPairs(t)
-    info(s"t=$t: naive=${n.size} refined=${r.size}")
-    (n, r)
   }
 
   test("the generator actually covers the edge classes") {

@@ -13,6 +13,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private val dir = "/root/testdata/sf0.001"
+  // The checkout the suite runs from (sbt forks tests in the project
+  // base directory): its committed artifacts and fixtures, not another's.
+  private val repoRoot = new java.io.File(sys.props("user.dir"))
   // Synthetic.detections at sf0.001: row count and the sum of per-row
   // xxhash64 over all 8 columns, recorded before the rank-first rewrite.
   private val DetectionsRows = 6000L
@@ -140,7 +143,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q51/q54/q49: no shuffle exchange carries the embedding column") {
     // The IVF cell assignment must be a map-side NearestCellsTwoLevel projection
-    // (anchors driver-held): the round-2 crossJoin(broadcast)+window shape
+    // (anchors driver-held): the old crossJoin(broadcast)+window shape
     // shuffled corpus×n_anchors rows with the arrays aboard. Only the
     // scored (q_id, neighbor_id, cos) triple may enter an exchange; the
     // tiny broadcast build side is exempt (it IS the query batch).
@@ -159,7 +162,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       // Tables reader's split-parallelism repartition) is exempt: at
       // scale the scan has real splits and it disappears. What must never
       // happen is a KEYED exchange (hash/range) moving the arrays — the
-      // round-2 crossJoin+window shape.
+      // old crossJoin+window shape.
       import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
       for (e <- shuffled if e.outputPartitioning.isInstanceOf[HashPartitioning]
              || e.outputPartitioning.isInstanceOf[RangePartitioning])
@@ -285,7 +288,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = planOf("q64_interval_join")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
     assert(p.contains("user_id"))
-    // The hour bucket rides the JOIN KEY (r14 skew rehearsal: without
+    // The hour bucket rides the JOIN KEY (skew rehearsal: without
     // it one hot user's per-key work is quadratic in its row count —
     // ~10^10 pair evals in one task at skewed sf10).
     assert(p.contains("l_bk"), "bucket column must be part of the equi key")
@@ -327,7 +330,7 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // The doc-frequency relation's cardinality is the corpus VOCABULARY —
     // unbounded in corpus size — so a broadcast() hint there would force
     // a driver OOM at 100 TB where an unhinted join degrades gracefully
-    // (VERDICT r11 #2; same class as the Generate-broadcast bug). Only
+    // (same class as the Generate-broadcast bug). Only
     // the 1-row n_docs cross join may carry a hint.
     import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
     def forcedBroadcastEquiJoins(df: DataFrame): Seq[Join] =
@@ -392,14 +395,14 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("binaryFile projection without content prunes the bytes") {
     val df = graft.sources.DetectionReaders
-      .binaryImages(spark, "/root/repo/src/test/resources/fixtures")
+      .binaryImages(spark, new java.io.File(repoRoot, "src/test/resources/fixtures").getPath)
       .select("path", "length")
     val leaves = df.queryExecution.executedPlan.collectLeaves()
     assert(leaves.forall(!_.schema.fieldNames.contains("content")))
   }
 
   test("committed plan-shape artifact matches freshly computed shapes (no silent drift)") {
-    // VERDICT r14 #6: PLANS_r{N}.json commits every query's physical
+    // PLANS_r{N}.json commits every query's physical
     // shape (exchanges, broadcasts, codegen spans, sorts, join kinds) as
     // a diffable artifact. This case recomputes the shapes of the
     // scale-guarded queries and fails when the committed artifact
@@ -408,7 +411,6 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // longer exist. The full-registry sweep lives in `runMain
     // graft.PlanAudit <out.json>`; regenerate the artifact when a plan
     // change is INTENTIONAL.
-    val repoRoot = new java.io.File("/root/repo")
     val artifacts = Option(repoRoot.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.matches("PLANS_r\\d+\\.json")).sortBy(_.getName)
     assert(artifacts.nonEmpty, "no committed PLANS_r*.json artifact found")

@@ -53,14 +53,19 @@ object Verify {
       .map { case (k, v) => s"${Jsons.quote(k)}: ${Jsons.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_exclusions.json"), excl)
     // Toleranced value oracles for the float-excluded queries: check.py
-    // races each against the dumped parquet under the declared atol.
+    // races each against the dumped parquet under the declared atol. The
+    // SQL names the materialized tables it reads by a `{state_root}`
+    // placeholder, which check.py replaces with the `state_root` field:
+    // the oracles read the same across runs with different state roots.
     val eps = SparkEntry.epsOracles(sfDir).toSeq.sortBy(_._1)
       .map { case (k, (sql, atol, note)) =>
         val at = atol.toSeq.sortBy(_._1)
           .map { case (c, v) => s"${Jsons.quote(c)}: $v" }.mkString("{", ",", "}")
-        s"""${Jsons.quote(k)}: {"sql": ${Jsons.quote(sql)}, "atol": $at, "note": ${Jsons.quote(note)}}"""
+        val body = Jsons.quote(sql.replace(Fs.stateRoot, "{state_root}"))
+        s"""${Jsons.quote(k)}: {"sql": $body, "atol": $at, "note": ${Jsons.quote(note)}}"""
       }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/eps_oracle_sql.json"), eps)
+    Files.writeString(Paths.get(s"$outDir/eps_oracle_sql.json"),
+      s"""{"oracles": $eps, "state_root": ${Jsons.quote(Fs.stateRoot)}}""")
     spark.stop()
   }
 }

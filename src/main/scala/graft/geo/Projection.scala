@@ -135,33 +135,27 @@ object Projection {
   def lonLatToXY(lon: Double, lat: Double, imgWidth: Double, imgHeight: Double): (Double, Double) =
     ((lon / (2 * math.Pi) + 0.5) * (imgWidth - 1), (lat / math.Pi + 0.5) * (imgHeight - 1))
 
-  /** Perspective-view bbox → 360-image bbox: project the 4 corners through
-    * K⁻¹ then the view rotation, to lon/lat, to pixels, truncate to int
-    * (numpy astype int32 truncates toward zero), take min/max. Port of
-    * `GetBboxInverse` (Equirec2Perspec.py:93-119, SURVEY §2 M9/U3).
+  /** Perspective-view bbox → 360-image bbox: the min/max of its 4 corners
+    * mapped by [[polygonTo360]]. Port of `GetBboxInverse`
+    * (Equirec2Perspec.py:93-119, SURVEY §2 M9/U3).
     */
   def bboxTo360(
       fovDeg: Double, thetaDeg: Double, phiDeg: Double,
       viewHeight: Double, viewWidth: Double,
       bbox: (Double, Double, Double, Double),
       imgWidth: Double, imgHeight: Double): (Int, Int, Int, Int) = {
-    val (_, kInv) = calibMatrix(viewWidth, viewHeight, fovDeg)
-    val r = viewRotation(thetaDeg, phiDeg)
     val corners = Seq(
       (bbox._1, bbox._2), (bbox._3, bbox._2), (bbox._1, bbox._4), (bbox._3, bbox._4))
-    val projected = corners.map { case (px, py) =>
-      val cam = Mat3.apply(kInv, (px, py, 1.0))
-      val (wx, wy, wz) = Mat3.apply(r, cam)
-      val (lon, lat) = xyzToLonLat(wx, wy, wz)
-      val (ix, iy) = lonLatToXY(lon, lat, imgWidth, imgHeight)
-      (ix.toInt, iy.toInt)
-    }
+    val projected = polygonTo360(fovDeg, thetaDeg, phiDeg, viewHeight, viewWidth, corners,
+      imgWidth, imgHeight)
     (projected.map(_._1).min, projected.map(_._2).min,
       projected.map(_._1).max, projected.map(_._2).max)
   }
 
-  /** Polygon vertices in a perspective view → vertices on the 360 image —
-    * the coordinate-mapping core of `GetPolygonInverse`
+  /** Polygon vertices in a perspective view → vertices on the 360 image:
+    * each through K⁻¹ then the view rotation, to lon/lat, to pixels,
+    * truncated to int (numpy astype int32 truncates toward zero) — the
+    * coordinate-mapping core of `GetPolygonInverse`
     * (Equirec2Perspec.py:128-140, SURVEY §2 M14; the upstream RLE/contour
     * extraction is [[Rle]]).
     */

@@ -26,8 +26,6 @@ final class TriMesh private (
     childR: Array[Int],
     triIdx: Array[Int]) extends Serializable {
 
-  def numTris: Int = tris.length / 9
-
   /** First (nearest-t) intersection of ray origin+t·dir, t > eps.
     * @return Some((px, py, pz, t)) or None.
     */
@@ -232,13 +230,5 @@ object TriMesh {
       // vn/vt/vp/g/o/s/usemtl/mtllib/# — no geometry, skipped.
     }
     tris.toArray
-  }
-
-  /** Load + build in one step (driver-side, like the reference's
-    * `pv.read`; the built mesh then broadcasts as usual).
-    */
-  def fromObjFile(path: String): TriMesh = {
-    val src = scala.io.Source.fromFile(path)
-    try build(fromObj(src.getLines())) finally src.close()
   }
 }

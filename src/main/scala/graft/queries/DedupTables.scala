@@ -34,7 +34,7 @@ object ShinglesTable extends InputTable(
     SessionCache.releaseAll(s"shingleSets:$sfDir")
   override def seedSessionCaches(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Unit =
-    { Dedup.shingleSets(spark, sfDir).count(); () }
+    { Dedup.shingleSets(spark, sfDir); () }
 }
 
 /** Near-dup cluster labels (doc_id, cluster_id) as an input table; see
@@ -57,8 +57,8 @@ object DedupClustersTable extends InputTable(
   // jacPairs must be seeded explicitly to reach the same state.
   override def seedSessionCaches(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Unit = {
-    Dedup.jacPairs(spark, sfDir).count()
-    Dedup.dedupClustersRel(spark, sfDir).count()
+    Dedup.jacPairs(spark, sfDir)
+    Dedup.dedupClustersRel(spark, sfDir)
     ()
   }
 }

@@ -159,7 +159,9 @@ object Similarity {
         // (which handles n = 0 consistently with the empty-corpus
         // hardening elsewhere) instead of throwing on rows.head.
         case Some(p) =>
-          val rows = spark.read.parquet(p).collect().sortBy(_.getAs[Int]("hrnk"))
+          // Through the Tables memo: a plain spark.read.parquet re-infers
+          // the schema in a job of its own on every rebuild.
+          val rows = graft.sources.Tables.atPath(spark, p).collect().sortBy(_.getAs[Int]("hrnk"))
           if (rows.isEmpty) annIndexDerived(spark, dir)
           else {
             // .toIndexedSeq: Row.getSeq returns a MUTABLE ArraySeq at

@@ -20,6 +20,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    array_sort'ed string arrays (null elements terminate the walk).
   *  - vector_avg(arr) → array<double>: element-wise mean aggregate
   *    ([[VectorAvg]], one map-side-combined pass).
+  *
+  * Query-stage preparation rule (AQE): [[SmallSortInOneTask]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -60,5 +62,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 1, "vector_avg(arr)")
         VectorAvg(children.head)
       }))
+
+    ext.injectQueryStagePrepRule(_ => SmallSortInOneTask)
   }
 }

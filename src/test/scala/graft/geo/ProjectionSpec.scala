@@ -41,6 +41,22 @@ class ProjectionSpec extends AnyFunSuite {
     }
   }
 
+  test("polygonTo360 maps a rectangle's corners onto the golden 360 bbox (±1 px truncation)") {
+    Golden.load("bbox360_cases").foreach { c =>
+      val b = c.darr("bbox")
+      val got = Projection.polygonTo360(
+        c.d("fov"), c.d("theta"), c.d("phi"), c.d("vh"), c.d("vw"),
+        Seq((b(0), b(1)), (b(2), b(1)), (b(2), b(3)), (b(0), b(3))), c.d("img_w"), c.d("img_h"))
+      assert(got.size == 4)
+      val (xs, ys) = got.unzip
+      val gotSeq = Seq(xs.min, ys.min, xs.max, ys.max)
+      val want = c.darr("result").map(_.toInt)
+      gotSeq.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g - w) <= 1, s"got $gotSeq want $want in $c")
+      }
+    }
+  }
+
   test("Rodrigues of zero vector is identity; of axis-aligned angles matches closed form") {
     assert(Mat3.rodrigues(0, 0, 0).sameElements(Mat3.identity))
     val r = Mat3.rodrigues(0, math.Pi / 2, 0) // 90° about y

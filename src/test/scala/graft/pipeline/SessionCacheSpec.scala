@@ -36,6 +36,23 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again.storageLevel.useMemory || again.storageLevel.useDisk)
   }
 
+  test("a build of a plan with no exchange fills its cache in exactly one job") {
+    val key = s"onejob:${System.nanoTime()}"
+    val tally = graft.JobTally.of(spark)
+    spark.sparkContext.setJobGroup(key, key, interruptOnCancel = false)
+    val df = try SessionCache.getOrPersist(spark, key) {
+      spark.range(0, 1000, 1, 3).selectExpr("id", "id * 2 AS twice").toDF()
+    } finally spark.sparkContext.clearJobGroup()
+    assert(tally.snapshot().get(key).map(_.jobs).contains(1))
+    // The one job loaded every batch: reads come from the cache.
+    val cached = df.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }
+    assert(cached.exists(_.cacheBuilder.isCachedColumnBuffersLoaded))
+    assert(df.count() == 1000)
+    SessionCache.release(spark, key)
+  }
+
   test("distinct keys build independently") {
     val a = SessionCache.getOrPersist(spark, s"a:${System.nanoTime()}")(spark.range(3).toDF())
     val b = SessionCache.getOrPersist(spark, s"b:${System.nanoTime()}")(spark.range(5).toDF())

@@ -404,8 +404,8 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("committed plan-shape artifact matches freshly computed shapes (no silent drift)") {
     // PLANS_r{N}.json commits every query's physical
     // shape (exchanges, broadcasts, codegen spans, sorts, join kinds) as
-    // a diffable artifact. This case recomputes the shapes of the
-    // scale-guarded queries and fails when the committed artifact
+    // a diffable artifact. This case recomputes the shape of every
+    // query it lists and fails when the committed artifact
     // drifted from the code — either direction: a plan regression the
     // artifact hides, or a stale artifact describing plans that no
     // longer exist. The full-registry sweep lives in `runMain
@@ -424,13 +424,11 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
       "\"(\\w+)\":(\\d+)".r.findAllMatchIn(m.group(1))
         .map(g => g.group(1) -> g.group(2).toInt).toMap
     }
-    // The queries whose plan shape IS their scale contract (each has a
-    // structural guard above; this pins the committed numbers too).
-    val guarded = Seq("q64_interval_join", "q81_iou_pairs", "q01_pricing_summary",
-      "q05_broadcast_join", "q41_ngram_jaccard", "q78_mix_sample",
-      "q100_budget_select", "q108_late_watermark", "q49_ann_recall", "q50_knn_brute",
-      "q51_ivf_knn", "q54_ivf_nprobe", "q109_ivf_twolevel", "q111_ivf_cap_directprobe")
-    val drift = guarded.flatMap { q =>
+    // Every query the artifact lists, so no committed shape goes stale.
+    val listed = "\"(q\\w+)\":\\{".r.findAllMatchIn(json).map(_.group(1)).toSeq
+    assert(listed.toSet == graft.SparkEntry.queries.keySet,
+      s"${artifacts.last.getName} must list every registry query")
+    val drift = listed.flatMap { q =>
       val fresh = graft.PlanAudit.shapeOf(spark, q, dir)
       val committed = shapeIn(q)
       if (fresh == committed) None else Some(s"$q: committed=$committed fresh=$fresh")

@@ -30,6 +30,17 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def load_eps(path: str) -> dict:
+    """Verify's eps oracles, name -> spec, with each SQL's `{state_root}`
+    placeholder replaced by the file's `state_root` (the dir the
+    materialized tables the oracles read live under); {} without a file."""
+    if not os.path.exists(path):
+        return {}
+    doc = json.load(open(path))
+    return {name: dict(spec, sql=spec["sql"].replace("{state_root}", doc["state_root"]))
+            for name, spec in doc["oracles"].items()}
+
+
 def main(sf_dir: str, out_dir: str, skip: set = frozenset()) -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -121,7 +132,7 @@ def main(sf_dir: str, out_dir: str, skip: set = frozenset()) -> int:
     # (columns absent from atol compare exactly). An eps failure is a
     # real failure: the oracle is declared machinery, not advisory.
     eps_path = f"{out_dir}/eps_oracle_sql.json"
-    eps_oracles = json.load(open(eps_path)) if os.path.exists(eps_path) else {}
+    eps_oracles = load_eps(eps_path)
     import numpy as np
 
     def canon_eps(df, atol):

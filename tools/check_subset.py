@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """check.py variant: compare only the named queries."""
 import json, sys, os
-sys.path.insert(0, '/root/repo/tools')
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb, pandas as pd
+from check import load_eps
 
 TABLES = ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]
 
@@ -21,7 +22,7 @@ for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 eps_path = f"{out_dir}/eps_oracle_sql.json"
-eps_oracles = json.load(open(eps_path)) if os.path.exists(eps_path) else {}
+eps_oracles = load_eps(eps_path)
 fails = 0
 for name in names:
     if name not in oracle:
